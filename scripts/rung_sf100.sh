@@ -59,7 +59,8 @@ case "$STEP" in
     # on disk — codec is part of the instrument and the record's PERF.md
     # row says so. SUITE_ONLY skips the auto-isolate/materializing passes
     # (they re-run ~80 of the heaviest plans — hours at sf100); the JSON
-    # self-declares "suite_only":true. Unset CODEC/SUITE_ONLY to override.
+    # self-declares "suite_only":true. Pass CODEC=lz4 / SUITE_ONLY=0 to
+    # override.
     SPARK_GRAFT_SKIP_KEYS=qllm_srp_lsh \
       SPARK_GRAFT_SUITE_ONLY=${SUITE_ONLY:-1} \
       $JAVA_BASE -Xmx16g -XX:G1HeapRegionSize=32m \

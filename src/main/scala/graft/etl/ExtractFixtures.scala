@@ -20,7 +20,7 @@ import java.nio.file.{Files, Path, Paths}
   * Write-once per (JVM, sfDir): a marker file skips re-writing when an
   * earlier build (this process or a previous one) already produced the
   * fixture — repeated query builds in tests/bench must not race a reader
-  * against an overwrite. The tmp layout is versioned (`_v3`) so a future
+  * against an overwrite. The tmp layout is versioned (`_v4`) so a future
   * change to fixture CONTENT must bump the version rather than silently
   * reuse stale files, and the directory tag fingerprints the SOURCE
   * parquet files (see [[pathTag]]) so the driver regenerating testdata
@@ -73,7 +73,7 @@ object ExtractFixtures {
 
   private def root(sfDir: String): Path =
     Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_extract_v3_${pathTag(sfDir)}")
+      s"graft_extract_v4_${pathTag(sfDir)}")
 
   private def ensure(dir: Path)(write: => Unit): String = {
     ready.computeIfAbsent(dir.toString, { _ =>
@@ -88,28 +88,40 @@ object ExtractFixtures {
 
   /** Staged co-purchase edge table (src < dst, distinct) — the analytics
     * layout a production graph pipeline materializes ONCE and every graph
-    * query reads, instead of five queries each re-running the
-    * lineitem → per-order set → pair-explode derivation (~2 s apiece at
-    * sf0.1; the real thing at 100 TB re-reads the whole fact table).
-    * Written partitioned by `src` hash so downstream keyed shuffles read
-    * a balanced layout; at cluster scale this would be a bucketed table
-    * (the qjoin_bucketed path) so per-iteration joins skip the shuffle
-    * entirely. Derivation mirrors GraphOps.edges' documented shape. */
+    * query reads, instead of five queries each re-deriving the pairs from
+    * the fact table. Written partitioned by `src` hash so downstream keyed
+    * shuffles read a balanced layout; at cluster scale this would be a
+    * bucketed table (the qjoin_bucketed path) so per-iteration joins skip
+    * the shuffle entirely.
+    *
+    * Derivation: the oracle's own self-join of (order, part) on order with
+    * `a.pk < b.pk` — equality never matches a NULL order key and the
+    * comparison drops NULL parts — then one `src`-keyed shuffle that the
+    * `distinct` reuses (hash(src) clusters every (src, dst) key), so the
+    * dedup runs inside the output partitions. Both join sides are the same
+    * exchange, which Spark reuses: lineitem's two columns shuffle once.
+    * Plain relational operators run as compiled, pipelined code; the
+    * per-order `collect_set` this replaced was object-state aggregation
+    * that fell back to sort-based aggregation and set the staging heap
+    * peak (PERF.md, "copurchase self-join").
+    *
+    * SHUFFLE_HASH is pinned: both sides are the fact table, so the default
+    * planner would broadcast it at small scale (the whole relation held on
+    * the driver heap) and pick a sort-merge join at large scale, which
+    * measured a higher heap peak than the hash join. A task's hash table
+    * holds the two key columns of one reduce partition, which
+    * [[graft.tools.StageExtract]] sizes from input bytes. */
   def copurchaseEdges(spark: SparkSession, sfDir: String): String = {
     val dir = root(sfDir).resolve("copurchase_edges")
     ensure(dir) {
-      import org.apache.spark.sql.functions._
-      Tables.lineitem(spark, sfDir)
+      val lp = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .groupBy(col("ok"))
-        .agg(collect_set(col("pk")).as("ps"))
-        .select(explode(expr(
-          "flatten(transform(ps, x -> " +
-            "transform(filter(ps, y -> y > x), y -> struct(x AS src, y AS dst))))"))
-          .as("p"))
-        .select(col("p.src").as("src"), col("p.dst").as("dst"))
-        .distinct()
+      lp.as("a")
+        .join(lp.as("b").hint("shuffle_hash"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
         .repartition(col("src"))
+        .distinct()
         .write.mode("overwrite").parquet(dir.toString)
     }
   }
@@ -320,17 +332,17 @@ object ExtractFixtures {
     * exchange and no sort. Derived from the staged canonical edges;
     * write-once per (JVM, sfDir) like every fixture here. */
   def copurchaseAdjacency(spark: SparkSession, sfDir: String): String = {
-    val edges = spark.read.schema("src BIGINT, dst BIGINT")
-      .parquet(copurchaseEdges(spark, sfDir))
+    val edgesDir = copurchaseEdges(spark, sfDir)
+    val edges = spark.read.schema("src BIGINT, dst BIGINT").parquet(edgesDir)
     val doubled = edges.unionAll(
       edges.select(col("dst").as("src"), col("src").as("dst")))
-    // the row count only runs when the fixture is actually (re)written —
-    // a parquet metadata count on the staged edges, doubled
+    // sized only when the fixture is actually (re)written, from the staged
+    // edges' footers, doubled
     ensureBucketed(spark, sfDir, s"graft_adj_bkt_${pathTag(sfDir)}",
       "copurchase_adj", doubled,
       org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, dst BIGINT"),
       "src", AdjBuckets, Seq("src", "dst"),
-      dynamicBuckets = Some(() => adjBucketsFor(2L * edges.count())))
+      dynamicBuckets = Some(() => adjBucketsFor(2L * TableStats.rows(edgesDir))))
   }
 
   /** orders and lineitem written SORTED-BUCKETED by orderkey
@@ -351,9 +363,10 @@ object ExtractFixtures {
     // one shared count → one shared bucket count: orders and lineitem MUST
     // agree or the co-located join grows an exchange. Sized from lineitem
     // (the wide side — its per-bucket sort is the binding write cost); the
-    // parquet metadata count only runs when the fixture is actually
-    // (re)written, never on marker re-attach.
-    val shared = () => factBucketsFor(Tables.lineitem(spark, sfDir).count())
+    // footer count is read at most once, and only when a fixture is
+    // actually (re)written, never on marker re-attach.
+    lazy val lineitemRows = TableStats.rows(Tables.path(sfDir, "lineitem"))
+    val shared = () => factBucketsFor(lineitemRows)
     (ensureBucketed(spark, sfDir, s"graft_orders_bkt_$tag", "orders_bucketed",
        Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey",
        dynamicBuckets = Some(shared)),

@@ -136,10 +136,14 @@ object Tables {
       m
     }
 
+  /** Location of table `name` under `sfDir`: one parquet file or a
+    * directory of part files. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     sessionMemo(spark).getOrElseUpdate(
       (sfDir, name),
-      spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet"))
+      spark.read.schema(schemas(name)).parquet(path(sfDir, name)))
 
   /** Registers `name` as a temp view (unique per sfDir) and returns the
     * view name, for queries expressed as SQL text. `events` goes through

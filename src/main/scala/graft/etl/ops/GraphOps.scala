@@ -15,15 +15,16 @@ import org.apache.spark.sql.types.DoubleType
   * onto the fixture star schema.
   *
   * Scale:
-  *   - Edge derivation: ONE keyed shuffle builds the per-order part set
-  *     (`collect_set` dedups (order, part) and partially aggregates
-  *     map-side; set size is bounded by lines-per-order, ≤ 7 in the TPC-H
-  *     shape — a size cap on the set, the `jaccardCandidates` df-cap
-  *     pattern, bounds it under skew), then all `src < dst` pairs are
-  *     generated MAP-SIDE with array `transform`/`filter` and one more
-  *     shuffle dedups the global pair set. Two shuffles total vs the four
-  *     (distinct + re-partitioned self-join + distinct) of the naive
-  *     pair join — and nothing but keys ever crosses the wire.
+  *   - Edge derivation: the oracle's pair self-join on order key
+  *     (`a.pk < b.pk`), planned as a shuffled hash join whose two sides
+  *     reuse one exchange, then one `src`-keyed shuffle that the global
+  *     `distinct` reuses; only keys cross the wire.
+  *     Fan-out per order is bounded by lines-per-order (≤ 7 in the TPC-H
+  *     shape, ≤ 21 pairs). Plain relational operators compile and
+  *     pipeline where the per-order `collect_set` + array-explode form it
+  *     replaced ran as object-state aggregation: at GenData sf0.1 the
+  *     join form spends ~40% less task time and shuffle write and sets an
+  *     18% lower staging heap peak (PERF.md, "copurchase self-join").
   *   - Degree / PageRank iterate keyed shuffles of (node, long) pairs only;
   *     the direction-doubled adjacency IS a sorted-bucketed-by-`src` table
   *     ([[graft.etl.ExtractFixtures.copurchaseAdjacency]]) so every
@@ -46,10 +47,9 @@ object GraphOps {
     * STAGED edge table ([[graft.etl.ExtractFixtures.copurchaseEdges]],
     * written once per (JVM, sfDir)): the five graph queries share one
     * materialization instead of each re-deriving the pair pipeline from
-    * the fact table. The derivation itself (collect_set per order → map-
-    * side pair explode → one distinct) is two shuffles; see the staging
-    * writer for the layout rationale. Equivalent to the oracle's DISTINCT
-    * self-join by construction — same pair set, same orientation. */
+    * the fact table. The derivation IS the oracle's DISTINCT self-join
+    * (`edgesCte`) — same pair set, same orientation, same NULL handling;
+    * see the staging writer for the join strategy and layout. */
   private def edges(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
     val dir = graft.etl.ExtractFixtures.copurchaseEdges(spark, sfDir)
     spark.read.schema("src BIGINT, dst BIGINT").parquet(dir)
@@ -403,7 +403,8 @@ object GraphOps {
         .agg(count_distinct(col("src")).as("n_nodes"),
           (count(lit(1)) / 2).cast("bigint").as("n_edges"))
         .select(lit(0).as("round"), col("n_nodes"), col("n_edges")))
-      for (r <- 1 to 3) {
+      val rounds = 3
+      for (r <- 1 to rounds) {
         // one node-scale degree frame per round over the PRE-peel frame:
         // round 1 rides the bucketed adjacency (count-per-src IS the
         // degree, bucket-local — the round-11 shape); later rounds
@@ -435,9 +436,9 @@ object GraphOps {
         // write + re-read of the whole round-3 frame to serve one pass);
         // rounds with a next peel keep it (the next round's degree
         // aggregate AND its two keep broadcasts re-read the frame).
-        ecur = if (r < 3) ckptEdges(peeled) else peeled
+        ecur = if (r < rounds) ckptEdges(peeled) else peeled
       }
-      census += summaryOfDeg(degreeOf(ecur), 3)
+      census += summaryOfDeg(degreeOf(ecur), rounds)
       census.reduce(_ unionAll _).orderBy(col("round"))
     },
     oracle = Some {

@@ -24,10 +24,10 @@ import graft.etl.ExtractFixtures
   * never see a difference).
   */
 object StageExtract {
-  /** Staging shuffles (the pair-distinct inside copurchase edges, the
-    * groupBy(orderkey) collect_set feeding it) carry data that grows with
-    * the rung, so a partition count pinned to the thread count is the
-    * exact fixed-partition defect the sf60 probe convicted twice — and it
+  /** Staging shuffles (the orderkey self-join inside copurchase edges and
+    * the src-keyed distinct after it) carry data that grows with the
+    * rung, so a partition count pinned to the thread count is the exact
+    * fixed-partition defect the sf60 probe convicted twice — and it
     * reproduced here: the first sf100 staging attempt died in the
     * adjacency shuffle with UNABLE_TO_ACQUIRE_MEMORY at 32 partitions.
     * Size reduce partitions from the fixture's on-disk bytes instead
@@ -42,6 +42,17 @@ object StageExtract {
       else f.length()
     val fixtureBytes = bytes(new java.io.File(sfDir))
     math.max(cpus, math.min(1024, (fixtureBytes / (64L << 20)).toInt)).toInt
+  }
+
+  /** The heap's old-generation pools (G1 Old Gen, PS Old Gen, Tenured Gen).
+    * Each step resets their peak before it starts and reads it before the
+    * post-step GC, so the log names the step that sets the heap a rung
+    * needs. */
+  private lazy val oldGen = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
+      .filter(p => p.getType == java.lang.management.MemoryType.HEAP &&
+        (p.getName.contains("Old") || p.getName.contains("Tenured")))
   }
 
   def main(args: Array[String]): Unit = {
@@ -105,8 +116,10 @@ object StageExtract {
       "media" -> (() => ExtractFixtures.mediaBmp(spark, sfDir)),
       "orc" -> (() => ExtractFixtures.supplierOrc(spark, sfDir)))
     steps.filter(s => only.isEmpty || only(s._1)).foreach { case (n, f) =>
+      oldGen.foreach(_.resetPeakUsage())
       val t0 = System.nanoTime()
       f()
+      val oldPeak = oldGen.map(_.getPeakUsage.getUsed).sum
       // Shuffle files from a finished step are deleted by the weak-ref
       // ContextCleaner, which never runs in a big-heap JVM that never
       // GCs — measured: 33 GB of DEAD shuffle files from completed
@@ -117,6 +130,7 @@ object StageExtract {
       // set on this session covers the two-shuffle steps internally.
       System.gc()
       println(f"[stage] $n done in ${(System.nanoTime() - t0) / 1e9}%.1f s, " +
+        f"old-gen peak=${oldPeak / 1e6}%.0f MB, " +
         f"free=${new java.io.File("/tmp").getUsableSpace / 1e9}%.1f GB")
     }
     spark.stop()
