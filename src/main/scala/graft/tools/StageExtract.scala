@@ -48,7 +48,7 @@ object StageExtract {
     * Each step resets their peak before it starts and reads it before the
     * post-step GC, so the log names the step that sets the heap a rung
     * needs. */
-  private lazy val oldGen = {
+  private val oldGen = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.toSeq
       .filter(p => p.getType == java.lang.management.MemoryType.HEAP &&
