@@ -105,17 +105,26 @@ object ExtractFixtures {
     * that fell back to sort-based aggregation and set the staging heap
     * peak (PERF.md, "copurchase self-join").
     *
-    * SHUFFLE_HASH is pinned: both sides are the fact table, so the default
-    * planner would broadcast it at small scale (the whole relation held on
-    * the driver heap) and pick a sort-merge join at large scale, which
-    * measured a higher heap peak than the hash join. A task's hash table
-    * holds the two key columns of one reduce partition, which
-    * [[graft.tools.StageExtract]] sizes from input bytes. */
+    * SHUFFLE_HASH is pinned because at GenData sf0.1 the default planner
+    * broadcasts the 600 k-row fact side, and the relation then stays on
+    * the driver heap; a forced sort-merge join there measured a higher
+    * heap peak than the hash join. That comparison was made at sf0.1 only.
+    * A hash build cannot spill, so the build rows per task are bounded
+    * from lineitem's footer row count the round-13 way (qdate_busday in
+    * [[graft.etl.ops.ScalarOps]]): when [[hashBuildRowsPerTask]] needs
+    * more partitions than the session default, `lp` is key-repartitioned
+    * to that count first. Both join sides reuse that one exchange, so it
+    * replaces the join's own shuffle instead of adding one, and plans at
+    * or below the default density are unchanged. */
   def copurchaseEdges(spark: SparkSession, sfDir: String): String = {
     val dir = root(sfDir).resolve("copurchase_edges")
     ensure(dir) {
-      val lp = Tables.lineitem(spark, sfDir)
+      val pairs = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      val defParts = spark.sessionState.conf.numShufflePartitions
+      val buildRows = TableStats.rows(spark, Tables.path(sfDir, "lineitem"))
+      val nparts = math.min(4096L, buildRows / hashBuildRowsPerTask(spark) + 1).toInt
+      val lp = if (nparts > defParts) pairs.repartition(nparts, col("ok")) else pairs
       lp.as("a")
         .join(lp.as("b").hint("shuffle_hash"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
@@ -124,6 +133,21 @@ object ExtractFixtures {
         .distinct()
         .write.mode("overwrite").parquet(dir.toString)
     }
+  }
+
+  /** Build rows one task of a shuffled hash join on two longs can hold:
+    * the unified memory region ((heap − 300 MB reserved) ×
+    * `spark.memory.fraction`) of this local-mode JVM, split over its
+    * concurrent tasks, at 200 B a row. A (long, long) build costs about
+    * 100 B a row with page growth: at GenData sf1 in a 1 GB heap with 4
+    * threads (~108 MB a task), 1.2 M rows a task failed and 1 M passed.
+    * So this keeps a 2× margin.
+    * That is ~1.5 M rows at a 16 GB heap with 32 threads (the round-13
+    * density) and ~570 k at 1 GB with 4. */
+  private def hashBuildRowsPerTask(spark: SparkSession): Long = {
+    val fraction = spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6)
+    val region = ((Runtime.getRuntime.maxMemory - (300L << 20)) * fraction).toLong
+    math.max(1L, region / spark.sparkContext.defaultParallelism / 200)
   }
 
   /** A directory of 200 real BMP files (media_<id>.bmp, ids 0–199 — the
@@ -342,7 +366,7 @@ object ExtractFixtures {
       "copurchase_adj", doubled,
       org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, dst BIGINT"),
       "src", AdjBuckets, Seq("src", "dst"),
-      dynamicBuckets = Some(() => adjBucketsFor(2L * TableStats.rows(edgesDir))))
+      dynamicBuckets = Some(() => adjBucketsFor(2L * TableStats.rows(spark, edgesDir))))
   }
 
   /** orders and lineitem written SORTED-BUCKETED by orderkey
@@ -360,19 +384,18 @@ object ExtractFixtures {
     * CLUSTERED BY … LOCATION instead of rewriting it. */
   def bucketedOrdersLineitem(spark: SparkSession, sfDir: String): (String, String) = {
     val tag = pathTag(sfDir)
-    // one shared count → one shared bucket count: orders and lineitem MUST
-    // agree or the co-located join grows an exchange. Sized from lineitem
-    // (the wide side — its per-bucket sort is the binding write cost); the
-    // footer count is read at most once, and only when a fixture is
-    // actually (re)written, never on marker re-attach.
-    lazy val lineitemRows = TableStats.rows(Tables.path(sfDir, "lineitem"))
-    val shared = () => factBucketsFor(lineitemRows)
+    // one shared bucket count: orders and lineitem MUST agree or the
+    // co-located join grows an exchange. Sized from lineitem's footer row
+    // count (the wide side — its per-bucket sort is the binding write
+    // cost), read at most once, and only when a fixture is actually
+    // (re)written, never on marker re-attach.
+    lazy val buckets = factBucketsFor(TableStats.rows(spark, Tables.path(sfDir, "lineitem")))
     (ensureBucketed(spark, sfDir, s"graft_orders_bkt_$tag", "orders_bucketed",
        Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey",
-       dynamicBuckets = Some(shared)),
+       dynamicBuckets = Some(() => buckets)),
      ensureBucketed(spark, sfDir, s"graft_lineitem_bkt_$tag", "lineitem_bucketed",
        Tables.lineitem(spark, sfDir), Tables.lineitemSchema, "l_orderkey",
-       dynamicBuckets = Some(shared)))
+       dynamicBuckets = Some(() => buckets)))
   }
 
   /** Bucket count for the orders⋈lineitem sorted-bucketed pair. A fixed 8

@@ -1,9 +1,9 @@
 package graft.etl
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
 
 /** Table statistics read from parquet metadata on the driver, never from a
   * Spark job: sizing a layout must not cost a scan of the data it sizes. */
@@ -12,9 +12,11 @@ object TableStats {
   /** Row count of a parquet dataset — one file, or a directory tree of part
     * files (partition subdirectories included) — summed from the footers.
     * Hidden entries (`_SUCCESS`, `_GRAFT_FIXTURE_OK`, `.crc` checksums)
-    * are skipped, as Spark's file index skips them. */
-  def rows(path: String): Long = {
-    val conf = new Configuration()
+    * are skipped, as Spark's file index skips them. Files are opened with
+    * the session's Hadoop configuration, so the footers come from the same
+    * filesystem a Spark read of `path` would use. */
+  def rows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     def footerRows(f: Path): Long = {

@@ -60,12 +60,12 @@ class FixturesSpec extends SparkFixture {
     withLineitem { sfDir =>
       val multi = Tables.path(sfDir, "lineitem")
       assert(new File(multi).listFiles().count(_.getName.startsWith("part-")) == 3)
-      assert(TableStats.rows(multi) == spark.read.parquet(multi).count())
-      assert(TableStats.rows(multi) == lines.size)
+      assert(TableStats.rows(spark, multi) == spark.read.parquet(multi).count())
+      assert(TableStats.rows(spark, multi) == lines.size)
 
       val partitioned = s"$sfDir/by_order"
       spark.read.parquet(multi).write.partitionBy("l_orderkey").parquet(partitioned)
-      assert(TableStats.rows(partitioned) == lines.size)
+      assert(TableStats.rows(spark, partitioned) == lines.size)
 
       val oneDir = s"$sfDir/one"
       spark.read.parquet(multi).coalesce(1).write.parquet(oneDir)
@@ -74,8 +74,8 @@ class FixturesSpec extends SparkFixture {
       val file = Tables.path(sfDir, "single")
       Files.copy(single.head.toPath, new File(file).toPath)
       assert(new File(file).isFile)
-      assert(TableStats.rows(file) == spark.read.parquet(file).count())
-      assert(TableStats.rows(file) == lines.size)
+      assert(TableStats.rows(spark, file) == spark.read.parquet(file).count())
+      assert(TableStats.rows(spark, file) == lines.size)
     }
   }
 }
