@@ -103,37 +103,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the box's cores, not a fixed small number: a hand-run
-    // `--isolate` without the env read 428.9 s for pagerank at local[4]
-    // vs 99.1 s at local[32] (round 12) — a 4.3× phantom regression from
-    // the instrument, not the plan. Explicit env still wins (the driver
-    // and the ladder scripts set it).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tungsten's default 64 MB page is sized for ≥1 GB of heap per
-      // core; at local[32] each concurrent task's fair share of the
-      // unified pool is a few hundred MB, and 32 concurrent 64 MB-page
-      // consumers heap-OOM'd the 100× fixture's graph aggregates in an
-      // 8 GB JVM (PERF.md round 9d). 16 MB pages match the page size to
-      // the per-task budget: the sf10 suite runs 460 s / 0 errors at
-      // 16 GB (65 s faster than with default pages) and the graph
-      // family's non-checkpoint-bound queries clear an 8 GB heap too.
-      .config("spark.buffer.pageSize", "16m")
-      // Trust the staged bucketed tables' sortBy metadata (off by default
-      // since Spark 3.0; only honored when a bucket is exactly one file,
-      // which the fixture writer guarantees via repartition-on-the-bucket
-      // key). Without it every iteration join over the sorted-bucketed
-      // adjacency re-sorts 5.6 M rows per task — 32 concurrent ~250 MB
-      // sort pointer arrays heap-OOM'd the 16 GB JVM at sf10 (round 10);
-      // with it the edge side streams pre-sorted from disk, which is the
-      // entire point of the sorted-bucketed layout.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // Warm up the executor pool, codegen pipeline AND the parquet reader
     // stack so one-time session cost is not attributed to whichever query
     // the Map yields first. Every fixture table is opened once: the first

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: prints the formatted physical plan of selected
   * declared queries (all, if no names given). Used to keep PERF.md honest —
   * pushdown, pruning, broadcast and shuffle claims are read off these
@@ -13,16 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // trust staged bucketed tables' sortBy metadata (see Bench.scala)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     val targets =
       if (names.nonEmpty) names else etl.Registry.all.map(_.name)

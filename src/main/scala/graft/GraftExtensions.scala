@@ -8,10 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /** Spark extension entry point: registers graft's native functions into the
   * session's FunctionRegistry so plain SQL text can call them.
   *
-  * Usage (any of):
-  *   - spark.sql config: `spark.sql.extensions=graft.GraftExtensions`
-  *   - builder: `.withExtensions(new GraftExtensions)`
-  *   - an existing session: `GraftExtensions.register(spark)`
+  * Injected at session build: [[GraftSession]] does it, and so does
+  * `.withExtensions(new GraftExtensions)` (or
+  * `spark.sql.extensions=graft.GraftExtensions`) on any other builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -84,12 +83,4 @@ object GraftExtensions {
         "XxHash64 long chain per n-gram (the shingle space)",
       ""),
     buildChain)
-
-  /** Register on an already-built session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_similarity", build, "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hashes", buildNgram, "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_hash_chain", buildChain, "scala_udf")
-  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage attribution probe — the instrument `--isolate` doesn't have.
   *
@@ -29,16 +28,7 @@ object StageProbe {
     val name = args.headOption.getOrElse(
       sys.error("usage: StageProbe <query-name>"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.buffer.pageSize", "16m")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     @volatile var phase = "setup"
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -80,7 +70,7 @@ object StageProbe {
     val t0 = System.nanoTime()
     consume(q.build(spark, sfDir))
     val wall = (System.nanoTime() - t0) / 1e9
-    println(f"[probe total] $name measured wall=$wall%.2f s  (sf=$sfDir, local[$cpus])")
+    println(f"[probe total] $name measured wall=$wall%.2f s  (sf=$sfDir, local[${GraftSession.cpus}])")
     spark.stop()
   }
 }

@@ -617,7 +617,7 @@ object Graft {
     // ~110 the round-13 row target produced at bsz 1024). Build memory
     // per task only shrinks under bigger tiles (fewer rows, same 264 B
     // each), so the OOM guarantee is untouched.
-    val nparts = math.min(4096L, rRows * bsz / 409600000L + 1L).toInt
+    val nparts = graft.etl.TableStats.partsFor(rRows * bsz, 409600000L)
     // Repartition whenever the count-sized number exceeds the session
     // default. Round 13 shipped a `nparts * 4 > defParts * 5` hysteresis
     // (trip point 40 at the bench session's 32) that SKIPPED the sf30

@@ -123,7 +123,7 @@ object ExtractFixtures {
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val defParts = spark.sessionState.conf.numShufflePartitions
       val buildRows = TableStats.rows(spark, Tables.path(sfDir, "lineitem"))
-      val nparts = math.min(4096L, buildRows / hashBuildRowsPerTask(spark) + 1).toInt
+      val nparts = TableStats.partsFor(buildRows, hashBuildRowsPerTask(spark))
       val lp = if (nparts > defParts) pairs.repartition(nparts, col("ok")) else pairs
       lp.as("a")
         .join(lp.as("b").hint("shuffle_hash"),

@@ -29,4 +29,10 @@ object TableStats {
       .sum
     if (fs.getFileStatus(p).isDirectory) walk(p) else footerRows(p)
   }
+
+  /** Partitions that give each task about `rowsPerTask` of `rows`:
+    * `rows / rowsPerTask + 1`, capped at 4096. Callers compare it with the
+    * session default under their own trip point. */
+  def partsFor(rows: Long, rowsPerTask: Long): Int =
+    math.min(4096L, rows / rowsPerTask + 1).toInt
 }

@@ -165,11 +165,16 @@ object Tables {
   /** Events with `ts` as TimestampType (µs) regardless of the fixture's
     * on-disk precision: MICROS reads natively; NANOS (rounds ≤ 6) reads as
     * LongType epoch nanos and converts via integral `div 1000` (a double
-    * division would lose precision: epoch nanos > 2^53). */
+    * division would lose precision: epoch nanos > 2^53). The NANOS read
+    * needs `spark.sql.legacy.parquet.nanosAsLong`, which the session must
+    * set at build time ([[graft.GraftSession]] does); a build never sets
+    * it on the session it is given. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     if (eventsTsIsNanos(d)) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean,
+        s"$d/events.parquet stores ts as TIMESTAMP(NANOS), which reads only with " +
+          "spark.sql.legacy.parquet.nanosAsLong=true: build the session with graft.GraftSession")
       val nanosSchema = StructType(eventsSchema.map {
         case f if f.name == "ts" => f.copy(dataType = LongType)
         case f => f

@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables}
+import graft.etl.{QueryDef, Tables, TableStats}
 import graft.etl.Dets._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -105,9 +105,9 @@ object AggOps {
     * percentile 0.93 → 1.10) for zero benefit at that heap footprint —
     * while above it the census approaches row scale and MUST be
     * serialized/spillable (a 6·10⁷-row deserialized census is the
-    * heap-OOM shape ckptEdges' scaladoc documents). `inputRows` comes from
-    * the fact table's parquet metadata count — a footer-statistics job,
-    * no data scan. 3·10⁷ rows ≈ a few GB deserialized at ~100 B/row: well
+    * heap-OOM shape ckptEdges' scaladoc documents). `inputRows` is the
+    * fact table's footer row count ([[TableStats.rows]], no Spark job).
+    * 3·10⁷ rows ≈ a few GB deserialized at ~100 B/row: well
     * inside a 16 GB driver-JVM heap below the gate, not above it. */
   private def ckptCensus(df: DataFrame, inputRows: Long): DataFrame =
     if (inputRows > 30000000L)
@@ -324,7 +324,7 @@ object AggOps {
           (col("o_totalprice").cast(DecimalType(12, 4)) * lit(10000))
             .cast(LongType).as("pi"))
         .groupBy(col("st"), col("pi")).agg(count(lit(1)).as("cnt")),
-        Tables.orders(spark, sfDir).count())
+        TableStats.rows(spark, Tables.path(sfDir, "orders")))
       val bp = binnedPicks(vc, "st", "pi", "cnt", 10000000L, Seq(
         (1, expr("(__tot - 1) div 2 + 1")),
         (2, expr("__tot div 2 + 1")),
@@ -991,7 +991,7 @@ object AggOps {
           d124(col("l_quantity")).cast(LongType).as("w"))
         .groupBy(col("flag"), col("pi"))
         .agg(sum(col("w")).as("cw")),
-        Tables.lineitem(spark, sfDir).count())
+        TableStats.rows(spark, Tables.path(sfDir, "lineitem")))
       // cum·100 ≥ tot·q  ⟺  cum ≥ ⌈tot·q/100⌉ over integers — the
       // binnedPicks target form. $100 bins (pi div 10^6): the bin frame
       // is ≤ ~1.1 k rows per flag at ANY scale (price-domain-bound).
@@ -1273,7 +1273,10 @@ object AggOps {
       // type_a < type_b — the same pair orientation and ordering.
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_type"))
-      val dict = ev.select(col("event_type")).distinct()
+      // NULL is no type: it gets no bit, and the left join below keeps a
+      // user whose rows are all NULL-typed with mask 0, so that user
+      // counts toward n_total only (the oracle's count(DISTINCT user_id))
+      val dict = ev.select(col("event_type")).filter(col("event_type").isNotNull).distinct()
         .withColumn("__i",
           row_number().over(Window.orderBy(col("event_type"))) - 1)
         // fail-loud bitmask-width guard: shiftleft on a LONG silently
@@ -1288,9 +1291,9 @@ object AggOps {
         // distinct-over-events scan runs exactly once
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val hist = ev.join(broadcast(dict), "event_type")
+      val hist = ev.join(broadcast(dict), Seq("event_type"), "left")
         .groupBy(col("user_id"))
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), __i))").as("m"))
+        .agg(coalesce(expr("bit_or(shiftleft(CAST(1 AS BIGINT), __i))"), lit(0L)).as("m"))
         .groupBy(col("m")).agg(count(lit(1)).as("cnt"))
         // ≤ 2^|types| rows, three consumers below — materialize once so
         // the users-scale aggregate runs exactly once

@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables}
+import graft.etl.{QueryDef, Tables, TableStats}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -243,8 +243,8 @@ object GraphOps {
       // engages around sf700 at defParts 32, and on a 1000-executor
       // session with defParts in the thousands, proportionally later).
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nodeBound = Tables.part(spark, sfDir).count()
-      val contribParts = math.min(4096, (nodeBound / 1500000L).toInt + 1)
+      val nodeBound = TableStats.rows(spark, Tables.path(sfDir, "part"))
+      val contribParts = TableStats.partsFor(nodeBound, 1500000L)
       var pr = nodes.select(col("v"), col("deg"),
         expr("1000000000000 div n").as("pr"))
       for (_ <- 1 to 3) {
@@ -613,7 +613,7 @@ object GraphOps {
         deg.agg(sum(expr("deg * (deg - 1) div 2")).cast(LongType)).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nparts = math.min(4096, (wedgeCnt / 1500000L).toInt + 1)
+      val nparts = TableStats.partsFor(wedgeCnt, 1500000L)
       val pairs = l.join(r, Seq("n", "__p", "__q"))
         .filter(col("a") < col("b"))
         .select((shiftleft(col("a"), 32) + col("b")).as("__pk"))

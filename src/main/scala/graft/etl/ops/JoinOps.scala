@@ -466,7 +466,8 @@ object JoinOps {
   /** The SAME band-join semantics as [[qjoinRangeBinned]], but written the
     * NAIVE way — `abs(c_cents − s_cents) <= 10000` straight in the join
     * condition — and rescued by the [[graft.plans.BandJoinRewrite]]
-    * optimizer rule, which injects the bin equi-key automatically
+    * optimizer rule (injected at session build by
+    * [[graft.GraftExtensions]]), which adds the bin equi-key automatically
     * (SURVEY §7.4 tier (c), `Rule[LogicalPlan]` flavor). Inner join (the
     * rule's scope), so the oracle differs from the binned query's
     * left-join: suppliers with no in-band customer are absent. PlanSpec
@@ -483,7 +484,6 @@ object JoinOps {
   private val qjoinBandAuto = QueryDef(
     "qjoin_band_auto",
     build = (spark, sfDir) => {
-      graft.plans.BandJoinRewrite.register(spark)
       val cCents = (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast(LongType)
       val sCents = (col("s_acctbal").cast(DecimalType(12, 2)) * 100).cast(LongType)
       val c = Tables.customer(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables}
+import graft.etl.{QueryDef, Tables, TableStats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2198,7 +2198,7 @@ object LlmOps {
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val grams = gsets.select(col("doc_id"), explode(col("gs")).as("g"))
     val defParts = spark.sessionState.conf.numShufflePartitions
-    val nparts = math.min(4096, (totalGrams / 1500000L).toInt + 1)
+    val nparts = TableStats.partsFor(totalGrams, 1500000L)
     val keyed = if (nparts * 4 > defParts * 5)
       grams.repartition(nparts, col("g")) else grams
     (perDoc, keyed)

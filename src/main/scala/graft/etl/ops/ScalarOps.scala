@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables}
+import graft.etl.{QueryDef, Tables, TableStats}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -355,12 +355,12 @@ object ScalarOps {
       // discipline as [[LlmOps.gramStream]]), skipped when the session
       // default already gives that density — the ≤ sf30 plans are
       // byte-identical to the round-12 proven ones. The sizing count is
-      // parquet-metadata-only. Both sides repartition on their join key
+      // the orders footer row count (no Spark job). Both sides repartition on their join key
       // with the SAME count, so EnsureRequirements inserts no further
       // exchange and the hint still plans the hash build on orders.
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nOrders = Tables.orders(spark, sfDir).count()
-      val nparts = math.min(4096, (nOrders / 1500000L).toInt + 1)
+      val nOrders = TableStats.rows(spark, Tables.path(sfDir, "orders"))
+      val nparts = TableStats.partsFor(nOrders, 1500000L)
       // Trip point is nparts > defParts, NOT a ≥ 25% hysteresis (round-14
       // reconciliation): both sides repartition on the join key with the
       // same count, so the exchange REPLACES the join's own shuffle —

@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables}
+import graft.etl.{QueryDef, Tables, TableStats}
 import graft.etl.Dets._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -292,17 +292,17 @@ object WindowOps {
       // fill is always the segment head's v — value-identical to the
       // window form (oracle-exact at sf0.01, sf0.1 AND sf3 — all 31.5 M
       // sf3 grid rows DuckDB-matched).
-      // partition count sized from the exact event count (a metadata-scale
-      // parquet count), targeting the OUTPUT sort, not the input: the
+      // partition count sized from the exact event count (the footer row
+      // count, no Spark job), targeting the OUTPUT sort, not the input: the
       // filled grid fans each observation out ~10× (a user's span in
       // hours vs their event count), and the closing local sort holds a
       // whole task's grid in memory — at the session's 32 partitions that
       // was 10 M filled rows/task at sf30, 16.7 GB of sort spill. ~250 k
       // events/task ≈ 2.5 M grid rows/task keeps the sort in memory;
       // skipped when it does not beat the session default by ≥ 25%.
-      val evCnt = Tables.events(spark, sfDir).count()
+      val evCnt = TableStats.rows(spark, Tables.path(sfDir, "events"))
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nparts = math.min(4096, (evCnt / 250000L).toInt + 1)
+      val nparts = TableStats.partsFor(evCnt, 250000L)
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), date_trunc("hour", col("ts")).as("h"),
           col("value"))

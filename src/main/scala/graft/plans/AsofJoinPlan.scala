@@ -50,8 +50,8 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: AsofJoin → AsofJoinExec. Injected via
-  * [[graft.GraftExtensions]] or session.experimental.extraStrategies. */
+/** Planner rule: AsofJoin → AsofJoinExec. Injected at session build by
+  * [[graft.GraftExtensions]]. */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoin(l, r, lk, lts, rk, rts, out, tol) =>
@@ -168,13 +168,13 @@ case class AsofJoinExec(
 object AsofJoinNative {
 
   /** Inner as-of join of `right` against `left` on `key`/`ts` via the
-    * native operator; returns right's columns plus `asof_ts`. Registers
-    * [[AsofJoinStrategy]] on the session on first use (idempotent). */
+    * native operator; returns right's columns plus `asof_ts`. The session
+    * must carry [[AsofJoinStrategy]], which [[graft.GraftExtensions]]
+    * injects at build time; without it the node has no physical plan. */
   def apply(spark: SparkSession, left: DataFrame, right: DataFrame,
       key: String, ts: String, tolerance: Option[Long] = None): DataFrame = {
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
+    require(spark.sessionState.planner.strategies.contains(AsofJoinStrategy),
+      "AsofJoinNative needs a session built with GraftExtensions (see graft.GraftSession)")
     // Self-join safety: both sides often derive from the SAME relation, so
     // their attributes share expr-ids; DeduplicateRelations would re-id one
     // subtree and strand the ids this node captured. Aliasing every column

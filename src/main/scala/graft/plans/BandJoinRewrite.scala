@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -48,13 +47,6 @@ object BandJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * reference to an injected bin attribute) stops re-rewriting. */
   private[plans] val Rewritten =
     new org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graftBandJoinRewritten")
-
-  /** Idempotent imperative registration (the [[graft.GraftExtensions]]
-    * path does the same at session build time). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(BandJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ BandJoinRewrite
 
   private def integralAttr(e: Expression): Option[Attribute] = e match {
     case a: Attribute if a.dataType == LongType || a.dataType == IntegerType ||

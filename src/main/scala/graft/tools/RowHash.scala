@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Order-insensitive result fingerprint for run-twice determinism checks at
@@ -23,17 +22,7 @@ object RowHash {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "16m")
-      // trust staged bucketed tables' sortBy metadata (see Bench.scala)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     names.foreach { name =>
       val df = graft.etl.Registry.byName(name).build(spark, sfDir)
       val row = df

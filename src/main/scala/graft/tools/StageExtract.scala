@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.etl.ExtractFixtures
 
 /** Pre-stages the derived extract fixtures for one sf directory — the
@@ -59,13 +58,11 @@ object StageExtract {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.GraftSession.cpus
     val parts = sys.env.get("SPARK_GRAFT_STAGE_PARTS").map(_.toInt)
-      .getOrElse(sizedShufflePartitions(sfDir, cpus.toInt))
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
+      .getOrElse(sizedShufflePartitions(sfDir, cpus))
+    val b = graft.GraftSession.builder(cpus)
+      .config("spark.sql.shuffle.partitions", parts.toLong)
       // 8m, NOT 16m: G1 regions top out at 32 MB, so 16 MB sorter pages
       // are humongous allocations — at sf100 the bucketed-write sorts
       // allocate thousands of them while zstd/lz4 JNI streams hold the
@@ -75,13 +72,11 @@ object StageExtract {
       // with -XX:G1HeapRegionSize=32m on the staging JVM.
       .config("spark.buffer.pageSize",
         sys.env.getOrElse("SPARK_GRAFT_STAGE_PAGE", "8m"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // drive the weak-ref cleaner aggressively: staging JVMs are big-heap
       // and shuffle-heavy, so finished shuffles' files otherwise outlive
       // their step and stack up against the disk budget (see the step-loop
       // note below)
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_STAGE_CODEC")
       .foreach(c => b.config("spark.io.compression.codec", c))
     // extra session confs, "k=v;k=v" — the disk-bound rungs trade the

@@ -632,6 +632,24 @@ class EdgeCaseSpec extends SparkFixture {
     }
   }
 
+  test("assoc: a user whose events all have a NULL type counts toward n_total only") {
+    val sfDir = java.nio.file.Files.createTempDirectory("graft_assoc_sf").toString
+    try {
+      // users 1-3 are typed; user 4 has only NULL types; user 2's NULL row
+      // adds nothing
+      FixturesSpec.writeEvents(sfDir, "MICROS", Seq(
+        (1L, 0L, 1L, Some("a")), (2L, 0L, 1L, Some("b")),
+        (3L, 0L, 2L, Some("a")), (4L, 0L, 2L, Some("b")), (5L, 0L, 2L, None),
+        (6L, 0L, 3L, Some("a")),
+        (7L, 0L, 4L, None), (8L, 0L, 4L, None)))
+      val rows = graft.etl.Registry.byName("qagg_assoc").build(spark, sfDir).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
+          r.getDouble(7)))
+      // lift = n_ab · n_total / (n_a · n_b), n_total = count(DISTINCT user_id) = 4
+      assert(rows.toSeq == Seq(("a", "b", 2L, 3L, 2L, 2.0 * 4.0 / (3.0 * 2.0))))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sfDir))
+  }
+
   test("benford digit fractions are a distribution over plausible leading digits") {
     val rows = graft.etl.Registry.byName("qagg_benford").build(spark, sfTiny).collect()
     assert(rows.nonEmpty)

@@ -2,7 +2,13 @@ package graft
 
 import graft.etl.{ExtractFixtures, Tables, TableStats}
 import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.types.TimestampType
 
 import java.io.File
 import java.nio.file.Files
@@ -77,5 +83,57 @@ class FixturesSpec extends SparkFixture {
       assert(TableStats.rows(spark, file) == spark.read.parquet(file).count())
       assert(TableStats.rows(spark, file) == lines.size)
     }
+  }
+
+  test("Tables.events reads NANOS and MICROS ts as the same µs timestamps") {
+    val nanosDir = Files.createTempDirectory("graft_nanos_sf").toString
+    val microsDir = Files.createTempDirectory("graft_micros_sf").toString
+    try {
+      // 2024-01-02T03:04:05.123456Z plus 789 ns, which the µs read drops
+      val micros = Seq(1704164645123456L, 1704164645123457L)
+      FixturesSpec.writeEvents(nanosDir, "NANOS",
+        micros.zipWithIndex.map { case (us, i) => (i.toLong, us * 1000L + 789L, 7L, Some("view")) })
+      FixturesSpec.writeEvents(microsDir, "MICROS",
+        micros.zipWithIndex.map { case (us, i) => (i.toLong, us, 7L, Some("view")) })
+      for (dir <- Seq(nanosDir, microsDir)) {
+        val ev = Tables.events(spark, dir)
+        assert(ev.schema("ts").dataType == TimestampType)
+        assert(ev.orderBy(col("event_id")).select(unix_micros(col("ts"))).collect()
+          .map(_.getLong(0)).toSeq == micros, dir)
+      }
+      // the NANOS read needs the conf GraftSession sets at build time
+      val bare = spark.newSession()
+      bare.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      val err = intercept[IllegalArgumentException](Tables.events(bare, nanosDir))
+      assert(err.getMessage.contains("GraftSession"), err.getMessage)
+    } finally Seq(nanosDir, microsDir).foreach(d => FileUtils.deleteQuietly(new File(d)))
+  }
+}
+
+object FixturesSpec {
+
+  /** Writes `sfDir/events.parquet` as one file whose `ts` is parquet
+    * TIMESTAMP(`unit`) adjusted to UTC, as a non-Spark writer stores it.
+    * Rows are (event_id, ts in `unit` since the epoch, user_id,
+    * event_type); `value` and `props` are NULL. */
+  def writeEvents(sfDir: String, unit: String,
+      rows: Seq[(Long, Long, Long, Option[String])]): Unit = {
+    val schema = MessageTypeParser.parseMessageType(
+      s"""message events {
+         |  optional int64 event_id;
+         |  optional int64 ts (TIMESTAMP($unit, true));
+         |  optional int64 user_id;
+         |  optional binary event_type (STRING);
+         |  optional double value;
+         |  optional binary props (STRING);
+         |}""".stripMargin)
+    val groups = new SimpleGroupFactory(schema)
+    val writer = ExampleParquetWriter.builder(new Path(Tables.path(sfDir, "events")))
+      .withType(schema).build()
+    try rows.foreach { case (id, ts, user, eventType) =>
+      val g = groups.newGroup().append("event_id", id).append("ts", ts).append("user_id", user)
+      eventType.foreach(g.append("event_type", _))
+      writer.write(g)
+    } finally writer.close()
   }
 }

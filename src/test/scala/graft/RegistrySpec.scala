@@ -61,11 +61,44 @@ class RegistrySpec extends SparkFixture {
   }
 
   test("every declared query is deterministic at sf0.001 (run-twice byte equality)") {
+    // no build may change session-global state: a conf or an extra rule
+    // set by one build would change how every later query plans
+    def sessionState = (spark.conf.getAll, spark.experimental.extraOptimizations,
+      spark.experimental.extraStrategies)
+    val before = sessionState
     Registry.all.foreach { q =>
-      val a = q.build(spark, sfTiny).collect().map(_.toString).toSeq
-      val b = q.build(spark, sfTiny).collect().map(_.toString).toSeq
+      def run(): Seq[String] = {
+        val df = q.build(spark, sfTiny)
+        if (sessionState != before) fail(s"${q.name}'s build changed the session's state")
+        df.collect().map(_.toString).toSeq
+      }
+      val a = run()
+      val b = run()
       assert(a == b, s"${q.name} is nondeterministic across runs")
     }
+  }
+
+  test("one session builder: the test session carries GraftSession's confs and extensions") {
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.buffer.pageSize" -> "16m",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true").foreach { case (k, v) =>
+      assert(spark.conf.getOption(k).contains(v), k)
+    }
+    // injected at build time: SQL text resolves the native function with
+    // no registration call
+    val sim = spark.sql("SELECT cosine_similarity(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), " +
+      "array(CAST(2 AS FLOAT), CAST(0 AS FLOAT)))").head().getDouble(0)
+    assert(sim == 1.0)
+    // every other session in src/main comes from GraftSession; GenData keeps
+    // its own because its session defines the generated data
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder("))
+      .map(root.relativize(_).toString).toSet
+    assert(builders.subsetOf(Set("GraftSession.scala", "tools/GenData.scala")), builders)
   }
 
   test("entry() returns the flagship with rows > 0") {

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites in the forked test JVM.
-  * UTC is mandatory — date assertions lie otherwise (SURVEY §7.6).
+/** Shared local SparkSession for all suites in the forked test JVM, built
+  * by [[GraftSession]] so tests plan queries under the Bench and Verify
+  * confs (UTC included — date assertions lie otherwise, SURVEY §7.6).
   */
 trait SparkFixture extends AnyFunSuite {
   lazy val spark: SparkSession = SparkFixture.session
@@ -13,17 +14,5 @@ trait SparkFixture extends AnyFunSuite {
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // trust staged bucketed tables' sortBy metadata (see Bench.scala)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.create(cpus = 4)
 }
