@@ -39,13 +39,17 @@ object Bench {
     * lead-window and sequence-explode DRIVE cardinality so the node
     * census sees them under count(), but the dominant costs — the
     * closing grid-scale local sort and the decStr rendering — are
-    * exactly what count() elides.
+    * exactly what count() elides. qllm_winnow (rolling-hash arrays) and
+    * qproject_expr (exact-decimal arithmetic rendered by decStr) have
+    * qllm_repetition's shape: one narrow scan whose projected columns
+    * count() drops.
     * Members are consumed through the noop sink like the swept set;
     * PlanSpec pins that this set stays DISJOINT from the sweep (a member
     * the sweep starts seeing again belongs in the main list). Declared
     * BEFORE countPrunable — object vals initialize in declaration order,
     * and countPrunable concatenates this set. */
-  val projectionPrunable: Set[String] = Set("qllm_repetition", "qwin_gapfill")
+  val projectionPrunable: Set[String] =
+    Set("qllm_repetition", "qllm_winnow", "qproject_expr", "qwin_gapfill")
 
   val countPrunable: Set[String] = Set(
     // every window query: a Window never changes cardinality, so count()

@@ -22,14 +22,6 @@ object Graft {
   // Dedup
   // ------------------------------------------------------------------
 
-  /** Exact dedup: keep the row with the smallest `keeper` per key. */
-  def dedupExact(df: DataFrame, key: Column, keeper: Column): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(keeper)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
   /** Text normalization used by normalized dedup / fingerprinting:
     * lowercase, strip non-alphanumerics, collapse whitespace — as the
     * native single-pass [[graft.functions.NormalizeText]] expression
@@ -41,16 +33,6 @@ object Graft {
   /** Constant-width dedup key: md5 prefix of the normalized text. */
   def fingerprint(c: Column, hexLen: Int = 16): Column =
     substring(md5(normalizeText(c)), 1, hexLen)
-
-  /** Distinct word-bigram shingles per document (as strings — needed when
-    * an oracle must reproduce the shingle universe exactly). */
-  def shingles(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val words = split(lower(text), " ")
-    df.select(id.as("doc_id"),
-      explode(array_distinct(transform(
-        sequence(lit(1), size(words) - 1),
-        i => concat_ws(" ", element_at(words, i), element_at(words, i + 1))))).as("sh"))
-  }
 
   /** Distinct word-bigram shingle HASHES per document: hash each word once,
     * then hash adjacent word-hash pairs — no bigram string is ever built.
@@ -65,19 +47,6 @@ object Graft {
     df.select(id.as("doc_id"),
       explode(array_distinct(graft.functions.NgramFunctions
         .ngram_hash_chain(split(lower(text), " "), 2))).as("h64"))
-
-  /** MinHash signatures (k XOR-rehash permutations of one xxhash64 per
-    * shingle) as an array column, one row per document — computed by the
-    * native [[graft.functions.MinHashAgg]] (single k-minima buffer). */
-  def minhashSignatures(sh: DataFrame, k: Int = 16): DataFrame =
-    sh.withColumn("__h64", xxhash64(col("sh")))
-      .groupBy(col("doc_id"))
-      .agg(graft.functions.MinHashAgg.minhash_signature(col("__h64"), k).as("sig"))
-
-  /** Same, over pre-hashed shingles from [[shingleHashes]]. */
-  def minhashSignaturesFromHashes(sh: DataFrame, k: Int = 16): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(graft.functions.MinHashAgg.minhash_signature(col("h64"), k).as("sig"))
 
   /** MinHash signatures computed ROW-LOCALLY off the text column — the
     * [[simhashFingerprints]] argument applied to MinHash: a signature
@@ -103,7 +72,7 @@ object Graft {
     *
     * Signature length vs `bands*rows`: signatures are sliced to the first
     * `bands*rows` elements before both banding and match counting, so a
-    * LONGER signature (minhashSignatures(k=20) with 4×4 bands) yields
+    * LONGER signature (minhashSignaturesLocal(k = 20) with 4×4 bands) yields
     * correct estimates ≤ 1.0 over the banded prefix; a SHORTER signature
     * fails fast — `sig(i)` past the end raises under ANSI mode (Spark 4
     * default) instead of degenerating into null-skipping band hashes. */
@@ -194,17 +163,6 @@ object Graft {
     // channels are disjoint: near pairs have distinct fps ⇒ hamming ≥ 1
     exact.unionByName(near)
   }
-
-  /** The final step of near-dup dedup: drop every clustered row except
-    * its cluster's keeper (the min-id member), keep all unclustered rows.
-    * `clusters` is [[dedupClusters]] output `(id, cluster)`; `idCol` is
-    * the matching id in `df`. A left join + one filter — rows, never
-    * per-key state, and the join key is the fixed-width id. */
-  def applyClusterDedup(df: DataFrame, idCol: Column, clusters: DataFrame): DataFrame =
-    df.join(clusters.select(col("id").as("__cd_id"), col("cluster").as("__cd_cluster")),
-        idCol === col("__cd_id"), "left")
-      .filter(col("__cd_cluster").isNull || col("__cd_id") === col("__cd_cluster"))
-      .drop("__cd_id", "__cd_cluster")
 
   /** Exact n-gram Jaccard candidate pairs over a shingle frame
     * `(doc_id, sh)` (hashed or string shingles) via a doc-frequency-capped
@@ -317,18 +275,8 @@ object Graft {
   // Similarity search
   // ------------------------------------------------------------------
 
-  /** Brute-force top-k by cosine against one broadcast query vector.
-    * `queryRow` must be a 1-row frame with an `embedding` column. */
-  def topKByCosine(vectors: DataFrame, id: Column, vec: Column,
-      queryRow: DataFrame, k: Int): DataFrame =
-    vectors.crossJoin(broadcast(queryRow.select(col("embedding").as("__q"))))
-      .select(id.as("vec_id"), cosine_similarity(vec, col("__q")).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-
   /** IVF-style bucketed top-k: assign each vector to its best centroid
-    * (broadcast), then the top-k per cell. Centroids: (cid, c_emb) —
-    * typically trained by [[kmeansCentroids]].
+    * (broadcast), then the top-k per cell. Centroids: (cid, c_emb).
     *
     * Assignment is an aggregation (`max` over a (sim, -cid) struct —
     * highest similarity, ties to the lowest cid), not a window: a
@@ -349,114 +297,6 @@ object Graft {
       .withColumn("rnk", row_number().over(topW))
       .filter(col("rnk") <= k)
       .select(col("cid"), col("rnk"), col("vec_id"), col("sim"))
-  }
-
-  /** IVF QUERY path — the ANN search a trained index exists for: rank the
-    * centroids against the broadcast 1-row query, keep the `nprobe` best
-    * cells, exact-rescore ONLY the vectors assigned to those cells, and
-    * return the exact top-k of that subset. Complements [[ivfTopK]]
-    * (which materializes per-cell toplists): at 100 TB the assignment is
-    * precomputed and stored with the vectors (`qllm_quantize`'s index
-    * layout), probed cells become partition-pruned scans, and per-query
-    * work drops from |vectors| exact cosines ([[topKByCosine]]) to
-    * ~|vectors|·nprobe/cells — `nprobe` is the recall/cost dial (ApiSpec
-    * measures recall@10 ≥ 0.8 at cells=8, nprobe=2 against brute-force
-    * ground truth). Assignment reuses [[ivfTopK]]'s map-side argmax;
-    * everything broadcast is metadata-scale (centroids, query, probed
-    * cell ids). */
-  def ivfSearch(vectors: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame, queryRow: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val q = broadcast(queryRow.select(col("embedding").as("__q")))
-    val probed = centroids.crossJoin(q)
-      .select(col("cid"), cosine_similarity(col("c_emb"), col("__q")).as("qsim"))
-      .orderBy(desc("qsim"), asc("cid")).limit(nprobe)
-      .select(col("cid"))
-    vectors.select(id.as("vec_id"), vec.as("__v"))
-      .crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("__v"), col("cid"),
-        cosine_similarity(col("__v"), col("c_emb")).as("sim"))
-      .groupBy(col("vec_id"))
-      .agg(
-        max(struct(col("sim"), (-col("cid")).as("__negcid"), col("cid"))).as("__b"),
-        // every candidate row of a group carries the same vector, so
-        // any_value is deterministic here
-        any_value(col("__v")).as("__v"))
-      .select(col("vec_id"), col("__b.cid").as("cid"), col("__v"))
-      .join(broadcast(probed), Seq("cid"), "left_semi")
-      .crossJoin(q)
-      .select(col("vec_id"), cosine_similarity(col("__v"), col("__q")).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** Centroid training for [[ivfTopK]]: spherical k-means (Lloyd under
-    * cosine) with deterministic initialization — the `k` lowest-id
-    * vectors seed cells 0..k-1, so retraining on the same data yields the
-    * same centroids (no RNG). Each iteration: (1) assign every vector to
-    * its max-cosine centroid via the same broadcast-crossJoin + map-side
-    * argmax aggregate [[ivfTopK]] plans (ties to the lowest cid); (2) new
-    * centroid = per-dimension mean of the assigned UNIT vectors (mean of
-    * normalized inputs — the update that makes the spherical k-means
-    * objective Σ cos(v, c_assigned) non-decreasing; cosine is
-    * scale-invariant, so the un-renormalized mean is equivalent). Cells
-    * that lose all members keep their previous centroid. Zero-norm
-    * vectors are excluded (cosine undefined).
-    *
-    * Returns `(cid, c_emb: array<double>)` ready for [[ivfTopK]]'s
-    * `centroids` input. 100 TB shape: per iteration one broadcast of k
-    * centroids, one map-side argmax, one (cid, dim)-keyed mean — no
-    * driver-side vectors, state bounded by k×dim. Means of doubles merge
-    * in shuffle-arrival order, so centroids are deterministic only to
-    * float addition order — fine for training, which is why this stays a
-    * library operator + property test rather than a hash-gated query.
-    */
-  def kmeansCentroids(vectors: DataFrame, id: Column, vec: Column,
-      k: Int, iters: Int = 5): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(iters >= 0, s"iters must be non-negative, got $iters")
-    val raw = vectors.select(id.as("vec_id"),
-      vec.cast(ArrayType(DoubleType)).as("__v"))
-    val norm = sqrt(aggregate(
-      transform(col("__v"), x => x * x), lit(0.0), (a, x) => a + x))
-    val v = raw.withColumn("__norm", norm)
-      .filter(col("__norm") > 0)
-      .select(col("vec_id"), transform(col("__v"), x => x / col("__norm")).as("__v"))
-    // k-row seed frame: partition by a constant-valued key so the
-    // (intentionally single-partition, metadata-scale) window doesn't
-    // raise WindowExec's "No Partition Defined" warning — a real
-    // unpartitioned window over data must stay the only thing that does.
-    // The key must be NON-FOLDABLE (xxhash64(col) & 0, not lit(0)):
-    // EliminateWindowPartitions folds literal partition keys right back
-    // to the unpartitioned form.
-    var centroids = v.orderBy(col("vec_id")).limit(k)
-      .withColumn("cid",
-        (row_number().over(Window
-          .partitionBy(xxhash64(col("vec_id")).bitwiseAND(lit(0L)))
-          .orderBy(col("vec_id"))) - 1)
-          .cast(IntegerType))
-      .select(col("cid"), col("__v").as("c_emb"))
-      .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = v.crossJoin(broadcast(centroids))
-        .select(col("vec_id"), col("__v"), col("cid"),
-          cosine_similarity(col("__v"), col("c_emb")).as("sim"))
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("sim"), (-col("cid")).as("__negcid"), col("cid"))).as("__b"),
-          first(col("__v")).as("__v")) // __v is group-constant: one row per centroid
-        .select(col("__b.cid").as("cid"), col("__v"))
-      val dimMeans = assigned
-        .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-      val updated = dimMeans.groupBy(col("cid"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("__pm"))
-        .select(col("cid"), expr("transform(__pm, s -> s.m)").as("__new"))
-      centroids = centroids.withColumnRenamed("c_emb", "__prev")
-        .join(updated, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("__new"), col("__prev")).as("c_emb"))
-        .localCheckpoint()
-    }
-    centroids
   }
 
   /** Sign-random-projection (SRP) LSH over embeddings: bit i of a
@@ -1113,25 +953,6 @@ object Graft {
     terms.reduce(_.bitwiseOR(_))
   }
 
-  /** The table-maintenance companion to [[zorderKey]] — the
-    * `OPTIMIZE ZORDER BY (x, y)` equivalent as a plain transformation:
-    * range-partition into `files` roughly equal z-ranges and sort within
-    * each, so every written file carries narrow min/max stats on BOTH
-    * coordinates and a 2-D box predicate prunes to the few files whose
-    * z-interval it intersects (PlanSpec measures the row-group skipping
-    * against a single-column layout). Write the result straight out:
-    * one file per partition, each one contiguous z-range. Combine with
-    * [[compact]]'s row-budget sizing by choosing
-    * `files = ceil(rows / targetRows)`. */
-  def zorderLayout(df: DataFrame, x: Column, y: Column, files: Int,
-      bits: Int = 10): DataFrame = {
-    require(files > 0, s"files must be positive, got $files")
-    df.withColumn("__graft_z", zorderKey(x, y, bits))
-      .repartitionByRange(files, col("__graft_z"))
-      .sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
-  }
-
   /** Semi-join reduction via an explicit bloom runtime filter: aggregate
     * `dim`'s join keys into one bloom filter (an ObjectHashAggregate whose
     * merge is a bitwise OR — order-independent, so the bits are
@@ -1329,20 +1150,6 @@ object Graft {
   // Text analysis
   // ------------------------------------------------------------------
 
-  /** Per-row text quality metrics (word/unique/stopword counts, average
-    * word length) appended as columns. */
-  def textQuality(df: DataFrame, text: Column,
-      stopwords: Seq[String] = Seq("the", "and", "of", "to")): DataFrame = {
-    val words = split(text, " ")
-    val wordsLower = split(lower(text), " ")
-    df.withColumn("n_words", size(words).cast(LongType))
-      .withColumn("n_uniq", size(array_distinct(words)).cast(LongType))
-      .withColumn("n_stop",
-        size(filter(wordsLower, w => w.isin(stopwords: _*))).cast(LongType))
-      .withColumn("avg_wlen",
-        (length(text) - (col("n_words") - 1)).cast(DoubleType) / col("n_words").cast(DoubleType))
-  }
-
   /** Default PII rules for [[redactPii]]: (column-suffix, regex,
     * replacement). Patterns are alternation/backslash-free so every regex
     * engine a mirror pipeline might use agrees on match spans. */
@@ -1419,135 +1226,6 @@ object Graft {
     perDoc.join(nb, Seq("__id"), "left")
       .select(col("__id").as("id"), col("n_grams"),
         coalesce(col("n_boiler"), lit(0L)).as("n_boiler"))
-  }
-
-  // ------------------------------------------------------------------
-  // Product quantization (PQ) — the compressed ANN index layout: split
-  // each d-dim vector into m subvectors, k-means each subspace, store m
-  // small codes per vector. At 100 TB the index holds m bytes + id per
-  // vector instead of d floats, and search is LUT additions (ADC), not
-  // dot products. The fixture embeddings are near-uniform (recall@10
-  // 0.2–0.5 at 16×16 — measured, not hidden), so the tests anchor on
-  // codebook-generated data where PQ is provably lossless instead of a
-  // data-luck recall bound.
-  // ------------------------------------------------------------------
-
-  private def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-
-  /** Per-vector (block, subvector) frame shared by train/encode/search. */
-  private def pqSubs(df: DataFrame, id: Column, vec: Column, m: Int): DataFrame = {
-    val v = df.select(id.as("vec_id"), vec.cast(ArrayType(DoubleType)).as("__v"))
-    v.select(col("vec_id"), posexplode(expr(
-      s"transform(sequence(0, $m - 1), b -> slice(__v, b * (size(__v) div $m) + 1, size(__v) div $m))")))
-      .toDF("vec_id", "block", "sub")
-  }
-
-  /** Train PQ codebooks: Lloyd k-means (L2) independently per block,
-    * deterministically seeded from the k lowest-id vectors' subvectors.
-    * Returns (block, cid, c_sub) — m·k rows, metadata-scale. Empty cells
-    * keep their previous centroid. Dimension must divide evenly by `m`. */
-  def pqTrain(vectors: DataFrame, id: Column, vec: Column,
-      m: Int, k: Int, iters: Int = 5): DataFrame = {
-    require(m > 0 && k > 0 && iters >= 0, s"bad PQ params m=$m k=$k iters=$iters")
-    val dim = vectors.select(size(vec.cast(ArrayType(DoubleType))).as("d")).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"dim $dim not divisible into $m blocks")
-    val subs = pqSubs(vectors, id, vec, m).localCheckpoint()
-    val seedW = Window.partitionBy(col("block")).orderBy(col("vec_id"))
-    var centroids = subs
-      .withColumn("__rn", row_number().over(seedW))
-      .filter(col("__rn") <= k)
-      .select(col("block"), (col("__rn") - 1).cast(IntegerType).as("cid"),
-        col("sub").as("c_sub"))
-      .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = subs.join(broadcast(centroids), "block")
-        .select(col("vec_id"), col("block"), col("cid"), col("sub"),
-          l2sq(col("sub"), col("c_sub")).as("__d2"))
-        .groupBy(col("vec_id"), col("block"))
-        .agg(min(struct(col("__d2"), col("cid"))).as("__best"), first(col("sub")).as("sub"))
-        .select(col("block"), col("__best.cid").as("cid"), col("sub"))
-      val means = assigned
-        .select(col("block"), col("cid"), posexplode(col("sub")))
-        .toDF("block", "cid", "pos", "x")
-        .groupBy(col("block"), col("cid"), col("pos")).agg(avg(col("x")).as("mx"))
-        .groupBy(col("block"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-          s => s.getField("mx")).as("new_sub"))
-      centroids = centroids.join(means, Seq("block", "cid"), "left")
-        .select(col("block"), col("cid"),
-          coalesce(col("new_sub"), col("c_sub")).as("c_sub"))
-        .localCheckpoint()
-    }
-    centroids
-  }
-
-  /** Encode vectors against trained codebooks: per block, the nearest
-    * centroid id; returns (vec_id, codes array<int> ordered by block).
-    * Wholly map-side apart from the per-vector code collection — the
-    * codebooks broadcast (m·k rows). `m` is the block count the caller
-    * already chose at [[pqTrain]] time: passing it through keeps this a
-    * pure plan constructor (the earlier countDistinct-over-codebooks
-    * derivation cost a driver-side Spark job per call for a value every
-    * caller knows). */
-  def pqEncode(vectors: DataFrame, id: Column, vec: Column,
-      codebooks: DataFrame, m: Int): DataFrame = {
-    require(m > 0, s"block count m must be > 0, got $m")
-    pqSubs(vectors, id, vec, m).join(broadcast(codebooks), "block")
-      .select(col("vec_id"), col("block"),
-        l2sq(col("sub"), col("c_sub")).as("__d2"), col("cid"))
-      .groupBy(col("vec_id"), col("block"))
-      .agg(min(struct(col("__d2"), col("cid"))).as("__best"))
-      .groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("block"), col("__best.cid").as("cid")))),
-        s => s.getField("cid")).as("codes"))
-  }
-
-  /** Asymmetric-distance (ADC) top-k over PQ codes: the query builds an
-    * m·k lookup table of exact subvector distances, codes join it per
-    * block, and the approximate distance is the LUT sum — additions, not
-    * dot products; the codes frame never materializes a float vector.
-    * `m` is the trained block count, passed through for the same
-    * no-job-before-the-plan reason as [[pqEncode]]. */
-  def pqTopK(codes: DataFrame, codebooks: DataFrame, query: DataFrame,
-      k: Int, m: Int): DataFrame = {
-    require(m > 0, s"block count m must be > 0, got $m")
-    val qsubs = pqSubs(query.limit(1).select(lit(0L).as("__qid"), col(query.columns.head)),
-      col("__qid"), col(query.columns.head), m)
-      .select(col("block"), col("sub").as("q_sub"))
-    val lut = codebooks.join(qsubs, "block")
-      .select(col("block"), col("cid"), l2sq(col("c_sub"), col("q_sub")).as("d2"))
-    codes.select(col("vec_id"), posexplode(col("codes"))).toDF("vec_id", "block", "cid")
-      .join(broadcast(lut), Seq("block", "cid"))
-      .groupBy(col("vec_id")).agg(sum(col("d2")).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** Per-partition k-quantile bucket assignment by VALUE (every row with
-    * the same value lands in the same bucket): cumulative counts over the
-    * (partition, value) aggregated frame give each distinct value
-    * `bucket = (k·(cum−1)) div n`, then rows join back on the value. The
-    * window sorts DISTINCT values — bounded by the value domain, not the
-    * row count (the qjoin_theta_range domain-bounding pattern); for an
-    * unbounded domain use [[globalRanksSampled]] boundaries instead.
-    * Appends `__bucket` (0 … k−1). */
-  def valueBuckets(df: DataFrame, part: Column, value: Column, k: Int): DataFrame = {
-    require(k >= 1, s"bucket count must be >= 1, got $k")
-    val vc = df.select(part.as("__p"), value.as("__v"))
-      .groupBy(col("__p"), col("__v")).agg(count(lit(1)).as("__cnt"))
-    val n = vc.groupBy(col("__p")).agg(sum(col("__cnt")).as("__n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__p")).orderBy(col("__v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val buckets = vc.withColumn("__cum", sum(col("__cnt")).over(w))
-      .join(broadcast(n), "__p")
-      .select(col("__p"), col("__v"),
-        expr(s"($k * (__cum - 1)) div __n").as("__bucket"))
-    df.join(buckets, part === col("__p") && value <=> col("__v"))
-      .drop("__p", "__v")
   }
 
   /** Trailing-frame rolling median over scale-4 integer units: returns

@@ -43,7 +43,8 @@ object LlmOps {
   private def dcos(a: String, b: String): String =
     s"(${ddot(a, b)} / (sqrt(${dnorm2(a)}) * sqrt(${dnorm2(b)})))"
 
-  // ---- shared normalization (qllm_dedup_norm / qllm_fingerprint) -----
+  // ---- shared normalization (qllm_dedup_norm; qllm_fingerprint reaches
+  // the same expression through graft.api.Graft.fingerprint) -----------
   // single-pass native normalizer, bit-identical to
   // trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", ""), " +", " "))
   // (PropertySpec pins the parity; see graft.functions.NormalizeText)
@@ -51,9 +52,6 @@ object LlmOps {
     graft.functions.TextFunctions.normalize_text(c)
   private val dnormSql =
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"
-
-  // (word-bigram shingles as strings live in graft.api.Graft.shingles;
-  // every declared query now uses the hashed variant, shingleHashes)
 
   /** Normalized-text dedup over a PLANTED twin corpus (round-13 verdict
     * task 1): the fixture has zero normalized full-text dups below sf0.1,
@@ -468,7 +466,7 @@ object LlmOps {
     "qllm_fingerprint",
     build = (spark, sfDir) =>
       Tables.documents(spark, sfDir)
-        .select(col("doc_id"), substring(md5(snorm(col("text"))), 1, 16).as("fp"))
+        .select(col("doc_id"), graft.api.Graft.fingerprint(col("text")).as("fp"))
         .groupBy(col("fp"))
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
           max(col("doc_id")).as("max_doc"))
@@ -823,8 +821,12 @@ object LlmOps {
     * differences cannot matter). The declarative per-position fold costs
     * k·n with k = 8 constant instead of the imperative O(n) rolling
     * update — still linear per char, traded for cross-engine parity.
-    * Scale: wholly map-side (transform/aggregate/array_min next to the
-    * scan, no shuffle before the output sort) — fingerprinting is
+    * The character codes are computed ONCE per document (one code point
+    * per `split(t, '')` element, so `size(cs) = length(t)`) and each
+    * gram folds an 8-element `slice`: a per-position `substr(t, i + j, 1)`
+    * walks the UTF-8 bytes from the start on every call, O(8·n²) per
+    * document. Scale: wholly map-side (transform/aggregate/array_min next
+    * to the scan, no shuffle before the output sort) — fingerprinting is
     * embarrassingly parallel, the property that makes winnowing viable
     * over 100 TB. Docs shorter than 11 chars have no complete window and
     * are excluded (fixture minimum is 48 chars, so nothing drops here). */
@@ -834,10 +836,11 @@ object LlmOps {
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text").as("t"))
         .filter(length(col("t")) >= 11)
+        .select(col("doc_id"), expr("transform(split(t, ''), c -> ascii(c))").as("cs"))
         .select(col("doc_id"),
-          expr("transform(sequence(1, length(t) - 7), i -> " +
-            "aggregate(sequence(0, 7), CAST(0 AS BIGINT), " +
-            "(a, j) -> (a * 257 + ascii(substr(t, i + j, 1))) % 1000000007))").as("hs"))
+          expr("transform(sequence(1, size(cs) - 7), i -> " +
+            "aggregate(slice(cs, i, 8), CAST(0 AS BIGINT), " +
+            "(a, c) -> (a * 257 + c) % 1000000007))").as("hs"))
         .select(col("doc_id"),
           expr("array_distinct(transform(sequence(1, size(hs) - 3), " +
             "j -> array_min(slice(hs, j, 4))))").as("fps"))

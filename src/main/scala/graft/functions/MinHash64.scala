@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * An EMPTY array yields k × Long.MaxValue (the aggregate's untouched
   * buffer) — but the aggregate pipeline never emits such a row because
   * `explode` drops empty docs; callers replicating that semantics filter
-  * `size(arr) > 0` upstream (minhashSignatures does).
+  * `size(arr) > 0` upstream ([[graft.api.Graft.minhashSignaturesLocal]] does).
   */
 case class MinHash64(child: Expression, k: Int) extends UnaryExpression {
 

@@ -9,23 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class ApiSpec extends SparkFixture {
 
-  test("topKByCosine returns k best matches in sim-desc order") {
-    val sp = spark
-    import sp.implicits._
-    val vectors = Seq(
-      (1L, Array(1.0f, 0.0f)),   // cos to query = 1.0
-      (2L, Array(0.0f, 1.0f)),   // 0.0
-      (3L, Array(-1.0f, 0.0f)),  // -1.0
-      (4L, Array(1.0f, 1.0f)))   // ~0.707
-      .toDF("vec_id", "embedding")
-    val query = Seq(Tuple1(Array(1.0f, 0.0f))).toDF("embedding")
-    val top = Graft.topKByCosine(vectors, col("vec_id"), col("embedding"), query, k = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(top.map(_._1).toSeq == Seq(1L, 4L))
-    assert(top(0)._2 == 1.0)
-    assert(math.abs(top(1)._2 - math.sqrt(0.5)) < 1e-6)
-  }
-
   test("ivfTopK assigns each vector to its best centroid, ties to lowest cid") {
     val sp = spark
     import sp.implicits._
@@ -167,17 +150,6 @@ class ApiSpec extends SparkFixture {
     }
   }
 
-  test("textQuality computes exact counts and average word length") {
-    val sp = spark
-    import sp.implicits._
-    val df = Seq(Tuple1("the cat and the hat")).toDF("text")
-    val r = Graft.textQuality(df, col("text")).collect()(0)
-    assert(r.getAs[Long]("n_words") == 5)
-    assert(r.getAs[Long]("n_uniq") == 4)  // "the" twice
-    assert(r.getAs[Long]("n_stop") == 3)  // the, and, the
-    assert(math.abs(r.getAs[Double]("avg_wlen") - 3.0) < 1e-12) // 15 chars / 5 words
-  }
-
   test("fingerprint is stable under whitespace/punctuation noise") {
     val sp = spark
     import sp.implicits._
@@ -221,22 +193,6 @@ class ApiSpec extends SparkFixture {
     assert(labels.size == 13 && labels.values.forall(_ == 0L), labels)
   }
 
-  test("applyClusterDedup keeps one row per cluster plus all unclustered rows") {
-    val sp = spark
-    import sp.implicits._
-    val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (9L, "solo"))
-      .toDF("doc_id", "payload")
-    val clusters = Graft.dedupClusters(
-      Seq((1L, 2L), (2L, 3L)).toDF("a", "b"), "a", "b") // {1,2,3}; 4 & 9 unclustered
-    val kept = Graft.applyClusterDedup(docs, col("doc_id"), clusters)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(1L, 4L, 9L)) // keeper 1 survives; 2,3 dropped
-    // end-to-end: the full pipeline is pairs -> clusters -> dedup; output
-    // schema is unchanged (no helper columns leak)
-    assert(Graft.applyClusterDedup(docs, col("doc_id"), clusters).columns.toSeq
-      == docs.columns.toSeq)
-  }
-
   test("globalRanks matches a reference sort; ntileFromRank matches SQL ntile sizing") {
     val sp = spark
     import sp.implicits._
@@ -254,158 +210,6 @@ class ApiSpec extends SparkFixture {
     // SQL ntile(4) of 103 rows: sizes 26,26,26,25
     val sizes = ranked.groupBy(_._5).view.mapValues(_.size).toMap
     assert(sizes == Map(1 -> 26, 2 -> 26, 3 -> 26, 4 -> 25), sizes)
-  }
-
-  test("kmeansCentroids: monotone objective, deterministic, feeds ivfTopK") {
-    import graft.functions.VectorFunctions.cosine_similarity
-    import org.apache.spark.sql.DataFrame
-    val emb = graft.etl.Tables.embeddings(spark, sfTiny)
-    val asDouble = expr("transform(embedding, x -> cast(x AS double))")
-    // spherical k-means objective: sum over vectors of the best cosine
-    def objective(c: DataFrame): Double =
-      emb.select(col("vec_id"), asDouble.as("__v"))
-        .crossJoin(broadcast(c))
-        .select(col("vec_id"), cosine_similarity(col("__v"), col("c_emb")).as("sim"))
-        .groupBy("vec_id").agg(max("sim").as("best"))
-        .agg(sum("best")).collect()(0).getDouble(0)
-    val objs = (0 to 3).map(i =>
-      objective(Graft.kmeansCentroids(emb, col("vec_id"), col("embedding"), k = 4, iters = i)))
-    objs.sliding(2).foreach {
-      case Seq(a, b) => assert(b >= a - 1e-9, s"objective regressed: $objs")
-      case _ => ()
-    }
-    // seeds are the k lowest ids — rerunning iters=0 is exactly reproducible
-    val seeds = Graft.kmeansCentroids(emb, col("vec_id"), col("embedding"), k = 4, iters = 0)
-      .orderBy("cid").collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-    val seeds2 = Graft.kmeansCentroids(emb, col("vec_id"), col("embedding"), k = 4, iters = 0)
-      .orderBy("cid").collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-    assert(seeds.toSeq == seeds2.toSeq)
-    assert(seeds.map(_._1).toSeq == Seq(0, 1, 2, 3))
-    // trained centroids slot straight into ivfTopK
-    val trained = Graft.kmeansCentroids(emb, col("vec_id"), col("embedding"), k = 4, iters = 2)
-    val top = Graft.ivfTopK(emb.select(col("vec_id"), asDouble.as("embedding")),
-      col("vec_id"), col("embedding"), trained, k = 3)
-    assert(top.count() > 0 && top.select("cid").distinct().count() >= 1)
-  }
-
-  test("trained IVF end-to-end: probe-all equals brute force; recall@10 ≥ 0.8 on clustered data") {
-    // Closes the trained-ANN loop (kmeansCentroids → ivfSearch probe vs
-    // topKByCosine ground truth) in the two parts that are actually
-    // engine properties:
-    //  (1) on the REAL sf0.1 fixture, nprobe = all cells must reproduce
-    //      brute force EXACTLY — the probe machinery loses nothing;
-    //  (2) the recall@10 ≥ 0.8 bar at nprobe=2/8 is measured on
-    //      deterministic CLUSTERED vectors. The fixture embeddings are
-    //      near-isotropic noise (mean within-label cosine ≈ 0.024 vs
-    //      ≈ 0.000 cross-label, measured), so no cell partitioning can
-    //      reach 0.8 there at nprobe/cells = 1/4 — on unclusterable data
-    //      a fixed recall bar grades the data, not the index.
-    val sp = spark
-    import sp.implicits._
-    val emb = graft.etl.Tables.embeddings(spark, "/root/testdata/sf0.1")
-    val asDouble = expr("transform(embedding, x -> cast(x AS double))")
-    val vecs = emb.select(col("vec_id"), asDouble.as("embedding"))
-    val cents = Graft.kmeansCentroids(emb, col("vec_id"), col("embedding"), k = 8, iters = 2)
-    val qRow = vecs.filter(col("vec_id") === 11L).select(col("embedding"))
-    val truth = Graft.topKByCosine(vecs, col("vec_id"), col("embedding"), qRow, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val all = Graft.ivfSearch(vecs, col("vec_id"), col("embedding"), cents, qRow,
-      k = 10, nprobe = 8).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(all == truth, s"probe-all must equal brute force:\n got=$all\n want=$truth")
-
-    // deterministic clustered set: 8 orthogonal centers, 100 points each,
-    // point = center + bounded sin-hash noise; id % 8 = cluster, so the
-    // lowest-id k-means seeds start one-per-cluster
-    val dim = 64
-    val clustered = (0 until 800).map { i =>
-      val c = i % 8
-      val v = Array.tabulate(dim) { d =>
-        val noise = 0.25f * math.sin(i * 31.0 + d * 7.0).toFloat
-        (if (d == c) 1.0f else 0.0f) + noise
-      }
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    val cvecs = clustered.select(col("vec_id"), asDouble.as("embedding"))
-    val ccents = Graft.kmeansCentroids(clustered, col("vec_id"), col("embedding"), k = 8, iters = 3)
-    val recalls = Seq(11L, 222L, 333L, 444L, 555L).map { qid =>
-      val q = cvecs.filter(col("vec_id") === qid).select(col("embedding"))
-      val want = Graft.topKByCosine(cvecs, col("vec_id"), col("embedding"), q, 10)
-        .collect().map(_.getLong(0)).toSet
-      val got = Graft.ivfSearch(cvecs, col("vec_id"), col("embedding"), ccents, q,
-        k = 10, nprobe = 2).collect().map(_.getLong(0)).toSet
-      (want intersect got).size / 10.0
-    }
-    val mean = recalls.sum / recalls.size
-    assert(mean >= 0.8, s"IVF recall@10 too low on clustered data: $recalls")
-  }
-
-  test("mixture-of-Gaussians recall gate: PQ(16×16) and trained IVF reach recall@10 ≥ 0.9") {
-    val sp = spark
-    import sp.implicits._
-    // Deterministic mixture of Gaussians: 8 clusters (center = one-hot
-    // comb over d % 8) × 110 points, noise from Box–Muller over sin-hash
-    // uniforms — no RNG state, same fixture every run. Each of 5 query
-    // points gets 10 planted near-duplicates (σ=0.02 vs the cluster's
-    // σ=0.25), so the TRUE top-10 is margin-separated (L2² ≈ 0.05 vs ≈ 8)
-    // and the 0.9 bar grades the INDEX, not tie-breaking luck — the
-    // failure mode the old "recall is data luck" caveat documented.
-    val dim = 64
-    val nC = 8
-    val queries = Seq(50, 151, 252, 353, 454)
-    def gauss(i: Int, d: Int, salt: Double): Double = {
-      def u(f1: Double, f2: Double) =
-        math.abs(math.sin(i * f1 + d * f2 + salt) * 43758.5453) % 1.0
-      math.sqrt(-2.0 * math.log(math.max(u(127.1, 311.7), 1e-12))) *
-        math.cos(2 * math.Pi * u(269.5, 183.3))
-    }
-    def emb(i: Int): Array[Double] = {
-      val c = i % nC
-      // ids sharing the query's residue mod 80 form its near-dup group
-      val anchor = queries.find(q => q % 80 == i % 80)
-      Array.tabulate(dim) { d =>
-        val center = if (d % nC == c) 1.0 else 0.0
-        anchor match {
-          case Some(q) => center + 0.25 * gauss(q, d, 0.0) + 0.02 * gauss(i, d, 7.3)
-          case None => center + 0.25 * gauss(i, d, 0.0)
-        }
-      }
-    }
-    // 880 ids → every mod-80 residue class holds 11 members (query + 10
-    // dups), so the full true top-10 is planted, not noise-determined
-    val n = nC * 110
-    val all = (0 until n).map(i => (i.toLong, emb(i)))
-    val vectors = all.toDF("vec_id", "emb")
-    def l2Top10(qid: Int): Set[Long] = {
-      val q = emb(qid)
-      all.filter(_._1 != qid).map { case (id, v) =>
-        (id, v.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }.sortBy { case (id, dd) => (dd, id) }.take(10).map(_._1).toSet
-    }
-    // PQ: m=16 blocks of 4 dims, 16 codewords each
-    val books = Graft.pqTrain(vectors, col("vec_id"), col("emb"), m = 16, k = 16, iters = 3)
-    val codes = Graft.pqEncode(vectors, col("vec_id"), col("emb"), books, m = 16)
-    val pqRecalls = queries.map { qid =>
-      val q = vectors.filter(col("vec_id") === qid.toLong).select(col("emb"))
-      val got = Graft.pqTopK(codes.filter(col("vec_id") =!= qid.toLong), books, q, k = 10, m = 16)
-        .collect().map(_.getLong(0)).toSet
-      (got intersect l2Top10(qid)).size / 10.0
-    }
-    assert(pqRecalls.sum / pqRecalls.size >= 0.9,
-      s"PQ(16x16) recall@10 too low: $pqRecalls")
-    // trained IVF at nprobe=2 of 8 cells, cosine ground truth
-    val cents = Graft.kmeansCentroids(vectors, col("vec_id"), col("emb"), k = 8, iters = 3)
-    val ivfRecalls = queries.map { qid =>
-      val q = vectors.filter(col("vec_id") === qid.toLong)
-        .select(col("emb").as("embedding"))
-      val want = Graft.topKByCosine(vectors.filter(col("vec_id") =!= qid.toLong),
-        col("vec_id"), col("emb"), q, 10).collect().map(_.getLong(0)).toSet
-      val got = Graft.ivfSearch(vectors.filter(col("vec_id") =!= qid.toLong),
-        col("vec_id"), col("emb"), cents, q, k = 10, nprobe = 2)
-        .collect().map(_.getLong(0)).toSet
-      (want intersect got).size / 10.0
-    }
-    assert(ivfRecalls.sum / ivfRecalls.size >= 0.9,
-      s"IVF recall@10 too low: $ivfRecalls")
   }
 
   test("saltedJoin returns exactly the plain join's rows on a skewed key") {
@@ -460,97 +264,6 @@ class ApiSpec extends SparkFixture {
       Graft.dedupClusters(pairs, "a", "b", maxIter = 1).collect()
     }
     assert(e.getMessage.contains("no fixed point"))
-  }
-
-  test("PQ is lossless on codebook-generated data: exact codebooks, codes, and ADC order") {
-    val sp = spark
-    import sp.implicits._
-    // 24 vectors, dim 8, m=4 blocks of 2; block b of vector i carries
-    // pattern (i+b) % 4 — four exactly-separated clusters per block, and
-    // the first 4 vectors cover every pattern in every block (seeding)
-    def pattern(p: Int, b: Int): Seq[Double] = Seq(p * 1.0 + b * 10, p * 2.0)
-    val vectors = (0 until 24).map { i =>
-      (i.toLong, (0 until 4).flatMap(b => pattern((i + b) % 4, b)).toArray)
-    }.toDF("vec_id", "emb")
-    val books = Graft.pqTrain(vectors, col("vec_id"), col("emb"), m = 4, k = 16 / 4, iters = 3)
-    // trained cells = the exact generating patterns (cid c seeds from
-    // vector c, whose block-b pattern is (c+b)%4)
-    val cells = books.collect().map(r =>
-      ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toSeq)).toMap
-    for (b <- 0 until 4; c <- 0 until 4)
-      assert(cells((b, c)) == pattern((c + b) % 4, b), s"cell b=$b c=$c")
-    // codes: vector i quantizes to cid i%4 in EVERY block
-    val codes = Graft.pqEncode(vectors, col("vec_id"), col("emb"), books, m = 4)
-    codes.collect().foreach { r =>
-      val id = r.getLong(0)
-      assert(r.getSeq[Int](1) == Seq.fill(4)((id % 4).toInt), s"codes of $id")
-    }
-    // ADC search: quantization is exact here, so ADC == true L2² and the
-    // top-3 for vector 5's values are exactly its residue class 1,5,9
-    val query = vectors.filter(col("vec_id") === 5).select(col("emb"))
-    val top = Graft.pqTopK(codes, books, query, k = 3, m = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(top.map(_._1).toSeq == Seq(1L, 5L, 9L), top.mkString(","))
-    assert(top.forall(_._2 == 0.0))
-  }
-
-  test("pqTrain rejects a dimension that does not split into m blocks") {
-    val sp = spark
-    import sp.implicits._
-    val vectors = Seq((1L, Array(1.0, 2.0, 3.0))).toDF("vec_id", "emb")
-    val e = intercept[IllegalArgumentException] {
-      Graft.pqTrain(vectors, col("vec_id"), col("emb"), m = 2, k = 2)
-    }
-    assert(e.getMessage.contains("not divisible"))
-  }
-
-  test("IVF-PQ composition: probe the best cell, ADC-rank inside it — exact on clustered data") {
-    val sp = spark
-    import sp.implicits._
-    // 3 DIRECTION-separated clusters (cluster c puts 100 in block c —
-    // spherical k-means needs direction, not magnitude) of 8 vectors,
-    // dim 8, m=4 blocks of 2; each block's subvector vocabulary is
-    // exactly {0, 1, 100, 101} (cluster flag + member parity), so PQ
-    // with k=8 seeds (first 8 vectors cover all 4 values per block) is
-    // lossless, and ADC distances are the true L2 distances
-    def emb(i: Int): Array[Double] =
-      Array.tabulate(8)(j => 100.0 * (if (i % 3 == j / 2) 1 else 0) + (i / 3) % 2)
-    val vectors = (0 until 24).map(i => (i.toLong, emb(i))).toDF("vec_id", "emb")
-    val centroids = Graft.kmeansCentroids(vectors, col("vec_id"), col("emb"), k = 3)
-    val books = Graft.pqTrain(vectors, col("vec_id"), col("emb"), m = 4, k = 8, iters = 3)
-    val codes = Graft.pqEncode(vectors, col("vec_id"), col("emb"), books, m = 4)
-    // query = vector 10 (cluster 1, member parity 1)
-    val query = vectors.filter(col("vec_id") === 10).select(col("emb"))
-    val cellOf = Graft.ivfTopK(vectors, col("vec_id"), col("emb"), centroids, k = 24)
-    val qCell = cellOf.filter(col("vec_id") === 10).select(col("cid")).collect()(0).getInt(0)
-    val cellIds = cellOf.filter(col("cid") === qCell).select(col("vec_id"))
-    // ADC-rank ONLY the probed cell's codes (the IVF-PQ search shape)
-    val probed = codes.join(cellIds, "vec_id")
-    val top = Graft.pqTopK(probed, books, query, k = 3, m = 4)
-      .collect().map(_.getLong(0)).toSeq
-    // PQ is lossless here, so the top-3 are exactly the brute-force top-3
-    // (exact duplicates of vector 10 — same cluster, same parity — win,
-    // tie-broken by id: 4, 10, 16)
-    val q = emb(10)
-    val brute = (0 until 24).map { i =>
-      (i.toLong, emb(i).zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
-    }.sortBy { case (id, d) => (d, id) }.take(3).map(_._1)
-    assert(brute == Seq(4L, 10L, 16L), s"construction drifted: $brute")
-    assert(top == brute, s"ivf-pq $top vs brute $brute")
-  }
-
-  test("applyClusterDedup keeps exactly the e2e decision table's keep rows") {
-    val docs = graft.etl.Tables.documents(spark, sfTiny)
-    val sh = Graft.shingleHashes(docs, col("doc_id"), col("text"))
-      .select(col("doc_id"), col("h64").as("sh"))
-    val pairs = Graft.jaccardCandidates(sh, dfCap = 20, minNum = 1, minDen = 2)
-    val clusters = Graft.dedupClusters(pairs, "doc_a", "doc_b")
-    val kept = Graft.applyClusterDedup(docs, col("doc_id"), clusters)
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    val e2eKeep = graft.etl.Registry.byName("qllm_dedup_e2e").build(spark, sfTiny)
-      .filter(col("action") === "keep")
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(kept == e2eKeep, s"diff: ${(kept -- e2eKeep) ++ (e2eKeep -- kept)}")
   }
 
   test("asofJoin tolerance: stale matches drop, in-window matches keep (merge_asof semantics)") {
@@ -612,20 +325,6 @@ class ApiSpec extends SparkFixture {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // doc 1: grams xyz yza zab abc -> 1 boiler; doc 3: qrx rxy xyz yzs -> 1
     assert(out.toSeq == Seq((1L, 4L, 1L), (2L, 4L, 1L), (3L, 4L, 1L), (4L, 4L, 0L)))
-  }
-
-  test("valueBuckets: same value -> same bucket, k cuts by cumulative count") {
-    val sp = spark
-    import sp.implicits._
-    val df = Seq(("a", 1), ("a", 1), ("a", 2), ("a", 3), ("a", 4), ("a", 5),
-      ("b", 10)).toDF("p", "v")
-    val out = Graft.valueBuckets(df, col("p"), col("v"), k = 3)
-      .select(col("p"), col("v"), col("__bucket"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    // partition a: n=6; value 1 cum=2 -> bucket (3*1)/6=0; 2 cum=3 -> 1;
-    // 3 cum=4 -> 1; 4 cum=5 -> 2; 5 cum=6 -> 2. single-row partition b -> 0
-    assert(out == Set(("a", 1, 0L), ("a", 2, 1L), ("a", 3, 1L),
-      ("a", 4, 2L), ("a", 5, 2L), ("b", 10, 0L)))
   }
 
   test("intervalOverlapJoin: exactly-once pairs — touching, bin-spanning, long, negative") {

@@ -58,9 +58,7 @@ class EdgeCaseSpec extends SparkFixture {
     assert(leftRow.isNullAt(leftRow.fieldIndex("v2")))
   }
 
-  test("api: dedupExact and asofJoin on empty inputs return empty, not errors") {
-    val empty = df(Nil, kv)
-    assert(Graft.dedupExact(empty, col("k"), col("v")).count() == 0)
+  test("api: asofJoin on empty inputs returns empty, not an error") {
     val emptyTs = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("k", LongType), StructField("t", LongType))))
     val some = df(Seq(Row(1, 5)), kv).select(col("k").cast(LongType).as("k"), col("v").cast(LongType).as("t"))
@@ -479,17 +477,6 @@ class EdgeCaseSpec extends SparkFixture {
     assert(j < 0.5, s"jaccard $j")
   }
 
-  test("valueBuckets: null values join null-safely and land in bucket 0 (nulls-first order)") {
-    val sp = spark
-    import sp.implicits._
-    val df = Seq(("a", Some(5)), ("a", None), ("a", Some(9))).toDF("p", "v")
-    val out = Graft.valueBuckets(df, col("p"), col("v"), k = 3)
-      .select(col("v"), col("__bucket"))
-      .collect().map(r => (if (r.isNullAt(0)) -1 else r.getInt(0), r.getLong(1))).toSet
-    // n=3, cum order: null(1) -> bucket 0, 5(2) -> 1, 9(3) -> 2
-    assert(out == Set((-1, 0L), (5, 1L), (9, 2L)))
-  }
-
   test("asof tolerance boundary: gap == tolerance matches, one microsecond more drops") {
     val sp = spark
     import sp.implicits._
@@ -647,6 +634,36 @@ class EdgeCaseSpec extends SparkFixture {
           r.getDouble(7)))
       // lift = n_ab · n_total / (n_a · n_b), n_total = count(DISTINCT user_id) = 4
       assert(rows.toSeq == Seq(("a", "b", 2L, 3L, 2L, 2.0 * 4.0 / (3.0 * 2.0))))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sfDir))
+  }
+
+  test("winnow hashes code points: multi-byte and non-BMP characters match a Scala rolling hash") {
+    val sfDir = java.nio.file.Files.createTempDirectory("graft_winnow_sf").toString
+    try {
+      val texts = Seq(
+        1L -> "plain ascii text that is long enough",
+        // 2-byte (é), 3-byte (日本) and 4-byte non-BMP (😀 🎉: surrogate
+        // pairs in UTF-16) characters inside and at the gram edges
+        2L -> "naïve café 日本語のテキスト 😀 résumé 🎉 end",
+        3L -> "😀😀😀😀😀😀😀😀😀😀😀😀",
+        // 10 code points (but 20 UTF-16 chars): below the 11-char minimum
+        4L -> "😀😀😀😀😀😀😀😀😀😀")
+      spark.createDataFrame(spark.sparkContext.parallelize(texts.map { case (id, t) =>
+        Row(id, t, "en", "web", t.codePointCount(0, t.length).toLong)
+      }, 2), graft.etl.Tables.documentsSchema)
+        .write.parquet(graft.etl.Tables.path(sfDir, "documents"))
+      val got = graft.etl.Registry.byName("qllm_winnow").build(spark, sfDir).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+      val want = texts.flatMap { case (id, t) =>
+        val cs = t.codePoints().toArray.map(_.toLong)
+        if (cs.length < 11) None
+        else {
+          val hs = cs.sliding(8).map(_.foldLeft(0L)((a, c) => (a * 257 + c) % 1000000007L)).toSeq
+          val fps = hs.sliding(4).map(_.min).toSeq.distinct
+          Some(id -> (fps.size.toLong, fps.min, fps.max))
+        }
+      }.toMap
+      assert(got == want)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sfDir))
   }
 

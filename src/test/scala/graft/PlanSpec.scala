@@ -776,7 +776,9 @@ class PlanSpec extends SparkFixture {
     try {
       val grid = spark.range(65536L).select(
         (col("id") % 256).as("gx"), (col("id") / 256).cast("long").as("gy"))
-      graft.api.Graft.zorderLayout(grid, col("gx"), col("gy"), files = 64, bits = 8)
+      // the OPTIMIZE ZORDER BY layout: z-ranges per file, sorted within
+      grid.withColumn("z", graft.api.Graft.zorderKey(col("gx"), col("gy"), bits = 8))
+        .repartitionByRange(64, col("z")).sortWithinPartitions(col("z")).drop("z")
         .write.mode("overwrite").parquet(s"$dir/zorder")
       grid.repartitionByRange(64, col("gx")).sortWithinPartitions(col("gx"))
         .write.mode("overwrite").parquet(s"$dir/linear")

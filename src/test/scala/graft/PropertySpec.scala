@@ -67,17 +67,6 @@ class PropertySpec extends SparkFixture {
     }
   }
 
-  test("dedup idempotence: dedup(dedup(x)) == dedup(x); keeps one row per key") {
-    samples(smallLists, 8).foreach { xs =>
-      val df = intDf(xs).withColumn("id", monotonically_increasing_id())
-      val once = Graft.dedupExact(df, col("x"), col("id"))
-      val twice = Graft.dedupExact(once, col("x"), col("id"))
-      assert(once.collect().map(_.toString).sorted.toSeq ==
-        twice.collect().map(_.toString).sorted.toSeq)
-      assert(once.count() == xs.distinct.size)
-    }
-  }
-
   test("rank values lie in [1, group size]") {
     samples(smallLists.suchThat(_.nonEmpty), 8).foreach { xs =>
       val df = intDf(xs).withColumn("g", pmod(col("x"), lit(3)))
@@ -335,8 +324,9 @@ class PropertySpec extends SparkFixture {
       // minhash: row-local signature vs the aggregate over the same shingles
       val sigLocal = Graft.minhashSignaturesLocal(docs, col("doc_id"), col("text"))
         .collect().headOption.map(_.getSeq[Long](1))
-      val sigAgg = Graft.minhashSignaturesFromHashes(
-          Graft.shingleHashes(docs, col("doc_id"), col("text")))
+      val sigAgg = Graft.shingleHashes(docs, col("doc_id"), col("text"))
+        .groupBy(col("doc_id"))
+        .agg(graft.functions.MinHashAgg.minhash_signature(col("h64"), 16).as("sig"))
         .collect().headOption.map(_.getSeq[Long](1))
       assert(sigLocal == sigAgg, s"minhash mismatch for words=$words")
       // interpreted parity of the bare expressions (filters/locals can fall
@@ -376,7 +366,7 @@ class PropertySpec extends SparkFixture {
       (0L, "alpha beta gamma delta epsilon zeta"),
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "totally different words entirely here now")).toDF("doc_id", "text")
-    val sigs = Graft.minhashSignatures(Graft.shingles(docs, col("doc_id"), col("text")))
+    val sigs = Graft.minhashSignaturesLocal(docs, col("doc_id"), col("text"))
     val cands = Graft.minhashCandidates(sigs).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     assert(cands.get((0L, 1L)).contains(1.0))
@@ -417,26 +407,6 @@ class PropertySpec extends SparkFixture {
     twice.collect().foreach { r =>
       assert(r.getAs[Long]("n_emails") == 0L && r.getAs[Long]("n_phones") == 0L,
         s"residual PII in: ${r.getAs[String]("t")}")
-    }
-  }
-
-  test("valueBuckets: bucket is monotone in value within a partition and spans [0, k)") {
-    val sp = spark
-    import sp.implicits._
-    samples(Gen.listOfN(30, Gen.chooseNum(-100, 100)), 6).foreach { xs =>
-      val df = xs.map(("p", _)).toDF("p", "v")
-      val out = Graft.valueBuckets(df, col("p"), col("v"), k = 4)
-        .select(col("v"), col("__bucket"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      out.foreach { case (_, b) => assert(b >= 0 && b < 4) }
-      val byValue = out.toSeq.sortBy(_._1)
-      byValue.zip(byValue.drop(1)).foreach { case ((v1, b1), (v2, b2)) =>
-        assert(b1 <= b2, s"bucket not monotone: ($v1,$b1) then ($v2,$b2)")
-      }
-      // same value always lands in the same bucket
-      out.groupBy(_._1).foreach { case (v, bs) =>
-        assert(bs.map(_._2).distinct.length == 1, s"value $v split across buckets")
-      }
     }
   }
 
