@@ -18,7 +18,7 @@ cd /root/repo
 STEP="${1:?usage: rung_sf100.sh gen|srp|stage|isolate|suite}"
 SF_DIR=/tmp/graft_sf100
 ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-JAVA_BASE="java $ADD_OPENS -Duser.timezone=UTC -Dlog4j2.configurationFile=file:$PWD/conf/log4j2.properties -cp target/scala-2.13/classes:/opt/spark/jars/*"
+JAVA_BASE="java $ADD_OPENS -Duser.timezone=UTC -Dlog4j2.configurationFile=file:$PWD/conf/log4j2.properties -cp target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME to the Spark install}/jars/*"
 export SPARK_GRAFT_CPUS=32
 export SPARK_GRAFT_SF_DIR=$SF_DIR
 df -h / | tail -1
