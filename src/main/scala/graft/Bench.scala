@@ -1,111 +1,74 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (SURVEY §6). Prints ONE compact JSON line the driver
-  * parses from the tail of the run's output — the line must stay well under
-  * the driver's 2000-char tail window (round 1 proved a 73-entry per-query
-  * map overflows it and fails to parse, BENCH_r01.json `parsed: null`;
-  * BENCH_r02–05 confirm the window is exactly 2000 chars), so it carries
-  * the suite total plus an adaptively-sized slowest-queries prefix
-  * (24 entries when the budget allows, fewer once the always-on
-  * isolated_detail map claims its bytes) and the 12-entry
-  * isolated re-run map. The FULL
-  * per-query map — which the round-5 verdict needs for cross-round
-  * regression diffs — goes to `bench_full_latest.json` at the repo root,
-  * a TRACKED file committed with each round, plus `target/bench_full.json`
-  * for local runs that shouldn't dirty the tree.
+/** Benchmark main (SURVEY §6). Runs three passes in one JVM:
+  *   - the suite: every declared query consumed with `.count()`; its sum is
+  *     the headline `value`, kept for cross-round continuity;
+  *   - auto-isolation: the 12 slowest suite slots re-run warm, count()-consumed;
+  *   - `materialized`: every declared query again, consumed through the
+  *     noop sink (`noop`), so no query's cost hides behind a pruned plan.
+  * `--isolate k1,k2,...` replaces all three with best-of-3 noop runs of the
+  * named queries.
+  *
+  * Prints ONE compact JSON line, which the run recorder parses from the
+  * tail of the output. The line must stay under its 2000-char tail
+  * window (a 73-entry per-query map overflowed it, BENCH_r01.json
+  * `parsed: null`), so it carries the suite total, an adaptively-sized
+  * slowest-queries prefix, the isolated map and the materialized total
+  * with its 8 slowest entries. The FULL record goes to
+  * `bench_full_latest.json` at the repo root, a TRACKED file committed
+  * with each round, plus `target/bench_full.json` for local runs that
+  * shouldn't dirty the tree.
   */
 object Bench {
 
-  /** Queries whose `.count()` plan drops operators the real execution pays
-    * (Catalyst prunes joins/windows/generates that cannot change the row
-    * count — the qllm_semdedup artifact, PERF.md round 9c: 0.2 s benched
-    * vs full pair-enumeration cost in Verify). The suite keeps the
-    * `.count()` metric for cross-round continuity, and re-benches exactly
-    * this set through a MATERIALIZING noop sink (`format("noop")` — every
-    * row produced, nothing written) into the `materialized` map, so the
-    * honest number is in the same JSON. Membership is pinned by PlanSpec's
-    * static sweep ("count-prunable queries are exactly the pinned set"): a
-    * new query whose counted plan drops operators self-identifies there. */
-  /** Queries whose count() plan prunes an expensive PROJECTION rather
-    * than a heavy operator — invisible to PlanSpec's node-class sweep
-    * (it censuses Join/Generate/Window/Aggregate/Expand and distinct
-    * aggregate functions; a Project carrying per-row native compute has
-    * none of those), but just as under-measured by a count() consumer.
-    * qllm_repetition's round-12 rewrite is the type specimen: its whole
-    * cost is the gram_run_stats projection in one narrow scan, and
-    * count() strips the projected columns down to the size(w) filter.
-    * qwin_gapfill joined the set with its round-12 segment rewrite: the
-    * lead-window and sequence-explode DRIVE cardinality so the node
-    * census sees them under count(), but the dominant costs — the
-    * closing grid-scale local sort and the decStr rendering — are
-    * exactly what count() elides. qllm_winnow (rolling-hash arrays) and
-    * qproject_expr (exact-decimal arithmetic rendered by decStr) have
-    * qllm_repetition's shape: one narrow scan whose projected columns
-    * count() drops.
-    * Members are consumed through the noop sink like the swept set;
-    * PlanSpec pins that this set stays DISJOINT from the sweep (a member
-    * the sweep starts seeing again belongs in the main list). Declared
-    * BEFORE countPrunable — object vals initialize in declaration order,
-    * and countPrunable concatenates this set. */
-  val projectionPrunable: Set[String] =
-    Set("qllm_repetition", "qllm_winnow", "qproject_expr", "qwin_gapfill")
+  /** Materializing consumption: every operator produces every row and
+    * nothing is written. `.count()` lets Catalyst drop the joins, windows,
+    * distinct aggregates and projections that cannot change the row count,
+    * so a count()-consumed slot can under-measure a query by several×. */
+  def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
 
-  val countPrunable: Set[String] = Set(
-    // every window query: a Window never changes cardinality, so count()
-    // elides the window compute itself — the whole family under-measured
-    // (qwin_gapfill moved to projectionPrunable in round 12: its segment
-    // rewrite's window/explode drive cardinality, so the node census sees
-    // them — the pruned cost is the closing sort + rendering projection)
-    "qwin_bollinger", "qwin_cusum", "qwin_dist", "qwin_drawdown", "qwin_ema",
-    "qwin_first_last", "qwin_gini", "qwin_hampel",
-    "qwin_lag_lead", "qwin_median", "qwin_ntile_dist", "qwin_ordergap",
-    // (qwin_pareto LEFT this set in round 12: its per-customer revenue
-    // frame is now eagerly checkpointed — materialized whatever the sink —
-    // so count() no longer prunes the aggregate; suite slots from here on
-    // pay the honest pipeline, the rolling_dau precedent)
-    "qwin_range_frame", "qwin_rank", "qwin_rsi",
-    "qwin_running", "qwin_scd2", "qwin_slope", "qwin_smacross", "qwin_vwap",
-    // row-preserving joins / enrichments the count plan drops
-    "qjoin_left", "qjoin_right", "qjoin_range_binned", "qjoin_spatial_grid",
-    "qjoin_theta_range", "qstream_join", "qstream_late", "qstream_funnel",
-    // aggregate/analysis pipelines with prunable upstream ops (dqaudit:
-    // column pruning strips its countDistinct functions under count(),
-    // leaving metadata-count scans — 0.33 s counted vs full-scan noop).
-    // qagg_assoc LEFT this set in round 15: the bitmask rewrite eagerly
-    // checkpoints the users-scale aggregate at build time, so the fact
-    // pipeline is materialized whatever the sink and count() prunes
-    // nothing (the qwin_pareto round-12 precedent) — its suite slots from
-    // round 15 on pay the honest pipeline and are comparable to the old
-    // `materialized` band, not the old count() slots.
-    "qagg_abtest", "qagg_distinct", "qagg_dqaudit",
-    "qagg_entropy", "qagg_fdaudit", "qagg_funnel", "qagg_hllmerge",
-    "qagg_incremental", "qagg_mad", "qagg_mom", "qagg_percentile",
-    "qagg_pivot", "qagg_rfm", "qagg_seasonality", "qagg_skew",
-    "qagg_wquantile", "qgraph_triangles",
-    // round 11: the sweep's distinct-function census (not just node
-    // classes) caught five more whose countDistinct stage count() prunes.
-    // qagg_rolling_dau LEFT this set in round 12: its rewrite has no
-    // distinct aggregate (pair-keyed min + conditional sum) and its
-    // count() plan keeps every operator (the dau > 0 filter needs the
-    // aggregates), so its round-12+ suite slots are directly comparable
-    // to the round-11 `materialized`/noop-isolate bands, not to the
-    // pruned pre-round-11 count() slots
-    "qagg_freqpairs", "qgraph_kcore",
-    "qllm_textstats", "qscan_metadata",
-    // LLM-pipeline shapes (incl. the original qllm_semdedup artifact).
-    // qllm_bigram_lm LEFT this set in round 12: with both model joins
-    // broadcast (inner, cardinality-bearing) its count() plan keeps
-    // every operator, so its suite slots are directly comparable to
-    // noop bands from here on (the qagg_rolling_dau precedent).
-    "qllm_bleu", "qllm_boilerplate", "qllm_decontam",
-    "qllm_dedup_e2e", "qllm_dsir", "qllm_dupfrac", "qllm_incr_dedup",
-    "qllm_lexdiv", "qllm_mix", "qllm_mix_temp", "qllm_novelty", "qllm_pack",
-    "qllm_semdedup", "qllm_seqs_topn",
-    "qllm_source_profile", "qllm_surprisal", "qllm_vocab", "qllm_zipf") ++
-    projectionPrunable
+  /** Comma-listed query names, refused before any timed work if one is not
+    * in the registry: a typo must not silently measure or skip nothing. */
+  def queryNames(list: String, source: String): Seq[String] = {
+    val keys = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    keys.filterNot(SparkEntry.queries.contains).foreach { k =>
+      sys.error(s"$source names unknown query '$k'")
+    }
+    keys
+  }
 
   def main(args: Array[String]): Unit = {
+    // Isolation pass (round-7 verdict item 3): suite-attributed times
+    // absorb whatever warmup/box noise lands on a query's slot, so every
+    // per-query perf claim used to need a manual re-run. Default runs:
+    // full suite, then the 12 slowest re-run warm — `queries` stays the
+    // attributed map (comparable with prior rounds), `isolated` is the
+    // steady-state cost. With an explicit `--isolate k1,k2,...` the full
+    // suite is SKIPPED: each named query runs once to warm, then three
+    // measured times in an otherwise-clean JVM — the clean
+    // instrument for single-query claims (the end-of-suite JVM carries
+    // 188 queries of heap history, which the round-8 sf1 run showed can
+    // inflate a post-suite re-run several-fold).
+    val explicitIsolate: Option[Seq[String]] = args.toSeq match {
+      case Seq("--isolate", keys, _*) =>
+        val names = queryNames(keys, "--isolate")
+        if (names.isEmpty) sys.error("--isolate needs at least one query name")
+        Some(names)
+      case _ => None
+    }
+    // SPARK_GRAFT_SKIP_KEYS: comma-listed queries excluded from a SUITE
+    // run (and its materialized/auto-isolate passes), recorded in the
+    // JSON as "skipped" so the record self-declares its reduced surface —
+    // a record with a skip list must never diff as a full-suite total.
+    // Exists for disk-contract-bound rungs: at sf100 on this box the one
+    // output-quadratic-by-contract key's shuffle spill exceeds the free
+    // disk left beside the staged extract (PERF.md round-13 addendum
+    // sizes the envelope), so the rung's suite record runs without it and
+    // the key gets its own cleared-disk isolate record instead.
+    val skipKeys: Set[String] = sys.env.get("SPARK_GRAFT_SKIP_KEYS")
+      .map(queryNames(_, "SPARK_GRAFT_SKIP_KEYS").toSet)
+      .getOrElse(Set.empty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create()
     // Warm up the executor pool, codegen pipeline AND the parquet reader
@@ -221,8 +184,8 @@ object Bench {
       gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
       s
     }
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-              consume: org.apache.spark.sql.DataFrame => Unit = _.count())
+    def timed(name: String, fn: (SparkSession, String) => DataFrame,
+              consume: DataFrame => Unit = _.count())
         : (Double, Double, Double) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val g0 = gcMillis
@@ -264,47 +227,14 @@ object Bench {
     var sinceGc = 0
     def cleanerGc(): Unit = { System.gc(); sinceGc = 0 }
     def maybeCleanerGc(): Unit = { sinceGc += 1; if (sinceGc >= 24) cleanerGc() }
-    // Isolation pass (round-7 verdict item 3): suite-attributed times
-    // absorb whatever warmup/box noise lands on a query's slot, so every
-    // per-query perf claim used to need a manual re-run. Default runs:
-    // full suite, then the 12 slowest re-run warm — `queries` stays the
-    // attributed map (comparable with prior rounds), `isolated` is the
-    // steady-state cost. With an explicit `--isolate k1,k2,...` the full
-    // suite is SKIPPED: each named query runs twice post-warmup in an
-    // otherwise-clean JVM and the second run is reported — the clean
-    // instrument for single-query claims (the end-of-suite JVM carries
-    // 188 queries of heap history, which the round-8 sf1 run showed can
-    // inflate a post-suite re-run several-fold).
-    val explicitIsolate: Option[Seq[String]] = args.toSeq match {
-      case Seq("--isolate", keys, _*) =>
-        Some(keys.split(",").toSeq.filter(SparkEntry.queries.contains))
-      case _ => None
-    }
-    // SPARK_GRAFT_SKIP_KEYS: comma-listed queries excluded from a SUITE
-    // run (and its materialized/auto-isolate passes), recorded in the
-    // JSON as "skipped" so the record self-declares its reduced surface —
-    // a record with a skip list must never diff as a full-suite total.
-    // Exists for disk-contract-bound rungs: at sf100 on this box the one
-    // output-quadratic-by-contract key's shuffle spill exceeds the free
-    // disk left beside the staged extract (PERF.md round-13 addendum
-    // sizes the envelope), so the rung's suite record runs without it and
-    // the key gets its own cleared-disk isolate record instead. A name
-    // not in the registry fails loudly before any timed work — a typo
-    // must not silently skip nothing.
-    val skipKeys: Set[String] = sys.env.get("SPARK_GRAFT_SKIP_KEYS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
     // SPARK_GRAFT_SUITE_ONLY=1: run the suite pass alone — no auto-isolate
     // re-runs, no materializing re-bench. For wall-clock-bound rungs
-    // (sf100: the instrument passes re-execute ~80 of the heaviest plans
-    // and would double a multi-hour record). Self-declaring: the JSON
+    // (sf100: the instrument passes re-execute every query and would
+    // double a multi-hour record). Self-declaring: the JSON
     // simply carries no isolated/materialized maps, so a suite-only record
     // can never be mistaken for one with instrument passes. The suite
     // `queries` map — the cross-round comparison surface — is complete.
     val suiteOnly = sys.env.get("SPARK_GRAFT_SUITE_ONLY").exists(_ == "1")
-    skipKeys.filterNot(SparkEntry.queries.contains).foreach { k =>
-      sys.error(s"SPARK_GRAFT_SKIP_KEYS names unknown query '$k'")
-    }
     // per-suite-slot GC seconds, FILE record only (the warmup-vs-hygiene
     // attribution instrument — see the gcMillis note above)
     val suiteGc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -340,45 +270,15 @@ object Bench {
     // the de-noised instrument. Auto-isolation after a full suite stays
     // single-run — it is a breadth instrument, and tripling it would add
     // minutes of suite cost at sf10.
-    // SPARK_GRAFT_ISOLATE_RUNS widens the series for steady-state hunts:
-    // the srp_lsh A/B showed a pair-quadratic query's first runs carry
-    // JIT/GC ramp (sf30 CPU 7066 → 3173 → 2139 s across three runs of
-    // IDENTICAL code) — a best-of-3 of that series is not yet converged.
-    // Parsed defensively (round-12 advice): a malformed value must fail
-    // loudly before any timed work, and a <= 0 value must not silently
-    // produce an empty timing series.
-    val isolateRuns =
-      if (explicitIsolate.isDefined)
-        sys.env.get("SPARK_GRAFT_ISOLATE_RUNS").map { s =>
-          val n = s.trim.toIntOption.getOrElse(
-            sys.error(s"SPARK_GRAFT_ISOLATE_RUNS must be an integer, got '$s'"))
-          // <= 0 fails as loudly as a malformed string (round-13 advice:
-          // the old max(1, n) clamp turned a typo like -3 into a silent
-          // 1-sample series, gutting the best-of-3 instrument)
-          if (n <= 0)
-            sys.error(s"SPARK_GRAFT_ISOLATE_RUNS must be >= 1, got $n")
-          n
-        }.getOrElse(3)
-      else 1
-    // Explicit --isolate of a COUNT-PRUNABLE query consumes through the
-    // noop sink, not count(): isolating e.g. qllm_semdedup with count()
-    // would time the pruned plan — exactly the under-measurement the
-    // `materialized` map exists to correct (round-10 verdict task 1 asks
-    // for clean isolate bands OF the materialized costs). Auto-isolation
-    // keeps count() so its cross-round continuity with prior `isolated`
-    // records holds; the JSON carries a per-query `isolate_consume` map
-    // ("noop"|"count") so a cross-round isolate diff knows which
-    // instrument produced each number (round-11 advice: the key was
-    // documented here but never emitted, so noop-sink isolates of
-    // prunable queries were indistinguishable from historical count()
-    // records in the JSON alone).
-    def isoConsumeName(name: String): String =
-      if (explicitIsolate.isDefined && countPrunable.contains(name)) "noop"
-      else "count"
-    val isoConsume: String => (org.apache.spark.sql.DataFrame => Unit) = name =>
-      if (isoConsumeName(name) == "noop")
-        (df => df.write.mode("overwrite").format("noop").save())
-      else (df => { df.count(); () })
+    val isolateRuns = if (explicitIsolate.isDefined) 3 else 1
+    // An explicit --isolate consumes through the noop sink: it is the clean
+    // instrument for single-query claims, and a count()-consumed isolate
+    // would time whatever plan Catalyst pruned. Auto-isolation keeps
+    // count(), because it re-times suite slots and must stay comparable
+    // with them. The JSON's scalar `isolate_consume` names the rule used.
+    val isolateConsume = if (explicitIsolate.isDefined) "noop" else "count"
+    val isoConsume: DataFrame => Unit =
+      if (explicitIsolate.isDefined) noop else _.count()
     // clean instrument at each phase boundary: the isolate and materialized
     // passes re-measure single queries in the end-of-suite JVM, the exact
     // spot the driver's r14 record showed 3–5× contamination
@@ -389,23 +289,21 @@ object Bench {
         else {
           val failedBefore = failed.size
           // warm the exact subtree first
-          timed(name, SparkEntry.queries(name), isoConsume(name))
+          timed(name, SparkEntry.queries(name), isoConsume)
           if (failed.size > failedBefore) None
           else {
             val runs = (1 to isolateRuns)
-              .map(_ => timed(name, SparkEntry.queries(name), isoConsume(name)))
+              .map(_ => timed(name, SparkEntry.queries(name), isoConsume))
             if (failed.size > failedBefore) None else Some(name -> runs)
           }
         }
       }
     val isolated = isolatedDetail.map { case (n, runs) => n -> runs.map(_._1).min }
-    // Materializing re-bench of the count-prunable set (countPrunable
-    // scaladoc): `.count()` lets Catalyst drop operators that can't change
-    // the row count, so these queries' suite slots under-measure. A noop
-    // sink forces every operator to produce every row without write cost;
-    // the `materialized` map is the honest number beside the continuity
-    // metric. Skipped in --isolate mode (that instrument times what it's
-    // told) and once the context is dead.
+    // Materializing re-bench of every query through the noop sink (see
+    // `noop`): the `materialized` map is the full-work number beside the
+    // count()-consumed continuity metric. Skipped in --isolate mode (that
+    // instrument times what it's told), in suite-only mode and once the
+    // context is dead.
     // A failure in this INSTRUMENT pass must not report the query itself
     // as failed: its count()-consumed suite slot already succeeded, and
     // the cross-round "errors":0 continuity signal must track query
@@ -415,12 +313,11 @@ object Bench {
     if (explicitIsolate.isEmpty) cleanerGc()
     val materialized: Seq[(String, Double)] =
       if (explicitIsolate.isDefined || suiteOnly) Seq.empty
-      else Bench.countPrunable.toSeq.sorted.filterNot(skipKeys.contains).flatMap { name =>
-        if (spark.sparkContext.isStopped || !SparkEntry.queries.contains(name)) None
+      else SparkEntry.queries.keys.toSeq.sorted.filterNot(skipKeys.contains).flatMap { name =>
+        if (spark.sparkContext.isStopped) None
         else {
           val failedBefore = failed.size
-          val dt = timed(name, SparkEntry.queries(name),
-            _.write.mode("overwrite").format("noop").save())._1
+          val dt = timed(name, SparkEntry.queries(name), noop)._1
           maybeCleanerGc()
           if (failed.size > failedBefore) {
             materializeFailed ++= failed.drop(failedBefore)
@@ -515,17 +412,9 @@ object Bench {
     // n=3 explicit isolates report min under `isolated` (biased low vs the
     // single samples every pre-round-10 record holds) — annotate the
     // sampling AND the consumption instrument so cross-round isolate
-    // diffs know what they're comparing. The FILE record carries the
-    // per-query map; stdout (2000-char tail budget) collapses to the
-    // scalar "count" in auto mode, where consumption is uniform.
-    val isoConsumeMapJson = isolated.map { case (k, _) =>
-      "\"" + k + "\":\"" + isoConsumeName(k) + "\""
-    }.mkString("{", ",", "}")
-    def isoJsonWith(consume: String) =
-      s""","isolate_runs":$isolateRuns,"isolate_consume":$consume,"isolated":${toJson(isolated)}"""
-    val isoJson = isoJsonWith(isoConsumeMapJson)
-    val isoJsonStdout =
-      if (explicitIsolate.isDefined) isoJson else isoJsonWith("\"count\"")
+    // diffs know what they're comparing.
+    val isoJson =
+      s""","isolate_runs":$isolateRuns,"isolate_consume":"$isolateConsume","isolated":${toJson(isolated)}"""
     // per-run (wall, cpu) detail for EVERY record that has isolates — the
     // n=3 min/median/cpu instrument the heavy-tail BASELINE entries cite.
     // `series_index` makes each sample's position in ONE JVM's run series
@@ -545,8 +434,7 @@ object Bench {
           "],\"cpu\":[" + runs.map(r => r3(r._2)).mkString(",") +
           "],\"gc\":[" + runs.map(r => r3(r._3)).mkString(",") + "]}"
       }.mkString("{", ",", "}")}"""
-    // The FILE record carries the full materialized map (73 keys as of
-    // round 11 — countPrunable is the source of truth); the
+    // The FILE record carries the full materialized map (every query); the
     // stdout line (driver-parsed from a 2000-char tail window — the
     // round-1 overflow lesson) carries the total + the 8 slowest entries.
     val matJson = if (materialized.isEmpty) "" else s""","materialized":${toJson(materialized)}"""
@@ -587,7 +475,7 @@ object Bench {
     // printed 19 phantom "dropped_from_bench" rows — the detail's value is
     // forensic, and the tracked bench_full_latest.json carries it intact.
     def stdoutLine(nSlow: Int) =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$errJson$skipJson$matFailJson$phaseJsonStdout,"queries":${toJson(slowestAll.take(nSlow))}$isoJsonStdout$matJsonStdout,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size}$errJson$skipJson$matFailJson$phaseJsonStdout,"queries":${toJson(slowestAll.take(nSlow))}$isoJson$matJsonStdout,"sf":"$sfDir"}"""
     val line = Seq(24, 16, 12, 8, 4, 0).map(stdoutLine)
       .find(_.length <= 1950).getOrElse(stdoutLine(0))
     println(line)

@@ -19,9 +19,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf30 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.StageProbe qgraph_pagerank"
   *
-  * Consumption mirrors Bench: a materializing noop sink for the
-  * countPrunable set, count() otherwise, so stage shapes match the
-  * numbers in the tracked records.
+  * Consumption is Bench's noop sink (`Bench.noop`), so every operator of
+  * the query runs and the stage shapes match the `materialized` record.
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
@@ -46,29 +45,23 @@ object StageProbe {
           f"shufW=${m.shuffleWriteMetrics.bytesWritten / 1e9}%7.3fG " +
           f"spillM=${m.memoryBytesSpilled / 1e9}%7.3fG " +
           f"spillD=${m.diskBytesSpilled / 1e9}%7.3fG  ${i.name.take(80)}%s")
-        // optional stage-identification detail: the operator scopes of the
-        // stage's RDDs — the name line (a CompletableFuture lambda under
-        // AQE) does not say WHICH plan fragment a stage executes
-        if (sys.env.contains("SPARK_GRAFT_PROBE_DETAILS"))
-          println("    | " + i.rddInfos.sortBy(_.id)
-            .flatMap(r => r.scope.map(_.name)).distinct.mkString(" <- "))
+        // the operator scopes of the stage's RDDs: the name line (a
+        // CompletableFuture lambda under AQE) does not say WHICH plan
+        // fragment a stage executes
+        println("    | " + i.rddInfos.sortBy(_.id)
+          .flatMap(r => r.scope.map(_.name)).distinct.mkString(" <- "))
       }
     })
 
     val q = graft.etl.Registry.byName.getOrElse(name,
       sys.error(s"unknown query: $name (see Registry.all)"))
-    val consume: org.apache.spark.sql.DataFrame => Unit =
-      if (Bench.countPrunable.contains(name))
-        df => df.write.mode("overwrite").format("noop").save()
-      else df => { df.count(); () }
-
     // fixture staging + first-run codegen land in the warmup phase so the
     // measured phase's stages carry steady-state numbers only
     phase = "warmup"
-    consume(q.build(spark, sfDir))
+    Bench.noop(q.build(spark, sfDir))
     phase = "measured"
     val t0 = System.nanoTime()
-    consume(q.build(spark, sfDir))
+    Bench.noop(q.build(spark, sfDir))
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"[probe total] $name measured wall=$wall%.2f s  (sf=$sfDir, local[${GraftSession.cpus}])")
     spark.stop()

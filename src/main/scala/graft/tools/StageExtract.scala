@@ -16,11 +16,10 @@ import graft.etl.ExtractFixtures
   *     graft.tools.StageExtract /tmp/graft_sf100 [step ...]
   *
   * Steps default to all; naming a subset stages just those (order kept).
-  * SPARK_GRAFT_STAGE_CODEC overrides spark.io.compression.codec for the
-  * STAGING session only (zstd ≈ 1.5× smaller shuffle transients than the
-  * lz4 default — the staged parquet/csv outputs are byte-identical
-  * either way, parquet codecs are a separate setting, so timed sessions
-  * never see a difference).
+  * SPARK_GRAFT_STAGE_CONF adds session confs for the STAGING session only.
+  * `spark.io.compression.codec=zstd` there makes shuffle transients ≈ 1.5×
+  * smaller than the lz4 default and leaves the staged outputs
+  * byte-identical, so timed sessions never see a difference.
   */
 object StageExtract {
   /** Staging shuffles (the orderkey self-join inside copurchase edges and
@@ -59,8 +58,7 @@ object StageExtract {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val only = args.drop(1).toSet
     val cpus = graft.GraftSession.cpus
-    val parts = sys.env.get("SPARK_GRAFT_STAGE_PARTS").map(_.toInt)
-      .getOrElse(sizedShufflePartitions(sfDir, cpus))
+    val parts = sizedShufflePartitions(sfDir, cpus)
     val b = graft.GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", parts.toLong)
       // 8m, NOT 16m: G1 regions top out at 32 MB, so 16 MB sorter pages
@@ -70,15 +68,12 @@ object StageExtract {
       // waiting for GCLocker too often allocating 2097154 words",
       // stage_sf100_b/_c). Half-region pages never go humongous; pair
       // with -XX:G1HeapRegionSize=32m on the staging JVM.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_STAGE_PAGE", "8m"))
+      .config("spark.buffer.pageSize", "8m")
       // drive the weak-ref cleaner aggressively: staging JVMs are big-heap
       // and shuffle-heavy, so finished shuffles' files otherwise outlive
       // their step and stack up against the disk budget (see the step-loop
       // note below)
       .config("spark.cleaner.periodicGC.interval", "60s")
-    sys.env.get("SPARK_GRAFT_STAGE_CODEC")
-      .foreach(c => b.config("spark.io.compression.codec", c))
     // extra session confs, "k=v;k=v" — the disk-bound rungs trade the
     // staging JVM's heap against sort-spill bytes (e.g. a high
     // spark.memory.fraction keeps the sf100 lineitem bucketed-write sort

@@ -466,61 +466,6 @@ class PlanSpec extends SparkFixture {
     assert(got == naive, "tiled wedge join diverged from the naive enumeration")
   }
 
-  test("count-prunable queries are exactly the pinned set (materializing bench mode)") {
-    // Bench consumes via .count(), and Catalyst legitimately drops
-    // operators that cannot change the row count — for qllm_semdedup it
-    // pruned the whole pair-enumeration join, so the benched 0.2 s was an
-    // artifact (PERF.md round 9c). This sweep compares each query's
-    // optimized plan against its .count() plan (node classes that carry
-    // real distributed work: Join/Generate/Window/Aggregate/Expand —
-    // Sort is deliberately excluded: count() always elides a top-level
-    // orderBy, which is output-presentation cost, not the dropped-compute
-    // artifact this instrument exists for) and pins the affected set.
-    // Bench re-benches exactly Bench.countPrunable through a noop sink
-    // (the `materialized` map); a new count-prunable query fails HERE so
-    // its author adds it to the pinned set instead of shipping a silently
-    // under-measured bench slot.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Generate, Join, LogicalPlan, Window => LWindow}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-    // An Aggregate counts 1 + its DISTINCT aggregate functions: column
-    // pruning under count() can strip a countDistinct wholesale — dropping
-    // the distinct's entire extra aggregation stage (and its shuffle)
-    // while the Aggregate NODE survives, so a node-class census alone
-    // misses it (found round 11: qagg_dqaudit's counted plan kept all
-    // three 1-row Aggregates yet ran 0.33 s where the noop sink pays the
-    // full scans — the distinct functions had been pruned to nothing).
-    // Non-distinct functions are deliberately not counted: count() strips
-    // those too, but they are per-row arithmetic on an already-paid
-    // scan/shuffle, not a dropped operator.
-    def heavy(p: LogicalPlan): Int = p.collect {
-      case n: Aggregate => 1 + n.aggregateExpressions.flatMap(_.collect {
-        case ae: AggregateExpression if ae.isDistinct => ae
-      }).size
-      case _: Join | _: Generate | _: LWindow | _: Expand => 1
-    }.sum
-    val found = Registry.all.flatMap { q =>
-      val df = q.build(spark, sfTiny)
-      val fullOps = heavy(df.queryExecution.optimizedPlan)
-      // Dataset.count() executes groupBy().count() — one extra global
-      // Aggregate on top of the query's own plan when nothing is pruned
-      val countOps = heavy(df.groupBy().count().queryExecution.optimizedPlan)
-      if (countOps < fullOps + 1) Some(q.name) else None
-    }.toSet
-    // projectionPrunable members are count-prunable for a reason this
-    // node-class sweep cannot see (an expensive Project stripped under
-    // count() — qllm_repetition's row-local gram stats); they are pinned
-    // separately in Bench and must stay INVISIBLE to the sweep — one the
-    // sweep starts seeing belongs in the main list, not there.
-    val swept = graft.Bench.countPrunable -- graft.Bench.projectionPrunable
-    assert(found == swept,
-      s"count-prunable sweep drifted from the pinned set.\n" +
-        s"  newly prunable: ${(found -- swept).toSeq.sorted.mkString(", ")}\n" +
-        s"  no longer prunable: ${(swept -- found).toSeq.sorted.mkString(", ")}")
-    assert(graft.Bench.projectionPrunable.subsetOf(graft.Bench.countPrunable) &&
-      graft.Bench.projectionPrunable.intersect(found).isEmpty,
-      "projectionPrunable must be inside countPrunable and invisible to the sweep")
-  }
-
   test("qwin_gapfill: segment form — one exchange, no join, local final sort") {
     // round 12 replaced the grid-explode + left-join + fill-window shape
     // (66 GB of sf30 spill; the window subtree ran twice under the range

@@ -92,24 +92,30 @@ class RegistrySpec extends SparkFixture {
     assert(sim == 1.0)
     // every other session in src/main comes from GraftSession; GenData keeps
     // its own because its session defines the generated data
-    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
-      .filter(_.toString.endsWith(".scala"))
+    val builders = sources("src/main", ".scala")
       .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder("))
       .map(root.relativize(_).toString).toSet
     assert(builders.subsetOf(Set("GraftSession.scala", "tools/GenData.scala")), builders)
   }
 
+  /** Scala source with comments stripped, so a doc mention is not code. */
+  private def code(f: java.nio.file.Path): String = java.nio.file.Files.readString(f)
+    .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
+
+  /** Regular files under `root` whose names end in `suffix`. */
+  private def sources(root: String, suffix: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Paths.get(root)
+    if (!java.nio.file.Files.exists(p)) Seq.empty
+    else java.nio.file.Files.walk(p).iterator.asScala
+      .filter(f => java.nio.file.Files.isRegularFile(f) && f.toString.endsWith(suffix)).toSeq
+  }
+
   test("every public Graft operator has a caller in src/main") {
     // the operator surface is what the declared queries reach; a public
     // def nothing in src/main calls is library surface no gate exercises.
-    // Comments are stripped first, so a doc mention is not a caller.
-    import scala.jdk.CollectionConverters._
-    def code(f: java.nio.file.Path): String = java.nio.file.Files.readString(f)
-      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
-    val main = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).map(code).mkString("\n")
+    val main = sources("src/main", ".scala").map(code).mkString("\n")
     val ops = "(?m)^  def (\\w+)".r
       .findAllMatchIn(code(java.nio.file.Paths.get("src/main/scala/graft/api/Graft.scala")))
       .map(_.group(1)).toSeq.distinct
@@ -118,6 +124,28 @@ class RegistrySpec extends SparkFixture {
     }
     assert(uncalled.isEmpty, s"public Graft operators with no caller in src/main: " +
       uncalled.mkString(", "))
+  }
+
+  test("every SPARK_GRAFT_ knob read in src/main is set by a script, test or build file") {
+    // a knob nothing sets is a code path no run exercises; a new one must
+    // arrive together with the script, test or build line that sets it
+    val knob = "SPARK_GRAFT_[A-Z_]+".r
+    val read = knob.findAllIn(sources("src/main", ".scala").map(code).mkString("\n")).toSet
+    val setters = (sources("scripts", "") ++ sources("src/test", ".scala") ++
+      sources(".claude", "") ++ sources("build.sbt", "") ++
+      sources("perfbench", ".py").filter(_.getParent.endsWith("perfbench")))
+      .map(java.nio.file.Files.readString).mkString("\n")
+    val unset = read.filterNot(k => s"\\b$k\\b".r.findFirstIn(setters).isDefined)
+    assert(unset.isEmpty, s"knobs read in src/main that nothing sets: " +
+      unset.toSeq.sorted.mkString(", "))
+  }
+
+  test("Bench.queryNames parses known names and refuses an unknown one") {
+    assert(graft.Bench.queryNames(" qagg_percentile,,qwin_rank ", "--isolate") ==
+      Seq("qagg_percentile", "qwin_rank"))
+    val e = intercept[RuntimeException](
+      graft.Bench.queryNames("qagg_percentile,qagg_percentlie", "--isolate"))
+    assert(e.getMessage.contains("'qagg_percentlie'"))
   }
 
   test("entry() returns the flagship with rows > 0") {
