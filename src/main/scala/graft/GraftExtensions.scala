@@ -1,18 +1,19 @@
 package graft
 
 import graft.functions.{CosineSimilarity, NgramHashChain, NgramHashes}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Spark extension entry point: registers graft's native functions into the
-  * session's FunctionRegistry so plain SQL text can call them.
+  * session's FunctionRegistry so plain SQL text can call them, and graft's
+  * planner strategy and optimizer rules.
   *
-  * Injected at session build: [[GraftSession]] does it, and so does
-  * `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.GraftExtensions`) on any other builder.
+  * Registration is automatic: `META-INF/services` names this class as a
+  * `SparkSessionExtensionsProvider`, so every session built in a JVM with
+  * graft on its classpath carries it, whichever builder made the session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.cosineSimilarityDescriptor)
     ext.injectFunction(GraftExtensions.ngramHashesDescriptor)
@@ -21,6 +22,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // optimizer extension: naive integer band joins → binned equi-joins
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
+    // AQE runtime rule: a global sort over a small materialized input runs
+    // in one task, with no range exchange and its sampling job
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortOnePartition)
   }
 }
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one way to build a graft session. Bench, Verify, StageProbe,
   * Explain, the tools and the test fixture all plan queries under these
   * confs, so a plan read off one of them is the plan the others run.
-  * Extensions are injected here, at build time: no query build registers
-  * anything on the session it is given. */
+  * Extensions need no call here: [[GraftExtensions]] registers itself on
+  * every session through Spark's ServiceLoader, and no query build
+  * registers anything on the session it is given. */
 object GraftSession {
 
   /** Local thread count: `SPARK_GRAFT_CPUS` when set, else the box's cores.
@@ -46,7 +47,6 @@ object GraftSession {
       // [[graft.etl.Tables.events]] converts. It touches no other type.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
 
   /** A session with the shared confs and WARN logging. */
   def create(cpus: Int = cpus): SparkSession = {

@@ -1,33 +1,55 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.spark.sql.SparkSession
 
 /** Table statistics read from parquet metadata on the driver, never from a
   * Spark job: sizing a layout must not cost a scan of the data it sizes. */
 object TableStats {
 
-  /** Row count of a parquet dataset — one file, or a directory tree of part
-    * files (partition subdirectories included) — summed from the footers.
-    * Hidden entries (`_SUCCESS`, `_GRAFT_FIXTURE_OK`, `.crc` checksums)
-    * are skipped, as Spark's file index skips them. Files are opened with
-    * the session's Hadoop configuration, so the footers come from the same
-    * filesystem a Spark read of `path` would use. */
+  /** Row count of a parquet dataset, summed from the footers of its data
+    * files. */
   def rows(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path).map(f => footer(conf, f)(_.getRecordCount)).sum
+  }
+
+  /** Unit of the timestamp annotation on INT64 `column`, read from the first
+    * data file's footer (a writer never mixes units within one dataset);
+    * None for an INT64 with no timestamp annotation. */
+  def timestampUnit(spark: SparkSession, path: String, column: String): Option[TimeUnit] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = dataFiles(conf, path).nextOption().getOrElse(
+      throw new IllegalArgumentException(s"no parquet data files under $path"))
+    footer(conf, first)(_.getFileMetaData.getSchema.getType(Seq(column): _*)
+      .asPrimitiveType().getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => Some(t.getUnit)
+        case _ => None
+      })
+  }
+
+  /** Data files of a parquet dataset — one file, or a directory tree of
+    * part files (partition subdirectories included), in name order. Hidden
+    * entries (`_SUCCESS`, `_GRAFT_FIXTURE_OK`, `.crc` checksums) are
+    * skipped, as Spark's file index skips them. `conf` is the session's
+    * Hadoop configuration, so the files come from the same filesystem a
+    * Spark read of `path` would use. */
+  private def dataFiles(conf: Configuration, path: String): Iterator[Path] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    def footerRows(f: Path): Long = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try reader.getRecordCount finally reader.close()
-    }
-    def walk(dir: Path): Long = fs.listStatus(dir).iterator
+    def walk(dir: Path): Iterator[Path] = fs.listStatus(dir).sortBy(_.getPath.getName).iterator
       .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-      .map(s => if (s.isDirectory) walk(s.getPath) else footerRows(s.getPath))
-      .sum
-    if (fs.getFileStatus(p).isDirectory) walk(p) else footerRows(p)
+      .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator.single(s.getPath))
+    if (fs.getFileStatus(p).isDirectory) walk(p) else Iterator.single(p)
+  }
+
+  private def footer[T](conf: Configuration, f: Path)(read: ParquetFileReader => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try read(reader) finally reader.close()
   }
 
   /** Partitions that give each task about `rowsPerTask` of `rows`:

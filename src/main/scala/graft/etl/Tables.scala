@@ -171,7 +171,7 @@ object Tables {
     * it on the session it is given. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    if (eventsTsIsNanos(d)) {
+    if (eventsTsIsNanos(s, d)) {
       require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean,
         s"$d/events.parquet stores ts as TIMESTAMP(NANOS), which reads only with " +
           "spark.sql.legacy.parquet.nanosAsLong=true: build the session with graft.GraftSession")
@@ -184,37 +184,14 @@ object Tables {
     } else table(s, d, "events")
   }
 
-  /** One footer read per directory: is events.ts physical NANOS? */
+  /** One footer read per directory: is events.ts physical NANOS? A plain
+    * INT64 with no timestamp annotation counts as nanos: only the nanos era
+    * shipped that. */
   private val tsNanosCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def eventsTsIsNanos(d: String): Boolean =
-    tsNanosCache.computeIfAbsent(d, dir => {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      // `events.parquet` may be a single FILE (the driver's layout) or a
-      // DIRECTORY of part files (any Spark-written dataset, e.g. the
-      // GenData scale fixtures) — footer-sniff the first data file either
-      // way. One footer suffices: a writer never mixes ts precisions
-      // within one dataset.
-      var path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val fs = path.getFileSystem(conf)
-      if (fs.getFileStatus(path).isDirectory) {
-        path = fs.listStatus(path).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-          .sortBy(_.getName).headOption
-          .getOrElse(throw new IllegalArgumentException(
-            s"no parquet data files under $dir/events.parquet"))
-      }
-      val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(input)
-      try {
-        val ts = reader.getFileMetaData.getSchema.getType(Seq("ts"): _*)
-          .asPrimitiveType().getLogicalTypeAnnotation
-        ts match {
-          case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS
-          case _ => true // plain INT64 epoch: only the nanos era shipped that
-        }
-      } finally reader.close()
-    })
+  private def eventsTsIsNanos(s: SparkSession, d: String): Boolean =
+    tsNanosCache.computeIfAbsent(d, dir =>
+      TableStats.timestampUnit(s, path(dir, "events"), "ts")
+        .forall(_ == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS))
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -50,7 +50,7 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: AsofJoin → AsofJoinExec. Injected at session build by
+/** Planner rule: AsofJoin → AsofJoinExec. Injected into every session by
   * [[graft.GraftExtensions]]. */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -170,11 +170,13 @@ object AsofJoinNative {
   /** Inner as-of join of `right` against `left` on `key`/`ts` via the
     * native operator; returns right's columns plus `asof_ts`. The session
     * must carry [[AsofJoinStrategy]], which [[graft.GraftExtensions]]
-    * injects at build time; without it the node has no physical plan. */
+    * injects into every session whose JVM has graft on its classpath;
+    * without it the node has no physical plan. */
   def apply(spark: SparkSession, left: DataFrame, right: DataFrame,
       key: String, ts: String, tolerance: Option[Long] = None): DataFrame = {
     require(spark.sessionState.planner.strategies.contains(AsofJoinStrategy),
-      "AsofJoinNative needs a session built with GraftExtensions (see graft.GraftSession)")
+      "AsofJoinNative needs a session carrying graft.GraftExtensions, which " +
+        "registers itself through META-INF/services when graft is on the classpath")
     // Self-join safety: both sides often derive from the SAME relation, so
     // their attributes share expr-ids; DeduplicateRelations would re-id one
     // subtree and strand the ids this node captured. Aliasing every column

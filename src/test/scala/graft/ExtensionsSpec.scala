@@ -1,13 +1,21 @@
 package graft
 
-import graft.etl.Tables
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import graft.etl.{Registry, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** GraftExtensions, injected at session build: the native functions are
   * callable from SQL text and agree exactly with the Column-API entry
   * points, and the band-join rule rewrites without changing results. The
   * session always carries the rule, so every band-join reference below is
   * computed in plain Scala from the collected inputs.
+  *
+  * SmallSortOnePartition is an AQE runtime rule: it acts only while a query
+  * runs, so its tests read the final adaptive plan after execution.
   */
 class ExtensionsSpec extends SparkFixture {
 
@@ -152,5 +160,89 @@ class ExtensionsSpec extends SparkFixture {
     val got = j.select(col("rid"), col("lid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got == naive, s"size-aware orientation changed results")
+  }
+
+  /** Queries whose closing global sort runs over a small materialized
+    * input at sf0.1, so the rule drops their range exchange. */
+  private val smallSortQueries = Seq("qagg_approxhll", "qagg_argmax", "qagg_groupingsets",
+    "qagg_mode", "qagg_ohlc", "qjoin_left", "qscan_text", "qsink_json",
+    "qstream_tumbling", "qwin_bollinger")
+
+  /** The final part of an executed adaptive plan's string (the initial
+    * plan printed below it still shows the exchanges AQE replaced). */
+  private def finalPlan(p: String): String = {
+    assert(p.contains("== Final Plan =="), s"no final adaptive plan:\n$p")
+    p.substring(p.indexOf("== Final Plan =="), p.indexOf("== Initial Plan =="))
+  }
+
+  /** The final adaptive plan of `df` consumed through the noop sink, as the
+    * session's listener sees the write after it ran. */
+  private def noopPlan(df: DataFrame): String = {
+    val plans = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.put(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.put(s"failed: $e")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Bench.noop(df)
+      Iterator.continually(plans.poll(30, TimeUnit.SECONDS))
+        .map(p => if (p == null) fail("no plan reached the listener") else p)
+        .find(p => p.contains("AdaptiveSparkPlan") || p.startsWith("failed"))
+        .map(finalPlan).get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs `body` with the SQL conf `k` set to `v`, then restores it. */
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("SmallSortOnePartition: qagg_argmax through the noop sink plans no range exchange") {
+    val p = noopPlan(Registry.byName("qagg_argmax").build(spark, sfTiny))
+    assert(!p.contains("rangepartitioning"), s"range exchange kept:\n$p")
+    assert(p.contains("Coalesce 1"), s"rule did not fire:\n$p")
+  }
+
+  test("SmallSortOnePartition: the small-sort queries collect the same rows in the same order") {
+    // qset_except_all sorts the output of a replicaterows Generate, whose
+    // size estimate ignores the replication: its range exchange stays
+    (smallSortQueries :+ "qset_except_all").foreach { name =>
+      val q = Registry.byName(name)
+      val df = q.build(spark, sfTiny)
+      val got = df.collect().toSeq
+      val p = finalPlan(df.queryExecution.executedPlan.toString)
+      // once its range exchange has run, the rule must not wrap the sort
+      val fired = p.contains("Coalesce 1") && !p.contains("rangepartitioning")
+      val left = !p.contains("Coalesce 1") && p.contains("rangepartitioning")
+      assert(if (name == "qset_except_all") left else fired,
+        s"$name: range exchange kept or dropped against the rule's guards:\n$p")
+      // with AQE off the runtime rule cannot run: the static range-sorted plan
+      val want = withConf("spark.sql.adaptive.enabled", "false") {
+        q.build(spark, sfTiny).collect().toSeq
+      }
+      assert(got == want, s"$name: one-task sort changed rows or their order")
+    }
+  }
+
+  test("SmallSortOnePartition: an input above AQE's one-partition size keeps its range exchange") {
+    val p = withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
+      noopPlan(Registry.byName("qagg_argmax").build(spark, sfTiny))
+    }
+    assert(p.contains("rangepartitioning"), s"range exchange dropped:\n$p")
+  }
+
+  test("SmallSortOnePartition: a sort under a limit is left to TakeOrderedAndProject") {
+    val df = spark.range(0, 1000).groupBy((col("id") % 37).as("k")).count()
+      .orderBy(desc("count"), asc("k")).limit(5)
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val p = finalPlan(df.queryExecution.executedPlan.toString)
+    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(!p.contains("Coalesce 1"), s"rule rewrote a sort under a limit:\n$p")
+    assert(rows == Seq((0L, 28L), (1L, 27L), (2L, 27L), (3L, 27L), (4L, 27L)))
   }
 }

@@ -99,6 +99,21 @@ class RegistrySpec extends SparkFixture {
     assert(builders.subsetOf(Set("GraftSession.scala", "tools/GenData.scala")), builders)
   }
 
+  test("one way to register extensions: ServiceLoader finds GraftExtensions, nothing else registers") {
+    // a second registration path would inject the rules twice on one
+    // session, or carry them on some sessions and not on others
+    val main = sources("src/main", ".scala").map(f => f -> code(f))
+    val calls = main.collect {
+      case (f, c) if c.contains("withExtensions(") || c.contains("spark.sql.extensions") => f
+    }
+    assert(calls.isEmpty, s"extensions registered outside META-INF/services: $calls")
+    import scala.jdk.CollectionConverters._
+    val providers = java.util.ServiceLoader
+      .load(classOf[org.apache.spark.sql.SparkSessionExtensionsProvider])
+      .iterator.asScala.map(_.getClass.getName).toSeq
+    assert(providers.count(_ == "graft.GraftExtensions") == 1, providers)
+  }
+
   /** Scala source with comments stripped, so a doc mention is not code. */
   private def code(f: java.nio.file.Path): String = java.nio.file.Files.readString(f)
     .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("(?m)//.*$", "")
