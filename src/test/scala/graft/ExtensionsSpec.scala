@@ -163,7 +163,8 @@ class ExtensionsSpec extends SparkFixture {
   }
 
   /** Queries whose closing global sort runs over a small materialized
-    * input at sf0.1, so the rule drops their range exchange. */
+    * input at sf0.1 and at this suite's scale, so the rule drops their
+    * range exchange. */
   private val smallSortQueries = Seq("qagg_approxhll", "qagg_argmax", "qagg_groupingsets",
     "qagg_mode", "qagg_ohlc", "qjoin_left", "qscan_text", "qsink_json",
     "qstream_tumbling", "qwin_bollinger")
