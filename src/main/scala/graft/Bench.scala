@@ -79,10 +79,7 @@ object Bench {
     // it is map-order luck (measured: the first documents-pipeline query
     // absorbed ~3 s that re-running it showed was not its own cost).
     spark.range(1000).selectExpr("sum(id)").collect()
-    graft.etl.Tables.schemas.keys.foreach { t =>
-      (if (t == "events") graft.etl.Tables.events(spark, sfDir)
-       else graft.etl.Tables.table(spark, sfDir, t)).count()
-    }
+    graft.etl.Tables.schemas.keys.foreach(graft.etl.Tables.table(spark, sfDir, _).count())
     // Pre-warm the documents PIPELINE, not just the scan: the first query
     // through tokenization/shingling absorbs ~2.5 s of codegen + string-expr
     // warmup that a bare count() doesn't trigger (round-5 verdict item 7 —

@@ -10,7 +10,7 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = args.drop(1).toSeq
+    val names = Bench.queryNames(args.drop(1).mkString(","), "graft.Explain")
     val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     val targets =

@@ -42,10 +42,6 @@ object GraftSession {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       // date assertions and the oracle's timestamps are UTC (SURVEY §7.6)
       .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4 cannot read parquet TIMESTAMP(NANOS) as TimestampType;
-      // with this conf it reads it as LongType epoch nanos, which
-      // [[graft.etl.Tables.events]] converts. It touches no other type.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   /** A session with the shared confs and WARN logging. */

@@ -24,8 +24,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse(
-      sys.error("usage: StageProbe <query-name>"))
+    val name = Bench.queryNames(args.mkString(","), "graft.StageProbe") match {
+      case Seq(n) => n
+      case _ => sys.error("usage: StageProbe <query-name>")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create()
 
@@ -53,8 +55,7 @@ object StageProbe {
       }
     })
 
-    val q = graft.etl.Registry.byName.getOrElse(name,
-      sys.error(s"unknown query: $name (see Registry.all)"))
+    val q = graft.etl.Registry.byName(name)
     // fixture staging + first-run codegen land in the warmup phase so the
     // measured phase's stages carry steady-state numbers only
     phase = "warmup"

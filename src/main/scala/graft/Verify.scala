@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // extra args = run only those queries (local iteration; driver passes 2)
-    val only = args.drop(2).toSet
+    val only = Bench.queryNames(args.drop(2).mkString(","), "graft.Verify").toSet
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1123,30 +1123,6 @@ object Graft {
   }
 
   // ------------------------------------------------------------------
-  // Load-side file sizing
-  // ------------------------------------------------------------------
-
-  /** Small-file compaction: deterministically bin-pack `df` into
-    * `ceil(count / targetRows)` output partitions so the subsequent write
-    * emits right-sized files instead of one file per upstream task — the
-    * classic ETL load-side fix (a 100 TB table written from 50k tasks is
-    * unreadable as 50k tiny files). With `sortCols`, partitions are RANGE
-    * assigned and sorted within, so files are also value-clustered (better
-    * min/max pruning for readers); without, round-robin packs exactly
-    * evenly. The extra `count()` pass is one columnar-metadata scan —
-    * negligible next to the write it sizes. Complements (not replaces)
-    * `spark.sql.files.maxRecordsPerFile`, which only SPLITS oversized
-    * partitions and cannot merge small ones. */
-  def compact(df: DataFrame, targetRows: Long, sortCols: Seq[Column] = Nil): DataFrame = {
-    require(targetRows > 0, s"targetRows must be positive, got $targetRows")
-    val n = df.count()
-    val parts = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-    if (sortCols.nonEmpty)
-      df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
-    else df.repartition(parts)
-  }
-
-  // ------------------------------------------------------------------
   // Text analysis
   // ------------------------------------------------------------------
 

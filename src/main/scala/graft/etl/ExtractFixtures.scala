@@ -365,8 +365,7 @@ object ExtractFixtures {
     ensureBucketed(spark, sfDir, s"graft_adj_bkt_${pathTag(sfDir)}",
       "copurchase_adj", doubled,
       org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, dst BIGINT"),
-      "src", AdjBuckets, Seq("src", "dst"),
-      dynamicBuckets = Some(() => adjBucketsFor(2L * TableStats.rows(spark, edgesDir))))
+      "src", () => adjBucketsFor(2L * TableStats.rows(spark, edgesDir)), Seq("src", "dst"))
   }
 
   /** orders and lineitem written SORTED-BUCKETED by orderkey
@@ -391,11 +390,9 @@ object ExtractFixtures {
     // (re)written, never on marker re-attach.
     lazy val buckets = factBucketsFor(TableStats.rows(spark, Tables.path(sfDir, "lineitem")))
     (ensureBucketed(spark, sfDir, s"graft_orders_bkt_$tag", "orders_bucketed",
-       Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey",
-       dynamicBuckets = Some(() => buckets)),
+       Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey", () => buckets),
      ensureBucketed(spark, sfDir, s"graft_lineitem_bkt_$tag", "lineitem_bucketed",
-       Tables.lineitem(spark, sfDir), Tables.lineitemSchema, "l_orderkey",
-       dynamicBuckets = Some(() => buckets)))
+       Tables.lineitem(spark, sfDir), Tables.lineitemSchema, "l_orderkey", () => buckets))
   }
 
   /** Bucket count for the orders⋈lineitem sorted-bucketed pair. A fixed 8
@@ -418,27 +415,24 @@ object ExtractFixtures {
   private def ensureBucketed(
       spark: SparkSession, sfDir: String, table: String, sub: String,
       df: org.apache.spark.sql.DataFrame, schema: org.apache.spark.sql.types.StructType,
-      key: String, buckets: Int = Buckets,
-      sortCols: Seq[String] = Nil,
-      dynamicBuckets: Option[() => Int] = None): String = synchronized {
+      key: String, buckets: () => Int,
+      sortCols: Seq[String] = Nil): String = synchronized {
     val sorted = if (sortCols.isEmpty) Seq(key) else sortCols
     if (!spark.catalog.tableExists(table)) {
       val dir = root(sfDir).resolve(sub)
       val marker = dir.resolve("_GRAFT_FIXTURE_OK")
       if (Files.exists(marker)) {
-        // re-attach with the count the FILES were written with: a
-        // dynamically-sized table persists its choice in the marker
-        // (a wrong count here silently mis-buckets every downstream
-        // join); empty markers predate dynamic sizing and were all
-        // written at the static default
-        val persisted = new String(Files.readAllBytes(marker), "UTF-8").trim
-        val n = if (persisted.nonEmpty) persisted.toInt else buckets
+        // re-attach with the count the FILES were written with, which the
+        // marker persists (a wrong count here silently mis-buckets every
+        // downstream join), so one that holds no count fails
+        val n = new String(Files.readAllBytes(marker), "UTF-8").trim.toIntOption
+          .getOrElse(sys.error(s"$marker holds no bucket count"))
         spark.sql(
           s"CREATE TABLE $table (${schema.toDDL}) USING PARQUET " +
             s"CLUSTERED BY ($key) SORTED BY (${sorted.mkString(", ")}) " +
             s"INTO $n BUCKETS LOCATION '${dir.toUri}'")
       } else {
-        val n = dynamicBuckets.map(_()).getOrElse(buckets)
+        val n = buckets()
         df.repartition(n, col(key))
           .write.mode("overwrite").format("parquet")
           .bucketBy(n, key).sortBy(sorted.head, sorted.tail: _*)

@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.spark.sql.SparkSession
 
 /** Table statistics read from parquet metadata on the driver, never from a
@@ -15,21 +14,10 @@ object TableStats {
     * files. */
   def rows(spark: SparkSession, path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    dataFiles(conf, path).map(f => footer(conf, f)(_.getRecordCount)).sum
-  }
-
-  /** Unit of the timestamp annotation on INT64 `column`, read from the first
-    * data file's footer (a writer never mixes units within one dataset);
-    * None for an INT64 with no timestamp annotation. */
-  def timestampUnit(spark: SparkSession, path: String, column: String): Option[TimeUnit] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val first = dataFiles(conf, path).nextOption().getOrElse(
-      throw new IllegalArgumentException(s"no parquet data files under $path"))
-    footer(conf, first)(_.getFileMetaData.getSchema.getType(Seq(column): _*)
-      .asPrimitiveType().getLogicalTypeAnnotation match {
-        case t: TimestampLogicalTypeAnnotation => Some(t.getUnit)
-        case _ => None
-      })
+    dataFiles(conf, path).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
   }
 
   /** Data files of a parquet dataset — one file, or a directory tree of
@@ -45,11 +33,6 @@ object TableStats {
       .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
       .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator.single(s.getPath))
     if (fs.getFileStatus(p).isDirectory) walk(p) else Iterator.single(p)
-  }
-
-  private def footer[T](conf: Configuration, f: Path)(read: ParquetFileReader => T): T = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-    try read(reader) finally reader.close()
   }
 
   /** Partitions that give each task about `rowsPerTask` of `rows`:

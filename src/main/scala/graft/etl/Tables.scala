@@ -66,14 +66,7 @@ object Tables {
     StructField("l_linestatus", StringType),
     StructField("l_shipdate", TimestampType)))
 
-  // `ts` precision has CHANGED ACROSS ROUNDS: rounds ≤ 6 shipped Parquet
-  // TIMESTAMP(NANOS) (unreadable as TimestampType in Spark 4 — read as
-  // LongType + nanosAsLong, then `div 1000`); the round-7 regeneration
-  // (2026-08-13 19:29) ships TIMESTAMP(MICROS), which Spark reads as
-  // TimestampType natively. events() sniffs the parquet footer ONCE per
-  // (session, dir) and picks the right path — a silent mis-read is a
-  // 1000× timestamp shift that fails every ts query's oracle, so the
-  // sniff is load-bearing, not defensive decoration.
+  // `ts` is parquet TIMESTAMP(MICROS); a NANOS file fails when `ts` is first read.
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),
@@ -146,12 +139,10 @@ object Tables {
       spark.read.schema(schemas(name)).parquet(path(sfDir, name)))
 
   /** Registers `name` as a temp view (unique per sfDir) and returns the
-    * view name, for queries expressed as SQL text. `events` goes through
-    * [[events]] so the view exposes the converted µs TimestampType `ts`. */
+    * view name, for queries expressed as SQL text. */
   def view(s: SparkSession, sfDir: String, name: String): String = {
     val vname = s"${name}_v${math.abs(sfDir.hashCode)}"
-    val df = if (name == "events") events(s, sfDir) else table(s, sfDir, name)
-    df.createOrReplaceTempView(vname)
+    table(s, sfDir, name).createOrReplaceTempView(vname)
     vname
   }
 
@@ -162,36 +153,7 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
-  /** Events with `ts` as TimestampType (µs) regardless of the fixture's
-    * on-disk precision: MICROS reads natively; NANOS (rounds ≤ 6) reads as
-    * LongType epoch nanos and converts via integral `div 1000` (a double
-    * division would lose precision: epoch nanos > 2^53). The NANOS read
-    * needs `spark.sql.legacy.parquet.nanosAsLong`, which the session must
-    * set at build time ([[graft.GraftSession]] does); a build never sets
-    * it on the session it is given. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (eventsTsIsNanos(s, d)) {
-      require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean,
-        s"$d/events.parquet stores ts as TIMESTAMP(NANOS), which reads only with " +
-          "spark.sql.legacy.parquet.nanosAsLong=true: build the session with graft.GraftSession")
-      val nanosSchema = StructType(eventsSchema.map {
-        case f if f.name == "ts" => f.copy(dataType = LongType)
-        case f => f
-      })
-      s.read.schema(nanosSchema).parquet(s"$d/events.parquet")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    } else table(s, d, "events")
-  }
-
-  /** One footer read per directory: is events.ts physical NANOS? A plain
-    * INT64 with no timestamp annotation counts as nanos: only the nanos era
-    * shipped that. */
-  private val tsNanosCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def eventsTsIsNanos(s: SparkSession, d: String): Boolean =
-    tsNanosCache.computeIfAbsent(d, dir =>
-      TableStats.timestampUnit(s, path(dir, "events"), "ts")
-        .forall(_ == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS))
+  def events(s: SparkSession, d: String): DataFrame = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

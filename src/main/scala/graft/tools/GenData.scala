@@ -52,9 +52,8 @@ object GenData {
       .appName("graft-gendata")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")
-      // Tables.events sniffs the parquet footer for the ts physical type;
-      // write MICROS explicitly (the post-round-7 driver layout), never
-      // INT96.
+      // Tables.events reads ts as TIMESTAMP(MICROS), the driver's layout;
+      // write it explicitly, never INT96.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

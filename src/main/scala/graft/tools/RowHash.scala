@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object RowHash {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val names = args.drop(1).toSeq
+    val names = graft.Bench.queryNames(args.drop(1).mkString(","), "graft.tools.RowHash")
     val spark = graft.GraftSession.create()
     names.foreach { name =>
       val df = graft.etl.Registry.byName(name).build(spark, sfDir)

@@ -7,6 +7,8 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.datasources.SchemaColumnConvertNotSupportedException
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.TimestampType
 
@@ -85,27 +87,48 @@ class FixturesSpec extends SparkFixture {
     }
   }
 
-  test("Tables.events reads NANOS and MICROS ts as the same µs timestamps") {
+  test("a bucketed fixture whose marker holds no bucket count fails to re-attach") {
+    val sfDir = Files.createTempDirectory("graft_bkt_sf").toString
+    try {
+      Seq("orders", "lineitem").foreach { t =>
+        FileUtils.copyFile(new File(Tables.path(sfTiny, t)), new File(Tables.path(sfDir, t)))
+      }
+      val (orders, lineitem) = ExtractFixtures.bucketedOrdersLineitem(spark, sfDir)
+      val dir = new File(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(orders)).location)
+      try {
+        val marker = new File(dir, "_GRAFT_FIXTURE_OK")
+        assert(FileUtils.readFileToString(marker, "UTF-8").trim.toInt > 0)
+        // the table files persist; a later JVM re-attaches them from the marker
+        spark.sql(s"DROP TABLE $orders")
+        FileUtils.write(marker, "", "UTF-8")
+        val err = intercept[RuntimeException](ExtractFixtures.bucketedOrdersLineitem(spark, sfDir))
+        assert(err.getMessage.contains("holds no bucket count"), err.getMessage)
+      } finally {
+        Seq(orders, lineitem).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        FileUtils.deleteQuietly(dir.getParentFile)
+      }
+    } finally FileUtils.deleteQuietly(new File(sfDir))
+  }
+
+  test("Tables.events reads a MICROS ts to the exact µs and fails on a NANOS ts") {
     val nanosDir = Files.createTempDirectory("graft_nanos_sf").toString
     val microsDir = Files.createTempDirectory("graft_micros_sf").toString
     try {
-      // 2024-01-02T03:04:05.123456Z plus 789 ns, which the µs read drops
+      // 2024-01-02T03:04:05.123456Z and one µs later
       val micros = Seq(1704164645123456L, 1704164645123457L)
-      FixturesSpec.writeEvents(nanosDir, "NANOS",
-        micros.zipWithIndex.map { case (us, i) => (i.toLong, us * 1000L + 789L, 7L, Some("view")) })
       FixturesSpec.writeEvents(microsDir, "MICROS",
         micros.zipWithIndex.map { case (us, i) => (i.toLong, us, 7L, Some("view")) })
-      for (dir <- Seq(nanosDir, microsDir)) {
-        val ev = Tables.events(spark, dir)
-        assert(ev.schema("ts").dataType == TimestampType)
-        assert(ev.orderBy(col("event_id")).select(unix_micros(col("ts"))).collect()
-          .map(_.getLong(0)).toSeq == micros, dir)
-      }
-      // the NANOS read needs the conf GraftSession sets at build time
-      val bare = spark.newSession()
-      bare.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-      val err = intercept[IllegalArgumentException](Tables.events(bare, nanosDir))
-      assert(err.getMessage.contains("GraftSession"), err.getMessage)
+      FixturesSpec.writeEvents(nanosDir, "NANOS",
+        micros.zipWithIndex.map { case (us, i) => (i.toLong, us * 1000L + 789L, 7L, Some("view")) })
+      val ev = Tables.events(spark, microsDir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.orderBy(col("event_id")).select(unix_micros(col("ts"))).collect()
+        .map(_.getLong(0)).toSeq == micros)
+      // a NANOS ts is refused at its first read, never returned 1000× off
+      val err = intercept[Exception](Tables.events(spark, nanosDir).select("ts").collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[SchemaColumnConvertNotSupportedException]), err)
     } finally Seq(nanosDir, microsDir).foreach(d => FileUtils.deleteQuietly(new File(d)))
   }
 }

@@ -81,10 +81,11 @@ class RegistrySpec extends SparkFixture {
   test("one session builder: the test session carries GraftSession's confs and extensions") {
     Seq("spark.sql.session.timeZone" -> "UTC",
       "spark.buffer.pageSize" -> "16m",
-      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true").foreach { case (k, v) =>
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true").foreach { case (k, v) =>
       assert(spark.conf.getOption(k).contains(v), k)
     }
+    // events.ts is read as MICROS, with no legacy NANOS conversion
+    assert(!spark.conf.getAll.contains("spark.sql.legacy.parquet.nanosAsLong"))
     // injected at build time: SQL text resolves the native function with
     // no registration call
     val sim = spark.sql("SELECT cosine_similarity(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), " +
@@ -134,8 +135,13 @@ class RegistrySpec extends SparkFixture {
     val ops = "(?m)^  def (\\w+)".r
       .findAllMatchIn(code(java.nio.file.Paths.get("src/main/scala/graft/api/Graft.scala")))
       .map(_.group(1)).toSeq.distinct
+    // an occurrence qualified by another object or an expression
+    // (`FunnelState.compact(`, `).op`) is not this operator; a
+    // `Graft.`-qualified one counts, with `.op` on the next line too
     val uncalled = ops.filter { op =>
-      s"\\b$op\\b".r.findAllIn(main).size <= s"\\bdef $op\\b".r.findAllIn(main).size
+      val uses = s"(?:\\b(\\w+)\\s*\\.\\s*|(\\.)\\s*)?\\b$op\\b".r.findAllMatchIn(main)
+        .count(m => m.group(2) == null && (m.group(1) == null || m.group(1) == "Graft"))
+      uses <= s"\\bdef $op\\b".r.findAllIn(main).size
     }
     assert(uncalled.isEmpty, s"public Graft operators with no caller in src/main: " +
       uncalled.mkString(", "))
@@ -161,6 +167,21 @@ class RegistrySpec extends SparkFixture {
     val e = intercept[RuntimeException](
       graft.Bench.queryNames("qagg_percentile,qagg_percentlie", "--isolate"))
     assert(e.getMessage.contains("'qagg_percentlie'"))
+  }
+
+  test("every main refuses an unknown query name before it starts a session") {
+    // a main that started first would share (and Verify would stop) this
+    // suite's session, and a typo would verify or time nothing
+    val out = java.nio.file.Files.createTempDirectory("graft_unknown_q").toString
+    try Seq[(Array[String] => Unit, Array[String])](
+      (graft.Verify.main, Array(sfTiny, out, "qnope_typo")),
+      (graft.Explain.main, Array(sfTiny, "qnope_typo")),
+      (graft.tools.RowHash.main, Array(sfTiny, "qnope_typo")),
+      (graft.StageProbe.main, Array("qnope_typo"))).foreach { case (main, args) =>
+      val e = intercept[RuntimeException](main(args))
+      assert(e.getMessage.contains("unknown query 'qnope_typo'"), e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("entry() returns the flagship with rows > 0") {

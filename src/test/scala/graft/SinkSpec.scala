@@ -130,42 +130,6 @@ class SinkSpec extends SparkFixture {
     }
   }
 
-  test("compact: bin-packed output file counts at two target sizes; sorted variant clusters") {
-    val sp = spark
-    import sp.implicits._
-    import graft.api.Graft
-    val df = (0 until 1000).map(i => (i.toLong, s"row-$i")).toDF("id", "s")
-    def parquetFiles(dir: String): Array[java.io.File] =
-      new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-
-    val d1 = tmp("graft_compact_100")
-    Graft.compact(df, 100).write.mode("overwrite").parquet(d1)
-    assert(parquetFiles(d1).length == 10, "1000 rows at target 100 must pack into 10 files")
-
-    val d2 = tmp("graft_compact_400")
-    Graft.compact(df, 400).write.mode("overwrite").parquet(d2)
-    assert(parquetFiles(d2).length == 3, "1000 rows at target 400 must pack into ceil(1000/400)=3 files")
-    assert(spark.read.parquet(d2).count() == 1000)
-
-    // sorted variant: range-assigned partitions → each FILE holds one
-    // contiguous id range (min/max pruning actually works for readers)
-    val d3 = tmp("graft_compact_sorted")
-    Graft.compact(df, 250, Seq(col("id"))).write.mode("overwrite").parquet(d3)
-    val fs = parquetFiles(d3)
-    assert(fs.length == 4)
-    val ranges = fs.map { f =>
-      val ids = spark.read.parquet(f.getAbsolutePath)
-        .select("id").collect().map(_.getLong(0))
-      (ids.min, ids.max)
-    }.sortBy(_._1)
-    assert(ranges.sliding(2).forall {
-      case Array((_, hi), (lo2, _)) => hi < lo2
-      case _ => true
-    }, s"files overlap in id ranges: ${ranges.toSeq}")
-    assert(spark.read.parquet(d3).count() == 1000)
-  }
-
   test("partitioned parquet write creates lang= directories and prunes on read") {
     val out = tmp("graft_part")
     Tables.documents(spark, sfTiny)
