@@ -105,39 +105,17 @@ object Bench {
         org.apache.spark.sql.functions.col("h64").as("sh"))
     graft.api.Graft.jaccardCandidates(warmShingles).count()
     // Materialize the extract/load fixtures (write-once) up front: they
-    // are one-time setup, not query cost — without this a fresh
-    // environment charges qscan_csv/qscan_json/qsink_partitioned ~2.7 s
-    // of fixture writing on their first (= the measured) run.
-    // SPARK_GRAFT_SKIP_STAGING=1 skips the block for disk-bound rung
-    // isolates of extract-free queries (qllm_srp_lsh at sf100 needs the
-    // embeddings fixture and ~60 GB of shuffle headroom; materializing
-    // the ~40 GB staged extract first would eat exactly that headroom
-    // for tables the query never opens). Deliberately fail-loud: if an
-    // isolated query DOES read a missing extract it errors and is
-    // counted in "errors"/"failed" — a skipped staging can never
-    // silently produce a fast number for a query that needed it.
-    if (!sys.env.get("SPARK_GRAFT_SKIP_STAGING").exists(_ == "1")) {
-    graft.etl.ExtractFixtures.customerCsv(spark, sfDir)
-    graft.etl.ExtractFixtures.documentsJson(spark, sfDir)
-    graft.etl.ExtractFixtures.ordersByYear(spark, sfDir)
-    graft.etl.ExtractFixtures.ordersEvolved(spark, sfDir)
-    graft.etl.ExtractFixtures.supplierOrc(spark, sfDir)
-    graft.etl.ExtractFixtures.documentsText(spark, sfDir)
-    graft.etl.ExtractFixtures.copurchaseEdges(spark, sfDir)
-    graft.etl.ExtractFixtures.copurchaseAdjacency(spark, sfDir)
-    graft.etl.ExtractFixtures.mediaBmp(spark, sfDir)
-    graft.etl.ExtractFixtures.eventsDailyCsv(spark, sfDir)
-    graft.etl.ExtractFixtures.eventsDailyJson(spark, sfDir)
-    // the COMPACT year-partitioned layout was the one staged fixture NOT
-    // in this list — on a fresh sfDir its one-time shuffle+write (orders
-    // repartitioned by year) landed in qscan_metadata's slot (18.3 s
-    // attributed vs 0.4 s isolated at sf30, round-10 verdict task 4)
-    graft.etl.ExtractFixtures.ordersByYearCompact(spark, sfDir)
-    // the sorted-bucketed orders/lineitem layout is the largest staged
-    // fixture — on a fresh sfDir its one-time write was being attributed
-    // to qjoin_bucketed (measured 13.9 s at sf1, ~20× its steady-state)
-    graft.etl.ExtractFixtures.bucketedOrdersLineitem(spark, sfDir)
-    }
+    // are one-time setup, not query cost, and a fixture left out here is
+    // charged to the first query that reads it. SPARK_GRAFT_SKIP_STAGING=1
+    // skips the block for disk-bound rung isolates of extract-free
+    // queries (qllm_srp_lsh at sf100 needs the embeddings fixture and
+    // ~60 GB of shuffle headroom that the ~40 GB staged extract would
+    // eat). Deliberately fail-loud: an isolated query that DOES read a
+    // missing extract errors and is counted in "errors"/"failed", so a
+    // skipped staging never produces a fast number for a query that
+    // needed it.
+    if (!sys.env.get("SPARK_GRAFT_SKIP_STAGING").exists(_ == "1"))
+      graft.etl.ExtractFixtures.staging.foreach(_._2(spark, sfDir))
     // A failed query must NEVER read as a fast one: failures are counted
     // and named in the JSON line so the driver's bench doubles as a smoke
     // gate — a regression that breaks a query shows up as "errors":N, not

@@ -414,66 +414,36 @@ object Graft {
     val r = idx.select(col("bucket"), col("vec_id").as("vec_b"), col("__v").as("__vb"),
       vector_norm(col("__v")).as("__nb"),
       explode(sequence(lit(0), col("__t"))).as("__p"), col("__t").as("__q"))
-    // Round 13 (the sf60 probe's find): the SHUFFLE_HASH build side holds
-    // r's REPLICATED vector rows per partition, and r's row count grows
-    // quadratically with cluster mass (each row fans out to its __t + 1
-    // tile pairs) while the session partition count stays fixed — at sf60
-    // (1.2 M vectors, cluster buckets ~100+ tiles deep) the per-task
-    // UnsafeHashedRelation died with NOT_ENOUGH_MEMORY at 32 partitions.
-    // Size the pair join's partition count from the EXACT build row count
-    // (Σ (__t + 1), one vector-scale aggregate — the gramStream sizing
-    // discipline), targeting ~400 k replicated rows (~100-150 MB of
-    // 64-float vectors) per build; skip the explicit repartition when the
-    // session default already gives that density, keeping the ≤ sf30
-    // proven plans byte-identical. Both sides repartition on the full
-    // join key with the same count, so no further exchange is inserted
-    // and the hint still builds on r.
-    val defParts = idx.sparkSession.sessionState.conf.numShufflePartitions
-    // Σ(__t + 1) priced WITHOUT executing the tile fan-out (round-13
-    // advice: the previous probe aggregated over `idx`, which ran the
-    // full srpBuckets crossJoin plus BOTH row_number/count windows
-    // eagerly at DataFrame-construction time — three computations of the
-    // pipeline for one scalar). For a bucket of m rows in B-sized tiles
-    // (g = ⌈m/B⌉), Σ over its rows of (⌊i/B⌋ + 1) is the closed form
-    // B·g·(g−1)/2 + (m − (g−1)·B)·g, so the checkpointed bucket-mass
-    // frame — no windows, no fan-out — prices the build side exactly.
-    // Every product term is even where halved, so integer DIV is exact.
+    // The SHUFFLE_HASH build side holds r's REPLICATED vector rows per
+    // partition, and r's row count grows quadratically with cluster mass
+    // (each row fans out to its __t + 1 tile pairs), so at a fixed
+    // partition count the per-task build outgrows memory (PERF.md round
+    // 13). Σ(__t + 1) is priced WITHOUT executing the tile fan-out or the
+    // windows: for a bucket of m rows in B-sized tiles (g = ⌈m/B⌉), Σ over
+    // its rows of (⌊i/B⌋ + 1) is the closed form B·g·(g−1)/2 + (m −
+    // (g−1)·B)·g, so the checkpointed bucket-mass frame prices the build
+    // side exactly. Every product term is even where halved, so integer
+    // DIV is exact.
     val rRows = Option(bucketCounts
         .selectExpr(s"__m", s"CAST((__m - 1) DIV $bsz AS BIGINT) + 1 AS __g")
         .selectExpr(
           s"sum($bsz * __g * (__g - 1) DIV 2 + (__m - (__g - 1) * $bsz) * __g) AS r")
         .head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    // Partition count from the per-task PAIR budget, not a row budget
-    // (round-14 A/B at sf60): each replicated build row meets ~bsz probe
-    // rows, so per-task work is rows × bsz — a fixed 400 k-row target
-    // that was right at blockSize 1024 (≈ 410 M pairs/task, the
-    // sf30-proven density) under-partitions 8× once the corpus-scaled
-    // tile grows to 8192: measured 554 s at sf60 (32 coarse partitions,
-    // long stragglers) vs 327.6 with the pair-budget shape. rRows × bsz
-    // is the exact pair-probe count, so dividing by the 4.1e8 budget
-    // reproduces the proven granularity at EVERY tile size (sf60:
-    // ~5.5 M build rows × 8192 / 4.1e8 → ~110 partitions — the same
-    // ~110 the round-13 row target produced at bsz 1024). Build memory
-    // per task only shrinks under bigger tiles (fewer rows, same 264 B
-    // each), so the OOM guarantee is untouched.
-    val nparts = graft.etl.TableStats.partsFor(rRows * bsz, 409600000L)
-    // Repartition whenever the count-sized number exceeds the session
-    // default. Round 13 shipped a `nparts * 4 > defParts * 5` hysteresis
-    // (trip point 40 at the bench session's 32) that SKIPPED the sf30
-    // case (nparts = 38) its own record attributed to the sizing fix —
-    // the tracked sf30 830.1 ladder therefore ran the pair join at the
-    // session's 32 partitions, and the 103.6 → 88.7 srp_lsh delta was
-    // box phase + the fresher page cache, not this code path (PERF.md
-    // round-14 reconciliation). nparts > defParts makes the discipline
-    // actually engage at every super-default size; at-or-below default
-    // the plan is untouched, keeping the small-sf PlanSpec pins and the
-    // gate plans byte-identical.
-    val (lK, rK) =
-      if (nparts > defParts)
-        (l.repartition(nparts, col("bucket"), col("__p"), col("__q")),
-          r.repartition(nparts, col("bucket"), col("__p"), col("__q")))
-      else (l, r)
+    // The partition count comes from a per-task PAIR budget, not a row
+    // budget: each replicated build row meets ~bsz probe rows, so per-task
+    // work is rows × bsz, and rRows × bsz is the exact pair-probe count.
+    // 409.6 M pairs a task is 400 k build rows at a 1024 tile, the
+    // sf30-proven density, and holds at every tile size; build memory per
+    // task only shrinks under bigger tiles (fewer rows, same 264 B each),
+    // so the hash build stays bounded (PERF.md rounds 13 and 14). Both
+    // sides repartition on the full join key with the same count, so no
+    // further exchange is inserted and the hint still builds on r.
+    val (lK, rK) = graft.etl.TableStats.sizedPartitions(idx.sparkSession, rRows * bsz,
+        rowsPerTask = 409600000L, margin = 1.0)
+      .fold((l, r))(n =>
+        (l.repartition(n, col("bucket"), col("__p"), col("__q")),
+          r.repartition(n, col("bucket"), col("__p"), col("__q"))))
     lK.join(rK.hint("SHUFFLE_HASH"), Seq("bucket", "__p", "__q"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("bucket"), col("vec_a"), col("vec_b"),
@@ -922,6 +892,15 @@ object Graft {
     * ordinal inside the operator would cost exactly the per-key sort this
     * operator exists to avoid.
     */
+  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salt: Int): DataFrame = {
+    require(salt > 0, s"salt must be positive, got $salt")
+    val f = fact.withColumn("__shard",
+      pmod(xxhash64(fact.columns.toIndexedSeq.map(col): _*), lit(salt.toLong)))
+    val d = dim.withColumn("__shard",
+      explode(sequence(lit(0L), lit(salt.toLong - 1))))
+    f.join(d, Seq(key, "__shard")).drop("__shard")
+  }
+
   /** Z-order (Morton) key: bit-interleave the low `bits` bits of two
     * NON-NEGATIVE grid coordinates — bit i of `x` lands at position 2i,
     * bit i of `y` at 2i+1. Sorting (or range-partitioning) a table by this
@@ -988,15 +967,6 @@ object Graft {
     fact.filter(Bridge.column(BloomFilterMightContain(
       ScalarSubquery(subPlan),
       new XxHash64(Seq(Bridge.expression(factKey))))))
-  }
-
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String, salt: Int): DataFrame = {
-    require(salt > 0, s"salt must be positive, got $salt")
-    val f = fact.withColumn("__shard",
-      pmod(xxhash64(fact.columns.toIndexedSeq.map(col): _*), lit(salt.toLong)))
-    val d = dim.withColumn("__shard",
-      explode(sequence(lit(0L), lit(salt.toLong - 1))))
-    f.join(d, Seq(key, "__shard")).drop("__shard")
   }
 
   /** Interval-overlap equi-join: rows of `a` and `b` sharing `key` whose

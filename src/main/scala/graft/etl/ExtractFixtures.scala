@@ -109,22 +109,20 @@ object ExtractFixtures {
     * broadcasts the 600 k-row fact side, and the relation then stays on
     * the driver heap; a forced sort-merge join there measured a higher
     * heap peak than the hash join. That comparison was made at sf0.1 only.
-    * A hash build cannot spill, so the build rows per task are bounded
-    * from lineitem's footer row count the round-13 way (qdate_busday in
-    * [[graft.etl.ops.ScalarOps]]): when [[hashBuildRowsPerTask]] needs
-    * more partitions than the session default, `lp` is key-repartitioned
-    * to that count first. Both join sides reuse that one exchange, so it
-    * replaces the join's own shuffle instead of adding one, and plans at
-    * or below the default density are unchanged. */
+    * A hash build cannot spill, so when lineitem's footer row count needs
+    * more partitions than the session default at
+    * [[TableStats.rowsPerTask]], `lp` is key-repartitioned to that count
+    * first. Both join sides reuse that one exchange, so it replaces the
+    * join's own shuffle instead of adding one. */
   def copurchaseEdges(spark: SparkSession, sfDir: String): String = {
     val dir = root(sfDir).resolve("copurchase_edges")
     ensure(dir) {
       val pairs = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val defParts = spark.sessionState.conf.numShufflePartitions
-      val buildRows = TableStats.rows(spark, Tables.path(sfDir, "lineitem"))
-      val nparts = TableStats.partsFor(buildRows, hashBuildRowsPerTask(spark))
-      val lp = if (nparts > defParts) pairs.repartition(nparts, col("ok")) else pairs
+      val lp = TableStats.sizedPartitions(spark,
+          TableStats.rows(spark, Tables.path(sfDir, "lineitem")),
+          TableStats.rowsPerTask(spark), margin = 1.0)
+        .fold(pairs)(n => pairs.repartition(n, col("ok")))
       lp.as("a")
         .join(lp.as("b").hint("shuffle_hash"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
@@ -133,21 +131,6 @@ object ExtractFixtures {
         .distinct()
         .write.mode("overwrite").parquet(dir.toString)
     }
-  }
-
-  /** Build rows one task of a shuffled hash join on two longs can hold:
-    * the unified memory region ((heap − 300 MB reserved) ×
-    * `spark.memory.fraction`) of this local-mode JVM, split over its
-    * concurrent tasks, at 200 B a row. A (long, long) build costs about
-    * 100 B a row with page growth: at GenData sf1 in a 1 GB heap with 4
-    * threads (~108 MB a task), 1.2 M rows a task failed and 1 M passed.
-    * So this keeps a 2× margin.
-    * That is ~1.5 M rows at a 16 GB heap with 32 threads (the round-13
-    * density) and ~570 k at 1 GB with 4. */
-  private def hashBuildRowsPerTask(spark: SparkSession): Long = {
-    val fraction = spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6)
-    val region = ((Runtime.getRuntime.maxMemory - (300L << 20)) * fraction).toLong
-    math.max(1L, region / spark.sparkContext.defaultParallelism / 200)
   }
 
   /** A directory of 200 real BMP files (media_<id>.bmp, ids 0–199 — the
@@ -307,41 +290,34 @@ object ExtractFixtures {
     }
   }
 
-  /** Bucket count for the co-located join fixture. 8 buckets keeps one
-    * file per bucket at test scale; a 100 TB deployment sizes this to
-    * (table bytes / target file size) and both join sides MUST agree. */
+  /** FLOOR bucket count for the orders⋈lineitem co-located join fixture:
+    * 8 buckets keeps one file per bucket at test scale. Both join sides
+    * MUST agree on the count. */
   val Buckets = 8
 
-  /** FLOOR bucket count for the staged adjacency table — matched to the
+  /** Lineitem rows per bucket of the orders⋈lineitem pair. Each bucketed
+    * write task sorts its bucket, so a fixed count means a per-task sort
+    * that grows with scale: at sf100 the 8-bucket layout put ~75 M wide
+    * rows through each write-side sort and died with a heap OOM. 45 M is
+    * the volume the sf60 rung (360 M rows / 8 buckets) is measured to
+    * stage and query cleanly, so every rung through sf60 keeps exactly 8
+    * (PERF.md, "One partition-sizing rule"). */
+  val FactRowsPerBucket = 45L * 1000 * 1000
+
+  /** FLOOR bucket count for the staged adjacency table, matched to the
     * bench session's parallelism (local[32] / shuffle.partitions=32) so a
     * bucketed scan feeds every core and lines up 1:1 with the rank-side
-    * hash partitioning in the PageRank iteration joins. A cluster sizes
-    * this to (edge bytes / target file size) like any bucketed fact —
-    * and so does this repo, via [[adjBucketsFor]]: the count GROWS with
-    * the staged edge volume rather than staying pinned at 32. */
+    * hash partitioning in the PageRank iteration joins. */
   val AdjBuckets = 32
 
-  /** Size the adjacency bucket count from the direction-doubled row count
-    * at staging time (the jaccard round-12 lesson applied to the staged
-    * layout itself: a fixed 32 buckets means per-TASK state grows linearly
-    * with scale). The binding constraint is not scan parallelism but the
-    * per-iteration PageRank `groupBy(dst)` PARTIAL aggregate, which runs
-    * inside the bucket-scan tasks: at sf30's 540 M rows / 32 buckets each
-    * task's hash-agg map holds ~4.6 M of the graph's 4.7 M dst keys over
-    * ~17 M rows — 32 such maps exhaust the memory pool concurrently and
-    * fall back to per-task sorts (sf10→sf30 isolate curve 4.2× on 3×
-    * data, vs ~2.5× at every smaller rung). ~6 M rows per bucket keeps
-    * each task at the per-task volume sf10 (the last linear rung) is
-    * measured to handle; rounding to a multiple of AdjBuckets keeps whole
-    * scheduling waves on the 32-thread session. Capped at 256 (the
-    * one-file-per-bucket contract — SURVEY §4 — makes each bucket one
-    * write task; 256 files of ≥ 20 MB at the scales that reach the cap). */
-  def adjBucketsFor(doubledRows: Long): Int = {
-    val targetRowsPerBucket = 6L * 1000 * 1000
-    val needed = ((doubledRows + targetRowsPerBucket - 1) / targetRowsPerBucket).toInt
-    if (needed <= AdjBuckets) AdjBuckets
-    else math.min(256, ((needed + AdjBuckets - 1) / AdjBuckets) * AdjBuckets)
-  }
+  /** Direction-doubled adjacency rows per bucket. The binding constraint
+    * is the per-iteration PageRank `groupBy(dst)` partial aggregate, which
+    * runs inside the bucket-scan tasks: at sf30's 540 M rows in 32 buckets
+    * each task's map held ~4.6 M of the graph's 4.7 M dst keys and fell
+    * back to sorts. 6 M rows per bucket keeps each task at the volume
+    * sf10, the last linear rung, is measured to handle (PERF.md, "One
+    * partition-sizing rule"). */
+  val AdjRowsPerBucket = 6L * 1000 * 1000
 
   /** The DIRECTION-DOUBLED co-purchase adjacency staged as a sorted-
     * bucketed parquet TABLE (bucketBy src), not an in-heap checkpoint —
@@ -365,7 +341,8 @@ object ExtractFixtures {
     ensureBucketed(spark, sfDir, s"graft_adj_bkt_${pathTag(sfDir)}",
       "copurchase_adj", doubled,
       org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, dst BIGINT"),
-      "src", () => adjBucketsFor(2L * TableStats.rows(spark, edgesDir)), Seq("src", "dst"))
+      "src", () => TableStats.bucketsFor(2L * TableStats.rows(spark, edgesDir), AdjRowsPerBucket,
+        AdjBuckets), Seq("src", "dst"))
   }
 
   /** orders and lineitem written SORTED-BUCKETED by orderkey
@@ -388,28 +365,12 @@ object ExtractFixtures {
     // count (the wide side — its per-bucket sort is the binding write
     // cost), read at most once, and only when a fixture is actually
     // (re)written, never on marker re-attach.
-    lazy val buckets = factBucketsFor(TableStats.rows(spark, Tables.path(sfDir, "lineitem")))
+    lazy val buckets = TableStats.bucketsFor(
+      TableStats.rows(spark, Tables.path(sfDir, "lineitem")), FactRowsPerBucket, Buckets)
     (ensureBucketed(spark, sfDir, s"graft_orders_bkt_$tag", "orders_bucketed",
        Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey", () => buckets),
      ensureBucketed(spark, sfDir, s"graft_lineitem_bkt_$tag", "lineitem_bucketed",
        Tables.lineitem(spark, sfDir), Tables.lineitemSchema, "l_orderkey", () => buckets))
-  }
-
-  /** Bucket count for the orders⋈lineitem sorted-bucketed pair. A fixed 8
-    * buckets means each bucketed WRITE task sorts rows ∝ scale — the same
-    * fixed-partition defect class the sf60 probe convicted in the
-    * SHUFFLE_HASH builds, and at sf100 the ~600 M-row lineitem put ~75 M
-    * wide rows through each of 8 write-side sorts and died with a heap
-    * OOM (stage_sf100_b, round 14). Target ~45 M lineitem rows per bucket
-    * — the volume the sf60 rung (360 M rows / 8 buckets) is MEASURED to
-    * stage and query cleanly — rounded up to a multiple of [[Buckets]] so
-    * every rung through sf60 keeps exactly 8 (plans byte-identical to the
-    * tracked ladder records), capped at 256 like [[adjBucketsFor]]. */
-  def factBucketsFor(lineitemRows: Long): Int = {
-    val targetRowsPerBucket = 45L * 1000 * 1000
-    val needed = ((lineitemRows + targetRowsPerBucket - 1) / targetRowsPerBucket).toInt
-    if (needed <= Buckets) Buckets
-    else math.min(256, ((needed + Buckets - 1) / Buckets) * Buckets)
   }
 
   private def ensureBucketed(
@@ -473,4 +434,23 @@ object ExtractFixtures {
         .write.mode("overwrite").partitionBy("o_year").parquet(dir.toString)
     }
   }
+
+  /** Every staging call by name, copurchase first: its transient shuffle
+    * is the largest, so a disk-bound rung stages it while the disk is
+    * emptiest. `graft.Bench`'s warm-up and `graft.tools.StageExtract` both
+    * run this list; StageExtract's step names are these names. */
+  val staging: Seq[(String, (SparkSession, String) => Any)] = Seq(
+    "copurchaseEdges" -> copurchaseEdges,
+    "copurchaseAdjacency" -> copurchaseAdjacency,
+    "bucketedOrdersLineitem" -> bucketedOrdersLineitem,
+    "ordersByYear" -> ordersByYear,
+    "ordersByYearCompact" -> ordersByYearCompact,
+    "ordersEvolved" -> ordersEvolved,
+    "documentsJson" -> documentsJson,
+    "documentsText" -> documentsText,
+    "customerCsv" -> customerCsv,
+    "eventsDailyCsv" -> eventsDailyCsv,
+    "eventsDailyJson" -> eventsDailyJson,
+    "mediaBmp" -> mediaBmp,
+    "supplierOrc" -> supplierOrc)
 }

@@ -7,7 +7,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Table statistics read from parquet metadata on the driver, never from a
-  * Spark job: sizing a layout must not cost a scan of the data it sizes. */
+  * Spark job: sizing a layout must not cost a scan of the data it sizes.
+  * Also the one partition-sizing rule those statistics feed: the per-task
+  * row budget, the check against the session default, and bucket counts. */
 object TableStats {
 
   /** Row count of a parquet dataset, summed from the footers of its data
@@ -35,9 +37,55 @@ object TableStats {
     if (fs.getFileStatus(p).isDirectory) walk(p) else Iterator.single(p)
   }
 
-  /** Partitions that give each task about `rowsPerTask` of `rows`:
-    * `rows / rowsPerTask + 1`, capped at 4096. Callers compare it with the
-    * session default under their own trip point. */
-  def partsFor(rows: Long, rowsPerTask: Long): Int =
-    math.min(4096L, rows / rowsPerTask + 1).toInt
+  /** Rows of hash state one task may hold: the unified memory region
+    * ((max heap − 300 MB reserved) × `spark.memory.fraction`) of this
+    * local-mode JVM, split over its concurrent tasks, at 200 B a row. A
+    * (long, long) hash build costs about 100 B a row with page growth: at
+    * GenData sf1 in a 1 GB heap with 4 threads (~108 MB a task), 1.2 M
+    * rows a task failed and 1 M passed, so this keeps a 2× margin. That is
+    * ~1.58 M rows at a 16 GB heap with 32 threads, ~1.37 M at 2 GB with 4
+    * and ~570 k at 1 GB with 4 (PERF.md, "The hash build at sf1"). */
+  def rowsPerTask(spark: SparkSession): Long =
+    rowsPerTask(Runtime.getRuntime.maxMemory,
+      spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6),
+      spark.sparkContext.defaultParallelism)
+
+  /** `rowsPerTask(spark)` as a pure function of its three inputs; never
+    * below 1. */
+  def rowsPerTask(maxHeap: Long, memoryFraction: Double, threads: Int): Long = {
+    val region = ((maxHeap - (300L << 20)) * memoryFraction).toLong
+    math.max(1L, region / threads / 200)
+  }
+
+  /** The partition count that gives each task about `rowsPerTask` of
+    * `rows` (`rows / rowsPerTask + 1`, capped at 4096), when it is more
+    * than `margin` × the session's shuffle partitions; `None` when the
+    * session default already gives that density, so the caller keeps its
+    * plan as it is.
+    *
+    * The margin is the cost of the repartition the count buys:
+    *  - 1.0 where the sized exchange replaces one the plan has anyway:
+    *    both sides of a hash join repartition on the join key with the
+    *    same count, so the join plans no shuffle of its own, or a numbered
+    *    repartition replaces an unnumbered one. A count barely above the
+    *    default costs nothing extra there.
+    *  - 1.25 where the sized repartition feeds an aggregate or a sort
+    *    that would otherwise run at the session default. A barely bigger
+    *    count buys little per-task density there for an exchange of its
+    *    own: measured at sf10, where `qgraph_jaccard`'s wedge count sized
+    *    33 partitions against the session's 32. */
+  def sizedPartitions(spark: SparkSession, rows: Long, rowsPerTask: Long,
+      margin: Double): Option[Int] = {
+    val n = math.min(4096L, rows / rowsPerTask + 1).toInt
+    if (n > spark.sessionState.conf.numShufflePartitions * margin) Some(n) else None
+  }
+
+  /** Bucket count for a bucketed write of `rows`: `rows / rowsPerBucket`
+    * rounded up, then up to a multiple of `floor` (whole scheduling waves,
+    * and never fewer than `floor`), capped at 256 (each bucket is one
+    * write task and one file, so the cap bounds the write fan-out). */
+  def bucketsFor(rows: Long, rowsPerBucket: Long, floor: Int): Int = {
+    val needed = (rows + rowsPerBucket - 1) / rowsPerBucket
+    math.min(256L, math.max(1L, (needed + floor - 1) / floor) * floor).toInt
+  }
 }

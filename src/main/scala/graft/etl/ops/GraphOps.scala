@@ -225,26 +225,18 @@ object GraphOps {
       // bit-exact vs the oracle.
       val nodes = deg.select(col("src").as("v"), col("deg"))
         .crossJoin(broadcast(nRow))
-      // Round 14 (verdict task 2 — the fixed-partition probe applied to
-      // the iteration family): the contribution aggregate below is the
-      // one per-iteration structure whose per-task state grows with the
-      // graph at a fixed partition count (its hash map holds
-      // nodes/partitions (dst, sum) entries; every other piece is either
-      // a spillable SMJ sort or node-scale checkpoint state, and the
-      // round-12 StageProbe showed what its sort-fallback costs: 39 GB
-      // memory-spill per iteration when the map outgrew its pool share).
-      // Size it from the node-domain bound — copurchase node ids are
-      // part keys, so the part table's footer row count (metadata-only,
-      // no fact scan) bounds distinct dst exactly — at the same ~1.5 M
-      // keys/task target as the wedge aggregate. Below the trip point
-      // the un-numbered repartition(dst) is kept verbatim: it stays
-      // AQE-coalescible and the ≤ sf60 proven plans are untouched
-      // (6 M part keys at sf30 → nparts 5 ≪ 32; the explicit count
-      // engages around sf700 at defParts 32, and on a 1000-executor
-      // session with defParts in the thousands, proportionally later).
-      val defParts = spark.sessionState.conf.numShufflePartitions
-      val nodeBound = TableStats.rows(spark, Tables.path(sfDir, "part"))
-      val contribParts = TableStats.partsFor(nodeBound, 1500000L)
+      // The contribution aggregate below is the one per-iteration
+      // structure whose per-task state grows with the graph at a fixed
+      // partition count: its hash map holds nodes/partitions (dst, sum)
+      // entries, and outgrowing its pool share falls back to sorting
+      // (PERF.md round 12). Copurchase node ids are part keys, so the part
+      // table's footer row count bounds distinct dst exactly, and sizes
+      // the aggregate's partitions at [[TableStats.rowsPerTask]]. Below
+      // the trip point the unnumbered repartition(dst) is kept: it stays
+      // AQE-coalescible.
+      val contribParts = TableStats.sizedPartitions(spark,
+        TableStats.rows(spark, Tables.path(sfDir, "part")),
+        TableStats.rowsPerTask(spark), margin = 1.0)
       var pr = nodes.select(col("v"), col("deg"),
         expr("1000000000000 div n").as("pr"))
       for (_ <- 1 to 3) {
@@ -291,8 +283,8 @@ object GraphOps {
           val joined = dir
             .join(share, dir("src") === share("__sv"))
             .select(col("dst"), col("__share").as("c"))
-          if (contribParts > defParts) joined.repartition(contribParts, col("dst"))
-          else joined.repartition(col("dst"))
+          contribParts.fold(joined.repartition(col("dst")))(
+            n => joined.repartition(n, col("dst")))
         }
           .groupBy(col("dst"))
           .agg(sum(col("c")).as("s"))
@@ -584,41 +576,26 @@ object GraphOps {
         col("__t").as("__p"), explode(sequence(col("__t"), col("__tmax"))).as("__q"))
       val r = idx.select(col("src").as("n"), col("dst").as("b"),
         explode(sequence(lit(0), col("__t"))).as("__p"), col("__t").as("__q"))
-      // The wedge-pair aggregate is the real scale surface, and its keys
-      // are nearly UNIQUE (measured sf10: 48.2 M distinct pairs from
-      // 48.3 M wedges, only 76 pairs ≥ 3) — so map-side partial
-      // aggregation reduces nothing and the final per-task hash map
-      // holds wedges/partitions keys. At the session's fixed 32
-      // partitions that map outgrows the per-task budget with the
-      // corpus (4.5 M keys/task at sf30 — hash-agg sort fallback,
-      // measured 4.4× CPU on 3× data while the wedge COUNT grew exactly
-      // 2.99×). Size the aggregate's partitioning from the EXACT wedge
-      // count instead — Σ deg·(deg−1)/2 is one metadata-scale job over
-      // the degree frame that exists anyway — targeting ~1.5 M keys per
-      // task (the "partitions sized so state fits executor memory"
-      // rule, driven by data, not config); when the target does not
-      // exceed the session default the explicit repartition is SKIPPED
-      // and the aggregate keeps its own exchange — the probe must never
-      // cost small scales an extra fact-scale shuffle. The pair key
-      // also packs into ONE long (partkeys < 2³¹ by construction —
-      // sequential GenData ids; sf1000 ≈ 2×10⁸ still fits) so each map
-      // entry is a single fixed-width key: half the bytes, one
-      // hash/compare per probe. Targets measured at sf30 best-of-3:
-      // ~1.5 M keys/task → 16.1 s (was 23.8); ~2 M → 19.7 — the smaller
-      // per-task map wins, so 1.5 M is the target; the repartition only
-      // fires when it beats the default by ≥ 25% (a barely-bigger
-      // exchange is pure overhead — measured at sf10, where wedges/1.5 M
-      // lands at 33 vs the session's 32).
+      // The wedge-pair aggregate's keys are nearly UNIQUE (sf10: 48.2 M
+      // distinct pairs from 48.3 M wedges), so map-side partial
+      // aggregation reduces nothing and the final per-task hash map holds
+      // wedges/partitions keys; at a fixed partition count it outgrows
+      // the per-task budget with the corpus (PERF.md round 12). The EXACT
+      // wedge count, Σ deg·(deg−1)/2, is one metadata-scale job over the
+      // degree frame that exists anyway, and sizes the aggregate's
+      // partitions at [[TableStats.rowsPerTask]]; when that does not beat
+      // the session default the aggregate keeps its own exchange. The
+      // pair key packs into ONE long (partkeys < 2³¹ by construction), so
+      // each map entry is a single fixed-width key.
       val wedgeCnt = Option(
         deg.agg(sum(expr("deg * (deg - 1) div 2")).cast(LongType)).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val defParts = spark.sessionState.conf.numShufflePartitions
-      val nparts = TableStats.partsFor(wedgeCnt, 1500000L)
+      val nparts = TableStats.sizedPartitions(spark, wedgeCnt,
+        TableStats.rowsPerTask(spark), margin = 1.25)
       val pairs = l.join(r, Seq("n", "__p", "__q"))
         .filter(col("a") < col("b"))
         .select((shiftleft(col("a"), 32) + col("b")).as("__pk"))
-      val common = (if (nparts * 4 > defParts * 5) pairs.repartition(nparts, col("__pk"))
-        else pairs)
+      val common = nparts.fold(pairs)(n => pairs.repartition(n, col("__pk")))
         .groupBy(col("__pk"))
         .agg(count(lit(1)).as("n_common"))
         .filter(col("n_common") >= 3)

@@ -2170,18 +2170,14 @@ object LlmOps {
     * map-side partial aggregation reduces ~nothing while each scan
     * task's hash map wants ~its whole input as state — measured at sf30
     * as 7.1 + 6.8 GB of sort-fallback spill inside qllm_dupfrac's
-    * frequency aggregate (StageProbe, PERF.md round 12 part 5). An
-    * explicit repartition on `g` moves BOTH aggregate modes past the
-    * exchange, where per-task keys = keys/partitions (the pagerank
-    * rule: map-side combine is only free when keys repeat WITHIN a
-    * task). The partition count is sized from the EXACT gram total —
-    * Σ per-doc distinct counts, read off the checkpointed perDoc frame
-    * both callers join against anyway, so sizing costs one doc-scale
-    * sum — targeting ~1.5 M keys/task (the jaccard-measured target:
-    * smaller per-task maps beat fewer tasks). The repartition is
-    * SKIPPED when the sized count does not beat the session default by
-    * ≥ 25%: a barely-bigger exchange is pure overhead at small scale,
-    * and the aggregate then keeps its own (partial-agg) exchange. */
+    * frequency aggregate (PERF.md round 12). An explicit repartition on
+    * `g` moves BOTH aggregate modes past the exchange, where per-task
+    * keys = keys/partitions (map-side combine is only free when keys
+    * repeat WITHIN a task). The partition count is sized from the EXACT
+    * gram total — Σ per-doc distinct counts, read off the checkpointed
+    * perDoc frame both callers join against anyway, so sizing costs one
+    * doc-scale sum — at [[TableStats.rowsPerTask]]; below the trip point
+    * the aggregate keeps its own (partial-agg) exchange. */
   private def gramStream(spark: SparkSession, sfDir: String, n: Int)
       : (DataFrame, DataFrame) = {
     val gsets = Tables.documents(spark, sfDir)
@@ -2200,10 +2196,9 @@ object LlmOps {
     val totalGrams = Option(perDoc.agg(sum(col("n_grams"))).head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val grams = gsets.select(col("doc_id"), explode(col("gs")).as("g"))
-    val defParts = spark.sessionState.conf.numShufflePartitions
-    val nparts = TableStats.partsFor(totalGrams, 1500000L)
-    val keyed = if (nparts * 4 > defParts * 5)
-      grams.repartition(nparts, col("g")) else grams
+    val keyed = TableStats.sizedPartitions(spark, totalGrams,
+        TableStats.rowsPerTask(spark), margin = 1.25)
+      .fold(grams)(n => grams.repartition(n, col("g")))
     (perDoc, keyed)
   }
 

@@ -342,37 +342,18 @@ object ScalarOps {
             .as("mo"))
       def g(m: String): Column = lit(5) * expr(s"$m div 7") + least(col(m) % 7, lit(5))
       // SHUFFLE_HASH on the orders side: the only consumer of the join is
-      // a 3-group aggregate, so the SMJ default paid a full sort of the
-      // lineitem side (180 M rows at sf30 — 5.9 GB of spill, StageProbe
-      // round 12 part 8) for an ordering nothing downstream uses.
-      // Round 13: the hash build is bounded by keys/PARTITION, and the
-      // round-12 form pinned partitions at the session's 32 — so the
-      // per-task build GREW with data until sf60's 90 M orders (2.8 M
-      // keys/task) died with UNABLE_TO_ACQUIRE_MEMORY building the
-      // LongHashedRelation (the sf60 probe's find). The join is now
-      // key-repartitioned to a count-sized partition number targeting
-      // ~1.5 M build keys/task (the sf30-proven density; same sizing
-      // discipline as [[LlmOps.gramStream]]), skipped when the session
-      // default already gives that density — the ≤ sf30 plans are
-      // byte-identical to the round-12 proven ones. The sizing count is
-      // the orders footer row count (no Spark job). Both sides repartition on their join key
-      // with the SAME count, so EnsureRequirements inserts no further
-      // exchange and the hint still plans the hash build on orders.
-      val defParts = spark.sessionState.conf.numShufflePartitions
-      val nOrders = TableStats.rows(spark, Tables.path(sfDir, "orders"))
-      val nparts = TableStats.partsFor(nOrders, 1500000L)
-      // Trip point is nparts > defParts, NOT a ≥ 25% hysteresis (round-14
-      // reconciliation): both sides repartition on the join key with the
-      // same count, so the exchange REPLACES the join's own shuffle —
-      // a 10%-bigger partition number costs nothing extra here, unlike
-      // the post-join aggregate repartition in GraphOps.qgraphJaccard
-      // where a barely-bigger count adds a whole second exchange and the
-      // 25% hysteresis is the measured-right guard.
-      val (liK, oK) =
-        if (nparts > defParts)
-          (li.repartition(nparts, col("l_orderkey")),
-            o.repartition(nparts, col("o_orderkey")))
-        else (li, o)
+      // a 3-group aggregate, so a sort-merge join would sort the lineitem
+      // side for an ordering nothing downstream uses. A hash build cannot
+      // spill, so its keys per task are bounded: when the orders footer
+      // row count needs more partitions than the session default at
+      // [[TableStats.rowsPerTask]], both sides repartition on their join
+      // key with that count. EnsureRequirements then inserts no further
+      // exchange and the hint still builds on orders (PERF.md round 13).
+      val (liK, oK) = TableStats.sizedPartitions(spark,
+          TableStats.rows(spark, Tables.path(sfDir, "orders")),
+          TableStats.rowsPerTask(spark), margin = 1.0)
+        .fold((li, o))(n =>
+          (li.repartition(n, col("l_orderkey")), o.repartition(n, col("o_orderkey"))))
       liK.join(oK.hint("SHUFFLE_HASH"), col("l_orderkey") === col("o_orderkey"))
         .select(col("l_returnflag"), (g("ms") - g("mo")).as("busdays"))
         .groupBy(col("l_returnflag"))

@@ -275,40 +275,34 @@ object WindowOps {
   private val qwinGapfill = QueryDef(
     "qwin_gapfill",
     build = (spark, sfDir) => {
-      // Segment form, ONE exchange total (round 12; was 75 s at sf30 with
-      // 66 GB of aggregate spill): each hourly observation emits its own
-      // gap segment [h, next_h) via lead + sequence-explode, so the dense
-      // grid never exists as a join input and the forward fill is the
-      // segment's own value — no grid⋈hourly join (13 GB spill), no
-      // last-ignoreNulls window over the 315 M filled rows (19 GB spill,
-      // run TWICE by the range-sampler). The one exchange is
-      // repartitionByRange(user): RangePartitioning(user) clusters both
-      // the hourly aggregate and the lead window (ordering ⊆ clustering),
-      // and is a PREFIX of the final (user, hs) sort's required ordering,
-      // so the closing orderBy plans as a LOCAL sort — no output-scale
-      // range exchange, no boundary-sampling re-execution of the subtree
-      // (the qwin_rank finding; here the doubled subtree was half the
-      // query). Every grid hour ≥ the user's first observation, so the
-      // fill is always the segment head's v — value-identical to the
-      // window form (oracle-exact at sf0.01, sf0.1 AND sf3 — all 31.5 M
-      // sf3 grid rows DuckDB-matched).
-      // partition count sized from the exact event count (the footer row
-      // count, no Spark job), targeting the OUTPUT sort, not the input: the
-      // filled grid fans each observation out ~10× (a user's span in
-      // hours vs their event count), and the closing local sort holds a
-      // whole task's grid in memory — at the session's 32 partitions that
-      // was 10 M filled rows/task at sf30, 16.7 GB of sort spill. ~250 k
-      // events/task ≈ 2.5 M grid rows/task keeps the sort in memory;
-      // skipped when it does not beat the session default by ≥ 25%.
-      val evCnt = TableStats.rows(spark, Tables.path(sfDir, "events"))
-      val defParts = spark.sessionState.conf.numShufflePartitions
-      val nparts = TableStats.partsFor(evCnt, 250000L)
+      // Segment form, ONE exchange total: each hourly observation emits
+      // its own gap segment [h, next_h) via lead + sequence-explode, so
+      // the dense grid never exists as a join input and the forward fill
+      // is the segment's own value — no grid⋈hourly join and no
+      // last-ignoreNulls window over the filled rows (PERF.md round 12).
+      // The one exchange is repartitionByRange(user): RangePartitioning
+      // (user) clusters both the hourly aggregate and the lead window
+      // (ordering ⊆ clustering), and is a PREFIX of the final (user, hs)
+      // sort's required ordering, so the closing orderBy plans as a LOCAL
+      // sort — no output-scale range exchange, no boundary-sampling
+      // re-execution of the subtree. Every grid hour ≥ the user's first
+      // observation, so the fill is always the segment head's v —
+      // value-identical to the window form.
+      // The range partition count is sized from the exact event count
+      // (the footer row count, no Spark job) for the OUTPUT sort, not the
+      // input: the filled grid fans each observation out ~10× (a user's
+      // span in hours vs their event count), and the closing local sort
+      // holds a whole task's grid in memory. So the budget here is a
+      // spillable sort's, not a hash state's: ~250 k events ≈ 2.5 M grid
+      // rows a task keeps the sort in memory (PERF.md round 12).
+      val nparts = TableStats.sizedPartitions(spark,
+        TableStats.rows(spark, Tables.path(sfDir, "events")),
+        rowsPerTask = 250000L, margin = 1.25)
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id"), date_trunc("hour", col("ts")).as("h"),
           col("value"))
-      val hourly = (if (nparts * 4 > defParts * 5)
-          ev.repartitionByRange(nparts, col("user_id"))
-        else ev.repartitionByRange(col("user_id")))
+      val hourly = nparts.fold(ev.repartitionByRange(col("user_id")))(
+          n => ev.repartitionByRange(n, col("user_id")))
         .groupBy(col("user_id"), col("h"))
         .agg(sum(d124(col("value"))).cast(DecimalType(38, 4)).as("v"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("h"))

@@ -15,7 +15,10 @@ import graft.etl.ExtractFixtures
   *   java -cp target/scala-2.13/classes:/opt/spark/jars/\* \
   *     graft.tools.StageExtract /tmp/graft_sf100 [step ...]
   *
-  * Steps default to all; naming a subset stages just those (order kept).
+  * Steps default to all of `ExtractFixtures.staging`, in its order
+  * (copurchaseEdges first); naming a subset of its names (customerCsv,
+  * bucketedOrdersLineitem, ...) stages just those, in the list's order. An
+  * unknown name fails before the session starts.
   * SPARK_GRAFT_STAGE_CONF adds session confs for the STAGING session only.
   * `spark.io.compression.codec=zstd` there makes shuffle transients ≈ 1.5×
   * smaller than the lz4 default and leaves the staged outputs
@@ -57,6 +60,9 @@ object StageExtract {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val only = args.drop(1).toSet
+    val unknown = only -- ExtractFixtures.staging.map(_._1)
+    require(unknown.isEmpty, s"unknown staging steps: ${unknown.mkString(", ")}; " +
+      s"known: ${ExtractFixtures.staging.map(_._1).mkString(", ")}")
     val cpus = graft.GraftSession.cpus
     val parts = sizedShufflePartitions(sfDir, cpus)
     val b = graft.GraftSession.builder(cpus)
@@ -86,29 +92,10 @@ object StageExtract {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(s"[stage] sfDir=$sfDir cpus=$cpus shufflePartitions=$parts")
-    val steps: Seq[(String, () => Any)] = Seq(
-      "copurchase" -> (() => ExtractFixtures.copurchaseAdjacency(spark, sfDir)),
-      "bucketed" -> (() => ExtractFixtures.bucketedOrdersLineitem(spark, sfDir)),
-      "years" -> (() => {
-        ExtractFixtures.ordersByYear(spark, sfDir)
-        ExtractFixtures.ordersByYearCompact(spark, sfDir)
-      }),
-      "evolved" -> (() => ExtractFixtures.ordersEvolved(spark, sfDir)),
-      "documents" -> (() => {
-        ExtractFixtures.documentsJson(spark, sfDir)
-        ExtractFixtures.documentsText(spark, sfDir)
-      }),
-      "csvjson" -> (() => {
-        ExtractFixtures.customerCsv(spark, sfDir)
-        ExtractFixtures.eventsDailyCsv(spark, sfDir)
-        ExtractFixtures.eventsDailyJson(spark, sfDir)
-      }),
-      "media" -> (() => ExtractFixtures.mediaBmp(spark, sfDir)),
-      "orc" -> (() => ExtractFixtures.supplierOrc(spark, sfDir)))
-    steps.filter(s => only.isEmpty || only(s._1)).foreach { case (n, f) =>
+    ExtractFixtures.staging.filter(s => only.isEmpty || only(s._1)).foreach { case (n, f) =>
       oldGen.foreach(_.resetPeakUsage())
       val t0 = System.nanoTime()
-      f()
+      f(spark, sfDir)
       val oldPeak = oldGen.map(_.getPeakUsage.getUsed).sum
       // Shuffle files from a finished step are deleted by the weak-ref
       // ContextCleaner, which never runs in a big-heap JVM that never

@@ -87,6 +87,43 @@ class FixturesSpec extends SparkFixture {
     }
   }
 
+  test("TableStats.rowsPerTask: the hash-state budget follows heap, memory fraction and threads") {
+    val gb = 1L << 30
+    // 16 GiB with 32 threads: 1.58 M, 5.4% above the fixed 1.5 M rows a
+    // task the sized sites used before the budget
+    assert(TableStats.rowsPerTask(16 * gb, 0.6, 32) == 1581121L)
+    assert(TableStats.rowsPerTask(2 * gb, 0.6, 4) == 1374683L)
+    // 1 GiB with 4 threads: 1.2 M hash-build rows a task failed there and
+    // 1 M passed (PERF.md, "The hash build at sf1"), so the budget keeps
+    // about a 2x margin below what passed
+    val at1g4 = TableStats.rowsPerTask(gb, 0.6, 4)
+    assert(at1g4 == 569376L)
+    // a smaller memory fraction or more threads only shrink the budget
+    assert(TableStats.rowsPerTask(gb, 0.3, 4) < at1g4)
+    assert(TableStats.rowsPerTask(gb, 0.6, 8) < at1g4)
+    // never below one row, even when the heap is under the reserved 300 MB
+    assert(TableStats.rowsPerTask(200L << 20, 0.6, 4) == 1L)
+    assert(TableStats.rowsPerTask(300L << 20, 0.6, 4) == 1L)
+    assert(TableStats.rowsPerTask(spark) >= 1L)
+  }
+
+  test("TableStats.sizedPartitions: a sized count only when it beats the session default by the margin") {
+    val d = spark.sessionState.conf.numShufflePartitions
+    val perTask = 1000L
+    // rows / perTask + 1 partitions
+    def sized(parts: Int, margin: Double) =
+      TableStats.sizedPartitions(spark, (parts - 1) * perTask, perTask, margin)
+    assert(sized(d, 1.0).isEmpty)
+    assert(sized(d + 1, 1.0).contains(d + 1))
+    // 1.25: the count must exceed 1.25 x the default, not merely reach it
+    val trip = math.floor(d * 1.25).toInt
+    assert(sized(trip, 1.25).isEmpty)
+    assert(sized(trip + 1, 1.25).contains(trip + 1))
+    assert(TableStats.sizedPartitions(spark, 0L, perTask, 1.0).isEmpty)
+    // capped at 4096 partitions
+    assert(TableStats.sizedPartitions(spark, Long.MaxValue / 2, 1L, 1.0).contains(4096))
+  }
+
   test("a bucketed fixture whose marker holds no bucket count fails to re-attach") {
     val sfDir = Files.createTempDirectory("graft_bkt_sf").toString
     try {

@@ -563,8 +563,10 @@ class PlanSpec extends SparkFixture {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("adjBucketsFor: adjacency buckets grow with staged volume, floor 32, cap 256") {
-    import graft.etl.ExtractFixtures.{adjBucketsFor, AdjBuckets}
+  test("bucketsFor: adjacency buckets grow with staged volume, floor 32, cap 256") {
+    import graft.etl.ExtractFixtures.{AdjBuckets, AdjRowsPerBucket}
+    def adjBucketsFor(doubledRows: Long): Int =
+      graft.etl.TableStats.bucketsFor(doubledRows, AdjRowsPerBucket, AdjBuckets)
     // test-scale graphs and everything through sf10 (~180 M doubled rows
     // at 6 M rows/bucket = 30 needed) stay at the 32-bucket floor — all
     // pre-round-12 fixture layouts and plan pins are unchanged there
@@ -582,8 +584,10 @@ class PlanSpec extends SparkFixture {
       .forall(b => b % AdjBuckets == 0))
   }
 
-  test("factBucketsFor: orders/lineitem buckets grow with scale, floor 8, cap 256") {
-    import graft.etl.ExtractFixtures.{factBucketsFor, Buckets}
+  test("bucketsFor: orders/lineitem buckets grow with scale, floor 8, cap 256") {
+    import graft.etl.ExtractFixtures.{Buckets, FactRowsPerBucket}
+    def factBucketsFor(lineitemRows: Long): Int =
+      graft.etl.TableStats.bucketsFor(lineitemRows, FactRowsPerBucket, Buckets)
     // everything through sf60 (360 M lineitem rows / 45 M target = 8
     // needed) keeps the 8-bucket floor — the tracked ladder records and
     // the PlanSpec "8 out of 8" bucket-selection pin are unchanged there

@@ -161,6 +161,40 @@ class RegistrySpec extends SparkFixture {
       unset.toSeq.sorted.mkString(", "))
   }
 
+  test("one partition-sizing rule: only TableStats reads the session's shuffle partitions") {
+    // a site that reads numShufflePartitions decides its own trip point;
+    // a literal per-task row count is right for one heap and thread count
+    val main = sources("src/main", ".scala").map(f => f -> code(f))
+    def hits(literal: String) = main.map { case (f, c) =>
+      f.getFileName.toString -> java.util.regex.Pattern.quote(literal).r.findAllIn(c).size
+    }.filter(_._2 > 0)
+    val reads = hits("numShufflePartitions")
+    assert(reads == Seq("TableStats.scala" -> 1), s"numShufflePartitions read in: $reads")
+    val fixed = hits("1500000L")
+    assert(fixed.isEmpty, s"a literal 1.5 M rows a task in: $fixed")
+  }
+
+  test("one staging list: every ExtractFixtures staging call once, copurchase first") {
+    import graft.etl.ExtractFixtures
+    val names = ExtractFixtures.staging.map(_._1)
+    assert(names.distinct == names)
+    assert(names.take(2) == Seq("copurchaseEdges", "copurchaseAdjacency"))
+    // every public ExtractFixtures def that takes (spark, sfDir) stages a
+    // fixture, and the list names each by its method name
+    val stagers = "(?m)^  def (\\w+)\\(spark: SparkSession, sfDir: String\\)".r
+      .findAllMatchIn(code(java.nio.file.Paths.get(
+        "src/main/scala/graft/etl/ExtractFixtures.scala")))
+      .map(_.group(1)).toSet
+    // supplierAvro needs the optional spark-avro connector, so nothing
+    // stages it up front; the query that reads it stages it on demand
+    assert(names.toSet == stagers - "supplierAvro", stagers)
+    // an unknown step fails before the staging session starts
+    val e = intercept[IllegalArgumentException](
+      graft.tools.StageExtract.main(Array(sfTiny, "nope_step")))
+    assert(e.getMessage.contains("unknown staging steps: nope_step"), e.getMessage)
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("Bench.queryNames parses known names and refuses an unknown one") {
     assert(graft.Bench.queryNames(" qagg_percentile,,qwin_rank ", "--isolate") ==
       Seq("qagg_percentile", "qwin_rank"))
