@@ -126,17 +126,6 @@ object Bench {
     // absorbs its codegen warmup — sorted order keeps per-query numbers
     // comparable across rounds (the round-5 lesson: qllm_ivf "regressed"
     // 1.3→3.0 s purely from map-order churn).
-    // Time one query, then drop only the localCheckpoint blocks IT created:
-    // the iterative operators (dedup clusters, graph family) checkpoint
-    // per round, and 175 queries of leaked MEMORY_AND_DISK blocks in one
-    // 8 GiB JVM turn into eviction + GC storms that charge the queries
-    // running LATE in the alphabet (measured: qgraph_triangles 32 s
-    // mid-suite vs 3-5 s in isolation, same code and data). Unpersist is
-    // after the clock stops — cleanup is harness cost, not query cost —
-    // and is scoped by diffing the persistent-RDD id set before/after, so
-    // a future suite-wide cache (or anything another thread pinned)
-    // survives, and no localCheckpoint'd RDD a later query still holds is
-    // ever made unrecomputable by the harness.
     // Process-CPU seconds alongside wall (JMX): the graph family's sf10
     // wall-clock isolates spread 68.8–108.3 s across round-9 sessions on
     // UNCHANGED code (box-phase noise) — CPU seconds are immune to host
@@ -159,10 +148,16 @@ object Bench {
       gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
       s
     }
+    /** Times one query (wall, process CPU and GC seconds), then releases
+      * the checkpoints it created ([[graft.etl.Ckpt.releasing]]): leaked
+      * blocks from the per-round checkpoints of the iterative operators
+      * turn into eviction and GC storms that charge the queries running
+      * late in the suite. The release is scoped, so nothing a later query
+      * holds becomes unrecomputable, and blocking and outside the clock,
+      * so cleanup never lands in the next query's time. */
     def timed(name: String, fn: (SparkSession, String) => DataFrame,
               consume: DataFrame => Unit = _.count())
-        : (Double, Double, Double) = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+        : (Double, Double, Double) = graft.etl.Ckpt.releasing(spark) {
       val g0 = gcMillis
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
@@ -174,16 +169,6 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       val dc = (osBean.getProcessCpuTime - c0) / 1e9
       val dg = (gcMillis - g0) / 1e3
-      // BLOCKING unpersist (round-14 verdict task 3): with blocking=false
-      // the removal work (block-manager bookkeeping, disk deletes) proceeds
-      // asynchronously WHILE THE NEXT QUERY'S CLOCK RUNS, so one query's
-      // cleanup lands in its successor's slot — the exact cross-query
-      // interference signature the driver's r14 record showed (untouched
-      // qllm_hardneg 8.3× its isolate in-suite). The wait happens here,
-      // after the clock stopped: harness cost, never query cost.
-      spark.sparkContext.getPersistentRDDs.foreach { case (rddId, rdd) =>
-        if (!before.contains(rddId)) rdd.unpersist(blocking = true)
-      }
       (dt, dc, dg)
     }
     // Broadcast/shuffle hygiene between measurement phases (round-14

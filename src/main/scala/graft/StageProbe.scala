@@ -57,13 +57,17 @@ object StageProbe {
 
     val q = graft.etl.Registry.byName(name)
     // fixture staging + first-run codegen land in the warmup phase so the
-    // measured phase's stages carry steady-state numbers only
+    // measured phase's stages carry steady-state numbers only; each run
+    // releases its checkpoints, so the measured run starts from the block
+    // manager state of a fresh query, not holding the warmup's blocks
     phase = "warmup"
-    Bench.noop(q.build(spark, sfDir))
+    graft.etl.Ckpt.releasing(spark)(Bench.noop(q.build(spark, sfDir)))
     phase = "measured"
-    val t0 = System.nanoTime()
-    Bench.noop(q.build(spark, sfDir))
-    val wall = (System.nanoTime() - t0) / 1e9
+    val wall = graft.etl.Ckpt.releasing(spark) {
+      val t0 = System.nanoTime()
+      Bench.noop(q.build(spark, sfDir))
+      (System.nanoTime() - t0) / 1e9
+    }
     println(f"[probe total] $name measured wall=$wall%.2f s  (sf=$sfDir, local[${GraftSession.cpus}])")
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.etl.Ckpt
 import graft.functions.VectorFunctions.{cosine_similarity, dot_product, vector_norm}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -213,24 +214,21 @@ object Graft {
     * which makes the probe one tiny aggregate over the already-
     * checkpointed frame instead of a join. All per-round state is
     * edge/label DataFrames keyed by fixed-width ids: no driver-side
-    * graph, no per-key adjacency in executor memory. `localCheckpoint`
-    * cuts the growing lineage each round (at real cluster scale:
-    * `checkpoint` to reliable storage instead).
+    * graph, no per-key adjacency in executor memory. [[graft.etl.Ckpt]]
+    * cuts the growing lineage each round.
     */
   def dedupClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
     // symmetrize in ONE pass over `pairs` (an explode of both directions):
     // a union of two projections would evaluate the upstream candidate
     // pipeline twice — measured at ~2× the whole pair-generation cost
-    val edges = pairs.select(explode(array(
+    val edges = Ckpt(pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint()
+      .distinct())
+    var labels = Ckpt(edges.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")))
     // coalesce: sum over an EMPTY label frame is null (no pairs at all)
     def labelSum(df: DataFrame): java.math.BigDecimal = df
       .agg(coalesce(sum(col("cluster").cast(DecimalType(38, 0))),
@@ -248,11 +246,10 @@ object Graft {
         .agg(min(col("cluster")).as("cluster"))
       // pointer jump: cluster ← label(cluster). Label targets are always
       // node ids (mins over node ids), so the join always matches.
-      val next = stepped
+      val next = Ckpt(stepped
         .join(stepped.select(col("id").as("cluster"), col("cluster").as("__c2")),
           Seq("cluster"), "left")
-        .select(col("id"), coalesce(col("__c2"), col("cluster")).as("cluster"))
-        .localCheckpoint()
+        .select(col("id"), coalesce(col("__c2"), col("cluster")).as("cluster")))
       val nextSum = labelSum(next)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
@@ -340,11 +337,10 @@ object Graft {
     val withEmb = v.join(bk, "vec_id")
     // Bucket-mass frame: one ≤-row-per-bucket aggregate that drives BOTH
     // the corpus-scaled tile size and the exact build-row pricing below.
-    // localCheckpoint: it is read by up to two scalar actions plus
-    // nothing at execution time, and without the cut each read would
-    // recompute the srpBuckets crossJoin.
-    val bucketCounts = bk.groupBy(col("bucket")).agg(count(lit(1)).as("__m"))
-      .localCheckpoint()
+    // Checkpointed: it is read by up to two scalar actions plus nothing
+    // at execution time, and without the cut each read would recompute
+    // the srpBuckets crossJoin.
+    val bucketCounts = Ckpt(bk.groupBy(col("bucket")).agg(count(lit(1)).as("__m")))
     // Corpus-scaled tile size (round 14). The tiled join's shuffle
     // replicates each row of a g-tile bucket ~g/2× per side, so at FIXED
     // blockSize the pair exchange's bytes grow QUADRATICALLY with the
@@ -490,19 +486,16 @@ object Graft {
     val bk = srpBuckets(vectors, id, vec, planes)
     val wIdx = Window.partitionBy(col("bucket")).orderBy(col("vec_id"))
     // one bucket-ordered index frame feeds FOUR consumers (probe pool,
-    // phase-1 left side, phase-2 both sides): checkpoint it SERIALIZED so
-    // the corpus × planes bucketing subtree runs once, not four times,
-    // and the vectors unroll incrementally ([[serialized-checkpoint]]
-    // contract — the frame is n × (id, vec, bucket, idx), fact-scale)
+    // phase-1 left side, phase-2 both sides): checkpoint it
+    // ([[graft.etl.Ckpt]]) so the corpus × planes bucketing subtree runs
+    // once, not four times.
     // per-vector norm computed ONCE before the checkpoint: both phases'
     // pair filters then pay a single dot pass per pair instead of the
     // fused three-term loop; dot/(norm·norm) is bit-identical to the
     // fused cosine (see [[srpCandidates]]'s scoring note)
-    val idx = v.join(bk, "vec_id")
+    val idx = Ckpt(v.join(bk, "vec_id")
       .withColumn("__i", row_number().over(wIdx).cast(LongType) - 1L)
-      .withColumn("__n", vector_norm(col("__v")))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .withColumn("__n", vector_norm(col("__v"))))
     val pool = idx.filter(col("__i") < probeCap.toLong)
       .select(col("bucket"), col("vec_id").as("__u"),
         col("__v").as("__vu"), col("__n").as("__nu"))
@@ -816,14 +809,13 @@ object Graft {
         least(lit(buckets - 1L),
           floor((col("__cum") - col("__c")) * buckets / col("__s")).cast(LongType)))
       .filter(col("__k") > col("__kprev"))
-    // ONE-row boundary frame: localCheckpoint so the two consumers of the
+    // ONE-row boundary frame: checkpointed so the two consumers of the
     // bucketed output (per-bucket counts and the final rank join) don't
     // each replay the whole sample→cum→marks subtree in the static plan
     // (the qagg_mad treatment; this frame is ≤ `buckets` doubles)
-    val boundsArr = marks
+    val boundsArr = Ckpt(marks
       .select(explode(expr("array_repeat(__v, CAST(__k - __kprev AS INT))")).as("__b"))
-      .agg(sort_array(collect_list(col("__b"))).as("__bounds"))
-      .localCheckpoint()
+      .agg(sort_array(collect_list(col("__b"))).as("__bounds")))
     df.crossJoin(broadcast(boundsArr))
       .withColumn("__bucket",
         when(orderCol.isNull,

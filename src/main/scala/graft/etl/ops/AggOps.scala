@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables, TableStats}
+import graft.etl.{Ckpt, QueryDef, Tables}
 import graft.etl.Dets._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -96,24 +96,6 @@ object AggOps {
       .groupBy(col(partC), col("__q"))
       .agg(min(col(vC)).as("__pick"), max(col("__tot")).as("__tot"))
   }
-
-  /** Census checkpoint with a SIZE-GATED storage level (round-15, closing
-    * the round-14 advice): the value censuses here are bounded by
-    * min(input rows, value domain), so below `serGateRows` input rows the
-    * default deserialized level is kept — serialized storage measurably
-    * costs ~15 % per pass at sf0.1 (5-run noop A/B: wquantile 1.47 → 1.74,
-    * percentile 0.93 → 1.10) for zero benefit at that heap footprint —
-    * while above it the census approaches row scale and MUST be
-    * serialized/spillable (a 6·10⁷-row deserialized census is the
-    * heap-OOM shape ckptEdges' scaladoc documents). `inputRows` is the
-    * fact table's footer row count ([[TableStats.rows]], no Spark job).
-    * 3·10⁷ rows ≈ a few GB deserialized at ~100 B/row: well
-    * inside a 16 GB driver-JVM heap below the gate, not above it. */
-  private def ckptCensus(df: DataFrame, inputRows: Long): DataFrame =
-    if (inputRows > 30000000L)
-      df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df.localCheckpoint()
 
   private val qaggPricing = QueryDef(
     "qagg_pricing",
@@ -309,22 +291,21 @@ object AggOps {
   private val qaggPercentile = QueryDef(
     "qagg_percentile",
     build = (spark, sfDir) => {
-      // Round 14 (guide §2.5): the per-status running-sum window over the
-      // whole (status, price) census — |statuses| = 3 serial sort tasks at
-      // any scale — is replaced by the binnedPicks prefix algebra (see the
-      // helper scaladoc): positions are identical exact integer cumulative
-      // counts, n is the same Σcnt, so every pick is bit-identical. The
-      // price maps to its scale-4 integer (exact bijection, the
-      // qagg_wquantile pattern) so bins and ordering ride plain longs.
+      // The picks come from the binnedPicks prefix algebra (see the
+      // helper scaladoc), not a per-status running-sum window, which would
+      // be |statuses| = 3 serial sort tasks at any scale: positions are
+      // exact integer cumulative counts, so every pick is bit-identical
+      // to the oracle's window. The price maps to its scale-4 integer
+      // (exact bijection, the qagg_wquantile pattern) so bins and
+      // ordering ride plain longs.
       // binnedPicks reads the census twice (bin rollup + crossing-bin
       // probe) — materialize the frame once instead of re-running the
-      // fact aggregate; storage level size-gated (ckptCensus scaladoc)
-      val vc = ckptCensus(Tables.orders(spark, sfDir).select(
+      // fact aggregate
+      val vc = Ckpt(Tables.orders(spark, sfDir).select(
           col("o_orderstatus").as("st"),
           (col("o_totalprice").cast(DecimalType(12, 4)) * lit(10000))
             .cast(LongType).as("pi"))
-        .groupBy(col("st"), col("pi")).agg(count(lit(1)).as("cnt")),
-        TableStats.rows(spark, Tables.path(sfDir, "orders")))
+        .groupBy(col("st"), col("pi")).agg(count(lit(1)).as("cnt")))
       val bp = binnedPicks(vc, "st", "pi", "cnt", 10000000L, Seq(
         (1, expr("(__tot - 1) div 2 + 1")),
         (2, expr("__tot div 2 + 1")),
@@ -738,12 +719,11 @@ object AggOps {
       val e = Tables.events(spark, sfDir)
         .select(col("event_type"), col("value").cast(DecimalType(12, 4)).as("v"))
       // the (type, value) histogram is the ONLY pass over raw events and
-      // is domain-bounded; materializing it (localCheckpoint) lets the
+      // is domain-bounded; materializing it (Ckpt) lets the
       // n / cum / dev / final branches reuse one exchange instead of
       // re-running scan+aggregate per branch — the static plan drops
       // from 33 Exchange nodes to single digits (PlanSpec pins < 10)
-      val vc = e.groupBy(col("event_type"), col("v")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      val vc = Ckpt(e.groupBy(col("event_type"), col("v")).agg(count(lit(1)).as("cnt")))
       val n = vc.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
       val cw = Window.partitionBy(col("event_type")).orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -763,8 +743,7 @@ object AggOps {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       // same move for the deviation histogram: mad and the outlier count
       // both read it
-      val dcum = dev.withColumn("cum", sum(col("cnt")).over(dw)).join(broadcast(n), "event_type")
-        .localCheckpoint()
+      val dcum = Ckpt(dev.withColumn("cum", sum(col("cnt")).over(dw)).join(broadcast(n), "event_type"))
       val mad = dcum.groupBy(col("event_type"))
         .agg((min(when(col("cum") >= expr("(n + 1) div 2"), col("dev2"))) +
           min(when(col("cum") >= expr("(n + 2) div 2"), col("dev2"))))
@@ -966,32 +945,26 @@ object AggOps {
       // DECIMAL(12,4) price), reconstruct the decimal at census scale:
       // the fact-scale aggregate hashes/compares plain longs
       //
-      // Round 14 (guide §2.5 — a 3-partition window is a parallelism-3
-      // sort however big the census): the old form ran ONE running-sum
-      // window PARTITIONED BY flag over the whole (flag, price) census —
-      // |flags| = 3 serial tasks sorting the full distinct-price frame
-      // each, a fixed-parallelism stage that dominates the query at every
-      // scale (sf0.1 materialized: 3.0 s, window ≈ half). The prefix
-      // algebra of qjoin_range_binned replaces it: per-(flag, $100-bin)
-      // partial weights roll up map-side; ONE metadata-scale window over
-      // ≤ ~1.1 k bins/flag yields bin prefix sums and totals; each
-      // quantile's crossing BIN is found on that tiny frame; and only the
-      // crossing bins' census rows (broadcast-joined, ≤ |flags|·3 bins)
-      // pay a within-bin running sum. cum(p) = binPrefix(<bin) +
+      // A running-sum window PARTITIONED BY flag would be |flags| = 3
+      // serial tasks sorting the whole distinct-price census, however big
+      // it is. The prefix algebra of qjoin_range_binned replaces it:
+      // per-(flag, $100-bin) partial weights roll up map-side; ONE
+      // metadata-scale window over ≤ ~1.1 k bins/flag yields bin prefix
+      // sums and totals; each quantile's crossing BIN is found on that
+      // tiny frame; and only the crossing bins' census rows
+      // (broadcast-joined, ≤ |flags|·3 bins) pay a within-bin running
+      // sum. cum(p) = binPrefix(<bin) +
       // withinBin(≤p) is the same exact integer sum, so each wq pick is
       // bit-identical; total_weight is the same Σcw. The census is
-      // localCheckpointed — it feeds the bin rollup AND the crossing-bin
-      // probe (domain-bounded rows, the qagg_mad vc precedent).
-      // storage level size-gated like the qagg_percentile census: distinct
-      // (flag, price) is near row-scale until the cent domain saturates
-      // (ckptCensus scaladoc — serialized only above the row gate)
-      val vw = ckptCensus(Tables.lineitem(spark, sfDir)
+      // checkpointed — it feeds the bin rollup AND the crossing-bin probe
+      // (the qagg_mad vc precedent); distinct (flag, price) is near
+      // row-scale until the cent domain saturates.
+      val vw = Ckpt(Tables.lineitem(spark, sfDir)
         .select(col("l_returnflag").as("flag"),
           (d124(col("l_extendedprice")) * lit(10000)).cast(LongType).as("pi"),
           d124(col("l_quantity")).cast(LongType).as("w"))
         .groupBy(col("flag"), col("pi"))
-        .agg(sum(col("w")).as("cw")),
-        TableStats.rows(spark, Tables.path(sfDir, "lineitem")))
+        .agg(sum(col("w")).as("cw")))
       // cum·100 ≥ tot·q  ⟺  cum ≥ ⌈tot·q/100⌉ over integers — the
       // binnedPicks target form. $100 bins (pi div 10^6): the bin frame
       // is ≤ ~1.1 k rows per flag at ANY scale (price-domain-bound).
@@ -1275,8 +1248,11 @@ object AggOps {
         .select(col("user_id"), col("event_type"))
       // NULL is no type: it gets no bit, and the left join below keeps a
       // user whose rows are all NULL-typed with mask 0, so that user
-      // counts toward n_total only (the oracle's count(DISTINCT user_id))
-      val dict = ev.select(col("event_type")).filter(col("event_type").isNotNull).distinct()
+      // counts toward n_total only (the oracle's count(DISTINCT user_id)).
+      // dict feeds FOUR broadcast consumers (mask join, singles, both
+      // pair sides); materialize the ≤|types|-row frame once so the
+      // distinct-over-events scan runs exactly once
+      val dict = Ckpt(ev.select(col("event_type")).filter(col("event_type").isNotNull).distinct()
         .withColumn("__i",
           row_number().over(Window.orderBy(col("event_type"))) - 1)
         // fail-loud bitmask-width guard: shiftleft on a LONG silently
@@ -1285,20 +1261,13 @@ object AggOps {
         // NULL (keeping every row) while the domain fits and throws the
         // moment it doesn't, so the shape can never silently mis-count
         .filter(expr("assert_true(__i <= 62, " +
-          "'qagg_assoc: >63 event types - bitmask shape invalid')").isNull)
-        // dict feeds FOUR broadcast consumers (mask join, singles, both
-        // pair sides); materialize the ≤|types|-row frame once so the
-        // distinct-over-events scan runs exactly once
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val hist = ev.join(broadcast(dict), Seq("event_type"), "left")
+          "'qagg_assoc: >63 event types - bitmask shape invalid')").isNull))
+      // ≤ 2^|types| rows, three consumers below — materialize once so
+      // the users-scale aggregate runs exactly once
+      val hist = Ckpt(ev.join(broadcast(dict), Seq("event_type"), "left")
         .groupBy(col("user_id"))
         .agg(coalesce(expr("bit_or(shiftleft(CAST(1 AS BIGINT), __i))"), lit(0L)).as("m"))
-        .groupBy(col("m")).agg(count(lit(1)).as("cnt"))
-        // ≤ 2^|types| rows, three consumers below — materialize once so
-        // the users-scale aggregate runs exactly once
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .groupBy(col("m")).agg(count(lit(1)).as("cnt")))
       val bitOf = expr("shiftleft(CAST(1 AS BIGINT), __i)")
       val singles = hist.crossJoin(broadcast(dict))
         .filter(col("m").bitwiseAND(bitOf) =!= 0)
@@ -1477,15 +1446,14 @@ object AggOps {
     build = (spark, sfDir) => {
       val o = Tables.orders(spark, sfDir)
       val maxd = o.agg(max(col("o_orderdate")).as("maxd"))
-      val cust = o.groupBy(col("o_custkey"))
+      val cust = Ckpt(o.groupBy(col("o_custkey"))
         .agg(max(col("o_orderdate")).as("last_order"),
           count(lit(1)).as("frequency"),
           sum(d124(col("o_totalprice"))).cast(DecimalType(38, 4)).as("monetary"))
         .crossJoin(broadcast(maxd))
         .select(col("o_custkey"),
           datediff(col("maxd"), col("last_order")).cast(LongType).as("recency_days"),
-          col("frequency"), col("monetary"))
-        .localCheckpoint()
+          col("frequency"), col("monetary")))
       val nb = 64 // buckets per metric (the globalRanksSampled default)
       // the three ranked metrics, as (name, exact order column, double
       // boundary-space image). Recency ranks on the NEGATED day diff so
@@ -1520,15 +1488,14 @@ object AggOps {
         .filter(col("__k") > col("__kprev"))
         .select(col("mid"),
           explode(expr("array_repeat(__v, CAST(__k - __kprev AS INT))")).as("__b"))
-      // ONE-row frame carrying all three arrays; localCheckpoint so the
+      // ONE-row frame carrying all three arrays; checkpointed so the
       // three per-bucket count aggregates below don't each replay the
       // sample subtree (the sampledBuckets treatment — ≤ 3·64 doubles)
       val bndAggs = metrics.indices.map(i =>
         max(when(col("mid") === i, col("__bs"))).as(s"__bnd$i"))
-      val bounds = marks.groupBy(col("mid"))
+      val bounds = Ckpt(marks.groupBy(col("mid"))
         .agg(sort_array(collect_list(col("__b"))).as("__bs"))
-        .agg(bndAggs.head, bndAggs.tail: _*)
-        .localCheckpoint()
+        .agg(bndAggs.head, bndAggs.tail: _*))
       // all three order-preserving bucket assignments off one broadcast;
       // an empty sample leaves a null array → bucket 0 for every row
       // (one bucket, still exact ranks — the degraded-balance contract)
@@ -1541,7 +1508,11 @@ object AggOps {
       // branches are unreachable for today's non-null long/decimal
       // aggregates; they guard the contract against a future nullable
       // metric (e.g. a left join upstream).
-      val bucketed = metrics.zipWithIndex.foldLeft(cust.crossJoin(broadcast(bounds))) {
+      // The bucket assignment is materialized ONCE: the three per-bucket
+      // count aggregates below and the rank chain each re-read this
+      // frame, and without the checkpoint every reader replays the full
+      // orders aggregate + three bucket assignments.
+      val bucketed = Ckpt(metrics.zipWithIndex.foldLeft(cust.crossJoin(broadcast(bounds))) {
         case (df, ((_, m), i)) =>
           val md = m.cast(DoubleType)
           df.withColumn(s"__bk$i",
@@ -1555,13 +1526,7 @@ object AggOps {
               // routes it to the last bucket first.
               .otherwise(graft.functions.ArraySearch.count_leq(
                 coalesce(col(s"__bnd$i"), emptyD), md)))
-      }.drop(metrics.indices.map(i => s"__bnd$i"): _*)
-        // materialize the bucket assignment ONCE: the three per-bucket
-        // count aggregates below and the rank chain each re-read this
-        // frame, and without the checkpoint every reader replayed the
-        // full orders aggregate + three bucket assignments (4 redundant
-        // passes at 4.5 M customers, sf30)
-        .localCheckpoint()
+      }.drop(metrics.indices.map(i => s"__bnd$i"): _*))
       val nRow = cust.agg(count(lit(1)).cast(LongType).as("__n"))
       // three chained exact ranks: per metric, a broadcast triangular
       // offsets join (≤ nb rows) + a row_number window PARTITIONED BY its
@@ -1645,12 +1610,11 @@ object AggOps {
       // grand total, dimension cardinalities) re-aggregates the ≤
       // |types|·7-row cell table, which also makes the marginals exactly
       // consistent with the cells by construction
-      val cells = Tables.events(spark, sfDir)
+      val cells = Ckpt(Tables.events(spark, sfDir)
         .select(col("event_type"),
           ((expr("unix_micros(ts) div 86400000000") + 3L) % 7L).as("dow"))
         .groupBy(col("event_type"), col("dow"))
-        .agg(count(lit(1)).as("n_ij"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n_ij")))
       val rows = cells.groupBy(col("event_type"))
         .agg(sum(col("n_ij")).cast(LongType).as("r_i"))
       val cols = cells.groupBy(col("dow"))

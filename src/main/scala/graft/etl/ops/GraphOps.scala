@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables, TableStats}
+import graft.etl.{Ckpt, QueryDef, Tables, TableStats}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -54,24 +54,6 @@ object GraphOps {
     val dir = graft.etl.ExtractFixtures.copurchaseEdges(spark, sfDir)
     spark.read.schema("src BIGINT, dst BIGINT").parquet(dir)
   }
-
-  /** Edge-frame checkpoint: localCheckpoint with SERIALIZED, spillable
-    * storage (MEMORY_AND_DISK_SER) instead of the default deserialized
-    * level. The graph family checkpoints frames proportional to the EDGE
-    * count (90 M edges at sf10, 9 M per sf — linear in the fact table),
-    * and the default level materializes each partition as deserialized
-    * row objects: at sf10 qgraph_pagerank's direction-doubled 180 M-row
-    * frame unrolled ~8.6 GB of row objects across 32 concurrent tasks
-    * and died of executor-thread heap OOM (killing the whole
-    * SparkContext via SparkUncaughtExceptionHandler — measured twice,
-    * full-suite and clean-JVM isolate). Serialized storage packs the
-    * two-long rows contiguously (~3× smaller), unrolls incrementally,
-    * and spills cleanly; the per-iteration deserialization cost is a
-    * columnar-scan-class read, not a plan change. This is also the
-    * honest 100 TB shape: a cluster stages iteration state to
-    * serialized/disk-backed storage, never as heap object graphs. */
-  private def ckptEdges(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   private val edgesCte =
     "lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), " +
@@ -128,7 +110,7 @@ object GraphOps {
       // of re-running the distinct + order self-join + two broadcast filters
       // per consumer — at 100 TB this is "stage the subgraph to fast storage
       // before the multi-pass census", the standard triangle-counting shape.
-      val e = ckptEdges(edges(spark, sfDir)
+      val e = Ckpt(edges(spark, sfDir)
         .join(broadcast(small.withColumnRenamed("p_partkey", "src")), Seq("src"))
         .join(broadcast(small.withColumnRenamed("p_partkey", "dst")), Seq("dst"))
         .select(col("src"), col("dst")))
@@ -192,37 +174,27 @@ object GraphOps {
       // rank-only shuffles over it. Each of the three unrolled iterations
       // re-reads a two-long columnar scan whose bucket layout already
       // matches the join's src hash distribution (no exchange, no sort on
-      // the edge side), and NOTHING edge-scale lives in the heap. The
-      // round-9 MEMORY_AND_DISK_SER localCheckpoint variant was measured
-      // and replaced: its 540 M-row frame serializes to ~17 GB at sf30 and
-      // cannot fit a 16 GB JVM (PERF.md round 9e — the suite's only scale
-      // failure), where the bucketed table runs the same fixture from disk.
-      // (A src-repartitioned+sorted CHECKPOINT was tried in round 9c and
-      // rejected — same heap residency, no win; the bucketed table is a
-      // different beast: zero heap blocks and a columnar scan path.)
+      // the edge side), and NOTHING edge-scale lives in the block
+      // manager: a checkpointed edge frame serializes to ~17 GB at sf30
+      // and cannot fit a 16 GB JVM, where the table runs from disk
+      // (PERF.md, "One checkpoint policy", for the variants measured).
       val dir = spark.table(
         graft.etl.ExtractFixtures.copurchaseAdjacency(spark, sfDir))
       // deg is NODE-scale (it doubles as the node list and appears in every
-      // iteration's dangling-mass left join) — a localCheckpoint is right
+      // iteration's dangling-mass left join) — a checkpoint is right
       // here; only the edge-scale frame moved to the staged table.
-      val deg = dir.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+      val deg = Ckpt(dir.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       val nRow = deg.agg(count(lit(1)).as("n"))
       // every node appears in deg (symmetric graph: in-degree == out-degree
       // > 0), so deg doubles as the node list and nothing dangles. Each
       // frame below renames through fresh aliases so the rank table never
       // shares attribute ids with the edge subtree it joins (self-join
       // ambiguity guard).
-      // Round 14 (guide §2.4 — remove shuffles outright): `deg` rides
-      // INSIDE the checkpointed rank frame (v, deg, pr) instead of being
-      // re-joined to it every iteration. The old per-iteration
-      // share = pr ⋈ deg was a node-scale SMJ (two exchanges + two sorts
-      // per iteration, ×3); carrying the 8-byte deg column through the
-      // node-scale checkpoint costs ~|V|·8 bytes of checkpoint state and
-      // deletes that join wholesale — the share projection is now
-      // map-side arithmetic on the checkpoint scan. Integer math is
-      // unchanged (same deg values, same `pr div deg`), so ranks stay
-      // bit-exact vs the oracle.
+      // `deg` rides INSIDE the checkpointed rank frame (v, deg, pr), so
+      // the per-node share is map-side arithmetic on the checkpoint scan
+      // instead of a node-scale join (two exchanges + two sorts) every
+      // iteration; it costs ~|V|·8 bytes of checkpoint state. Integer math
+      // is the same `pr div deg`, so ranks stay bit-exact vs the oracle.
       val nodes = deg.select(col("src").as("v"), col("deg"))
         .crossJoin(broadcast(nRow))
       // The contribution aggregate below is the one per-iteration
@@ -241,19 +213,17 @@ object GraphOps {
         expr("1000000000000 div n").as("pr"))
       for (_ <- 1 to 3) {
         // Materialize the NODE-scale rank vector between iterations
-        // (serialized spillable, like every iteration-state checkpoint
-        // here — tens of MB even at sf30, never edge-scale). Without the
-        // cut, the bucket-aligned layout leaves NO exchange anywhere in
-        // the iteration body, so Catalyst fuses iteration i's final
+        // (tens of MB even at sf30, never edge-scale). Without the cut,
+        // the bucket-aligned layout leaves NO exchange anywhere in the
+        // iteration body, so Catalyst fuses iteration i's final
         // aggregate+sort, both node-side SMJs, iteration i+1's edge-scale
-        // SMJ and its partial aggregate into ONE codegen'd task pipeline
-        // — ~6 concurrent memory consumers × 32 tasks exhausted the
-        // 16 GB pool at sf10 (UNABLE_TO_ACQUIRE_MEMORY, measured round
-        // 10). The cut bounds each iteration to its own job: one edge
-        // SMJ + one aggregate in flight, rank-only state in memory —
-        // exactly the per-superstep materialization a cluster Pregel
-        // loop does.
-        pr = ckptEdges(pr)
+        // SMJ and its partial aggregate into ONE codegen'd task pipeline,
+        // whose ~6 concurrent memory consumers per task exhaust the pool
+        // at sf10 (UNABLE_TO_ACQUIRE_MEMORY). The cut bounds each
+        // iteration to its own job: one edge SMJ + one aggregate in
+        // flight, rank-only state in memory — the per-superstep
+        // materialization a cluster Pregel loop does.
+        pr = Ckpt(pr)
         // per-node outgoing share (pr div deg) is resolved NODE-side — a
         // map-side projection over the checkpointed (v, deg, pr) frame
         // (deg rides in the checkpoint; see the `nodes` note above) —
@@ -327,7 +297,7 @@ object GraphOps {
     * Scale: each round is one degree aggregate plus two key-only
     * semi-joins of the edge list against the (node) keep-set, all keyed
     * shuffles — the textbook distributed k-core loop. The shrinking edge
-    * frame is localCheckpoint'ed per round (the dedupClusters pattern) so
+    * frame is checkpointed per round (the dedupClusters pattern) so
     * round r+1 reads round r's materialization instead of replaying the
     * whole peel chain; at 100 TB each round's edge set would stage to the
     * cluster store bucketed by src for the same reason. Output is 4
@@ -345,25 +315,20 @@ object GraphOps {
       require(k >= 50,
         s"k=$k: the broadcast keep-set peel assumes a high-k hub set; " +
           "use shuffled semi-joins for low k")
-      // every pass over the (possibly serialized-cached) edge frame is a
-      // full scan, so the census and the degree computation each read it
-      // ONCE via explode(array(src, dst)) instead of twice via a
-      // unionAll of two projections — at the 100× scale point the
-      // serialized-checkpoint reads were the dominant cost of the peel
-      // (the 9b premium), and halving the scans halves it. Each edge
-      // contributes exactly two exploded rows, so n_edges = count/2
-      // exactly and per-endpoint counts are identical to the unionAll.
-      // Round 14 (guide §1.2): the census reads the per-round DEGREE frame
-      // instead of re-exploding the edge frame through a count_distinct
-      // (whose distinct+plain aggregate pair Expands the exploded rows ×2
-      // — 4 rows per edge through the aggregate at every scale). Over a
-      // degree frame: n_nodes = row count (each endpoint appears exactly
-      // once), n_edges = Σdeg / 2 (each edge contributes 2 to Σdeg) —
-      // exact integer identities, same BIGINT outputs. The degree frame
-      // is the SAME aggregate the next peel's keep-set needs, so one
-      // node-scale checkpoint per round serves both consumers (the old
-      // shape also evaluated the keep subtree twice — once per broadcast
-      // endpoint semi-join).
+      // every pass over the checkpointed edge frame is a full scan, so
+      // the degree computation reads it ONCE via explode(array(src, dst))
+      // instead of twice via a unionAll of two projections; the
+      // checkpoint reads dominate the peel at scale. Each edge
+      // contributes exactly two exploded rows, so per-endpoint counts are
+      // identical to the unionAll.
+      // The census reads the per-round DEGREE frame instead of
+      // re-exploding the edge frame through a count_distinct (whose
+      // distinct+plain aggregate pair Expands every exploded row ×2).
+      // Over a degree frame: n_nodes = row count (each endpoint appears
+      // exactly once), n_edges = Σdeg / 2 (each edge contributes 2 to
+      // Σdeg) — exact integer identities, same BIGINT outputs. The degree
+      // frame is the SAME aggregate the next peel's keep-set needs, so one
+      // node-scale checkpoint per round serves both consumers.
       // coalesce: a fully-peeled (empty) round must report 0 edges, and
       // sum over an empty frame is null where the old count(*) was 0
       def summaryOfDeg(degr: DataFrame, round: Int): DataFrame =
@@ -371,19 +336,17 @@ object GraphOps {
           (coalesce(sum(col("deg")), lit(0L)) / 2).cast("bigint").as("n_edges"))
           .select(lit(round).as("round"), col("n_nodes"), col("n_edges"))
       // round 0 reads the STAGED PARQUET directly — the staged edge
-      // table is already a serialized columnar materialization, and
-      // re-checkpointing it only added a 90 M-row serialize + per-scan
-      // deserialize on top of what the parquet reader does cheaper.
-      // Only the PEELED frames (new lineage per round, read by the next
-      // round) need the serialized checkpoint.
+      // table is already a columnar materialization, and checkpointing
+      // it again would only add a serialize + per-scan deserialize on top
+      // of what the parquet reader does cheaper. Only the PEELED frames
+      // (new lineage per round, read by the next round) are checkpointed.
       //
       // The ROUND-1 full-frame passes ride the bucketed adjacency (the
-      // qgraph_degree shape, round 11): the table is direction-doubled,
-      // so count-per-src IS the degree and distinct-src IS the node set,
-      // and bucketing by src makes both aggregates bucket-local — the
-      // explode-over-edges form paid a 540 M-row hash aggregate whose
-      // per-task state held every node (per-edge cost 1.32× from sf10 to
-      // sf30 on 3.0× edges). Peeled frames (rounds 2–3) keep the explode:
+      // qgraph_degree shape): the table is direction-doubled, so
+      // count-per-src IS the degree and distinct-src IS the node set, and
+      // bucketing by src makes both aggregates bucket-local instead of
+      // one hash aggregate over every exploded edge whose per-task state
+      // holds every node. Peeled frames (rounds 2–3) keep the explode:
       // they are no longer bucketed and shrink fast at k = 100.
       val adj = spark.table(
         graft.etl.ExtractFixtures.copurchaseAdjacency(spark, sfDir))
@@ -399,16 +362,13 @@ object GraphOps {
       for (r <- 1 to rounds) {
         // one node-scale degree frame per round over the PRE-peel frame:
         // round 1 rides the bucketed adjacency (count-per-src IS the
-        // degree, bucket-local — the round-11 shape); later rounds
-        // explode the checkpointed peeled frame once. localCheckpoint
-        // because up to three consumers read it (the round-(r−1) census
-        // and the two keep broadcasts — the old shape re-ran the
-        // aggregate per consumer).
-        val degr = (if (r == 1)
+        // degree, bucket-local); later rounds explode the checkpointed
+        // peeled frame once. Checkpointed because up to three consumers
+        // read it (the round-(r−1) census and the two keep broadcasts).
+        val degr = Ckpt(if (r == 1)
           adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
             .select(col("src").as("v"), col("deg"))
         else degreeOf(ecur))
-          .localCheckpoint()
         // degr covers the round-(r−1) frame; round 0's census above comes
         // off the adjacency directly, so only r ≥ 2 reuses it
         if (r >= 2) census += summaryOfDeg(degr, r - 1)
@@ -422,13 +382,11 @@ object GraphOps {
           .join(broadcast(keep.withColumnRenamed("v", "src")), Seq("src"), "left_semi")
           .join(broadcast(keep.withColumnRenamed("v", "dst")), Seq("dst"), "left_semi")
           .select(col("src"), col("dst"))
-        // Round 15 (round-14 verdict task 4): the FINAL round's peeled
-        // frame has exactly ONE consumer — the closing census below — so
-        // its eager edge-scale checkpoint was pure overhead (serialize +
-        // write + re-read of the whole round-3 frame to serve one pass);
-        // rounds with a next peel keep it (the next round's degree
-        // aggregate AND its two keep broadcasts re-read the frame).
-        ecur = if (r < rounds) ckptEdges(peeled) else peeled
+        // the FINAL round's peeled frame has exactly ONE consumer — the
+        // closing census below — so it is not checkpointed; rounds with a
+        // next peel are (the next round's degree aggregate AND its two
+        // keep broadcasts re-read the frame).
+        ecur = if (r < rounds) Ckpt(peeled) else peeled
       }
       census += summaryOfDeg(degreeOf(ecur), rounds)
       census.reduce(_ unionAll _).orderBy(col("round"))
@@ -476,21 +434,17 @@ object GraphOps {
         .join(broadcast(small.withColumnRenamed("p_partkey", "src")), Seq("src"))
         .join(broadcast(small.withColumnRenamed("p_partkey", "dst")), Seq("dst"))
         .select(col("src"), col("dst"))
-      // Round 14 (guide §2.4): SELF-LOOPS collapse each unrolled round to
-      // ONE join + ONE aggregate. The old round referenced the label frame
-      // TWICE (neighbour join + the least-merge left join), so the 4
-      // unrolled rounds duplicated every upstream subtree 2^4 ways — the
-      // static plan carried 98 Exchanges / 60 SortMergeJoins (runtime
-      // ReusedExchange papered over some, but planning, codegen and the
-      // un-reused sorts were all real). With a (v, v) row per node in the
-      // relation, min-over-in-neighbours ∪ {self} IS the whole update:
+      // SELF-LOOPS collapse each unrolled round to ONE join + ONE
+      // aggregate. With a (v, v) row per node in the relation,
+      // min-over-in-neighbours ∪ {self} IS the whole update:
       //   new_lbl(v) = min{ lbl(u) : (u,v) ∈ d ∪ selfloops }
       //             = least(lbl(v), min over neighbours)   — identical.
-      // Every node has its self-loop, so the groupBy covers every node and
-      // the old left-join's coalesce is vacuous. One label reference per
-      // round → plan growth is LINEAR in rounds (4 joins + 4 aggregates).
+      // Every node has its self-loop, so the groupBy covers every node.
+      // One label reference per round keeps plan growth LINEAR in rounds
+      // (4 joins + 4 aggregates); a second reference per round would
+      // duplicate every upstream subtree 2^4 ways.
       val dd = es.unionAll(es.select(col("dst").as("src"), col("src").as("dst")))
-      val d = ckptEdges(dd.unionAll(
+      val d = Ckpt(dd.unionAll(
         dd.select(col("src"), col("src").as("dst")).distinct()))
       var lbl = d.filter(col("src") === col("dst"))
         .select(col("src").as("v"), col("src").as("lbl"))
@@ -543,14 +497,12 @@ object GraphOps {
         .join(broadcast(small.withColumnRenamed("p_partkey", "src")), Seq("src"))
         .join(broadcast(small.withColumnRenamed("p_partkey", "dst")), Seq("dst"))
         .select(col("src"), col("dst"))
-      val d = ckptEdges(
+      val d = Ckpt(
         es.unionAll(es.select(col("dst").as("src"), col("src").as("dst"))))
       // deg feeds THREE consumers (the wedge-count sizing probe below and
-      // the two final degree joins); it is NODE-scale, so localCheckpoint
-      // it once (the pagerank deg treatment) instead of re-running the
-      // degree aggregate per consumer.
-      val deg = d.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+      // the two final degree joins), so it is checkpointed once instead
+      // of re-running the degree aggregate per consumer.
+      val deg = Ckpt(d.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg")))
       // TILED wedge enumeration (the qllm_srp_lsh cluster-collapse fix
       // applied to graph hubs): a plain self-join keyed on the shared
       // neighbor puts a hub's ENTIRE C(deg, 2) pair enumeration in one
@@ -662,20 +614,18 @@ object GraphOps {
         .join(broadcast(small.withColumnRenamed("p_partkey", "src")), Seq("src"))
         .join(broadcast(small.withColumnRenamed("p_partkey", "dst")), Seq("dst"))
         .select(col("src"), col("dst"))
-      // Round 14 (guide §2.4): the qgraph_cc self-loop collapse applied to
-      // the relaxation rounds — each round is ONE join + ONE min-aggregate
-      // instead of join + aggregate + least-merge left join, and the dist
+      // The qgraph_cc self-loop collapse applied to the relaxation
+      // rounds: each round is ONE join + ONE min-aggregate, and the dist
       // frame is referenced ONCE per round so the 3 unrolled rounds grow
-      // the plan linearly (the old double reference duplicated upstream
-      // subtrees 2^3 ways: 48 Exchanges / 28 SMJs in the static plan).
+      // the plan linearly.
       // A self-loop row relaxes at +0 (src = dst identifies it — the
       // canonical src < dst edge set has no real self edges), so
       //   new_dist(v) = min{ dist(u) + (u = v ? 0 : 1) : (u,v) ∈ d ∪ self }
       //              = least(dist(v), min over neighbours + 1) — identical
       // (unreached neighbours relax to 999 + 1, which the min against the
-      // self row's 999 discards, exactly like the old least/coalesce).
+      // self row's 999 discards, exactly like least/coalesce would).
       val dd = es.unionAll(es.select(col("dst").as("src"), col("src").as("dst")))
-      val d = ckptEdges(dd.unionAll(
+      val d = Ckpt(dd.unionAll(
         dd.select(col("src"), col("src").as("dst")).distinct()))
       var dist = d.filter(col("src") === col("dst"))
         .select(col("src").as("v"),

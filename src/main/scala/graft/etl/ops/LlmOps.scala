@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables, TableStats}
+import graft.etl.{Ckpt, QueryDef, Tables, TableStats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -911,7 +911,7 @@ object LlmOps {
       val bi = docs.filter(size(col("words")) >= 2).select(explode(expr(
         "transform(sequence(1, size(words) - 1), " +
           "i -> concat(element_at(words, i), ' ', element_at(words, i + 1)))")).as("term"))
-      // localCheckpoint makes the subtree reuse STRUCTURAL: the
+      // The checkpoint makes the subtree reuse STRUCTURAL: the
       // corpus-scale explode → union → groupBy tree feeds three consumers
       // (the boundary sample, the per-bucket counts and the final rank
       // join), which the static plan otherwise replays per consumer and
@@ -920,8 +920,7 @@ object LlmOps {
       // never the corpus — so this is the qagg_mad treatment at the safe
       // altitude (checkpointing inside rankByBucket would pin arbitrary
       // caller frames, including corpus-scale ones).
-      val counts = uni.unionByName(bi).groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      val counts = Ckpt(uni.unionByName(bi).groupBy(col("term")).agg(count(lit(1)).as("cnt")))
       graft.api.Graft.globalRanksSampled(
           counts, -col("cnt"), Seq(col("term")), buckets = 32, sampleOneIn = 8)
         .select(col("__rank").as("vocab_id"), col("term"), col("cnt"))
@@ -1520,9 +1519,8 @@ object LlmOps {
       // twice — the broadcast model join and the vocab-size scalar —
       // and un-checkpointed each consumer re-ran the full corpus
       // tokenize scan behind it; the frame is |vocab| rows)
-      val u = ws.select(explode(col("w")).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("c1"))
-        .localCheckpoint(true)
+      val u = Ckpt(ws.select(explode(col("w")).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("c1")))
       val vv = u.agg(count(lit(1)).as("v"))
       // the bigram travels as its chain HASH (native one-pass
       // [[graft.functions.NgramHashChain]]) — the count groupBy and the
@@ -2186,13 +2184,11 @@ object LlmOps {
       .select(col("doc_id"),
         array_distinct(graft.functions.NgramFunctions.ngram_hashes(col("w"), n))
           .as("gs"))
-    // doc-scale (id, count) frame: checkpointed SERIALIZED so the sizing
-    // sum and the final join read it without re-running the tokenize+hash
-    // scan ([[serialized-checkpoint]] contract; n_docs × 16 B)
-    val perDoc = gsets
-      .select(col("doc_id"), size(col("gs")).cast(LongType).as("n_grams"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // doc-scale (id, count) frame: checkpointed ([[graft.etl.Ckpt]]) so
+    // the sizing sum and the final join read it without re-running the
+    // tokenize+hash scan
+    val perDoc = Ckpt(gsets
+      .select(col("doc_id"), size(col("gs")).cast(LongType).as("n_grams")))
     val totalGrams = Option(perDoc.agg(sum(col("n_grams"))).head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val grams = gsets.select(col("doc_id"), explode(col("gs")).as("g"))
@@ -2328,12 +2324,10 @@ object LlmOps {
         .shingleHashes(Tables.documents(spark, sfDir), col("doc_id"), col("text"))
         .select(col("doc_id"), col("h64").as("sh"))
       // Pair-scale, consumed FOUR times below (the assembly spine, both
-      // clipped arms, and the doc restriction) — checkpoint once,
-      // serialized (the [[serialized-checkpoints]] storage rule).
-      val pairs = graft.api.Graft.jaccardCandidates(sh, dfCap = 20, minNum = 1, minDen = 4)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // clipped arms, and the doc restriction) — checkpoint once
+      // ([[graft.etl.Ckpt]]).
+      val pairs = Ckpt(graft.api.Graft.jaccardCandidates(sh, dfCap = 20, minNum = 1, minDen = 4)
+        .select(col("doc_a"), col("doc_b")))
       // The multiset gram counts are needed ONLY for documents that
       // appear in a candidate pair. The round-11 form counted grams for
       // the WHOLE corpus and then left-joined pairs: at sf30 that was

@@ -1,6 +1,6 @@
 package graft.etl.ops
 
-import graft.etl.{QueryDef, Tables, TableStats}
+import graft.etl.{Ckpt, QueryDef, Tables, TableStats}
 import graft.etl.Dets._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -720,15 +720,12 @@ object WindowOps {
     build = (spark, sfDir) => {
       // the per-customer frame is consumed FOUR times (globalRanks'
       // bounds pass + its rank pass + the grand total + the decile join
-      // input), and each consumption re-ran the 45 M-row aggregate
-      // (probed sf30: three ~50 s-CPU final-agg stages off one shuffle);
-      // it is 10× smaller than its input, so a serialized checkpoint is
-      // the cheap side of the round-12 checkpoint rule
-      val rev = Tables.orders(spark, sfDir)
+      // input), and each consumption would re-run the fact aggregate
+      // (three final-aggregate stages off one shuffle); the frame is 10×
+      // smaller than its input, so materializing it is the cheap side
+      val rev = Ckpt(Tables.orders(spark, sfDir)
         .groupBy(col("o_custkey"))
-        .agg(sum(d124(col("o_totalprice"))).cast(DecimalType(38, 4)).as("rev"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .agg(sum(d124(col("o_totalprice"))).cast(DecimalType(38, 4)).as("rev")))
       val ranked = graft.api.Graft.globalRanks(
         rev, col("rev") * lit(-1), Seq(col("o_custkey")))
       val tot = rev.agg(sum(col("rev")).cast(DecimalType(38, 4)).as("tot"))

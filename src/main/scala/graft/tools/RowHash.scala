@@ -24,14 +24,14 @@ object RowHash {
     val names = graft.Bench.queryNames(args.drop(1).mkString(","), "graft.tools.RowHash")
     val spark = graft.GraftSession.create()
     names.foreach { name =>
-      val df = graft.etl.Registry.byName(name).build(spark, sfDir)
-      val row = df
-        .select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-        .agg(count(lit(1)).as("rows"),
-          sum(col("h").cast("decimal(38,0)")).as("sumhash"))
-        .head()
+      val row = graft.etl.Ckpt.releasing(spark) {
+        val df = graft.etl.Registry.byName(name).build(spark, sfDir)
+        df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
+          .agg(count(lit(1)).as("rows"),
+            sum(col("h").cast("decimal(38,0)")).as("sumhash"))
+          .head()
+      }
       println(s"[rowhash] $name rows=${row.getLong(0)} sumhash=${row.get(1)}")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.Registry
+import graft.etl.{Ckpt, Registry}
 
 /** Plan-shape assertions: the scale claims in PERF.md (pushdown, pruning,
   * broadcast choice, partial aggregation, bucket co-location) are read off
@@ -615,11 +615,11 @@ class PlanSpec extends SparkFixture {
     // exchange-free iteration body from fusing into one pool-exhausting
     // task pipeline; PERF.md round 10) — an edge-scale heap block
     // reappearing here is the sf30 failure mode coming back.
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val qe = Registry.byName("qgraph_pagerank").build(spark, sfTiny).queryExecution
-    val created = spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => before.contains(id) }
-    try {
+    Ckpt.releasing(spark) {
+      val before = persisted
+      val qe = Registry.byName("qgraph_pagerank").build(spark, sfTiny).queryExecution
+      val created = spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) }
       val p = qe.executedPlan.toString
       val b = graft.etl.ExtractFixtures.AdjBuckets
       // the final iteration's edge join is in the static plan; earlier
@@ -639,7 +639,60 @@ class PlanSpec extends SparkFixture {
       assert(rows.forall(_ <= halfEdges),
         s"a persistent RDD reaches edge scale (>$halfEdges rows): $rows " +
           "— edge-scale state is back in the heap")
-    } finally created.values.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  /** Ids of the RDDs persisted in the shared session right now. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("Ckpt: every RDD it persists is MEMORY_AND_DISK_SER and cached before any action") {
+    import org.apache.spark.storage.StorageLevel
+    Ckpt.releasing(spark) {
+      val before = persisted
+      val df = Ckpt(spark.range(0, 1000, 1, 4).selectExpr("id", "id * 2 AS x"))
+      val created = spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) }
+      assert(created.nonEmpty, "Ckpt persisted nothing")
+      created.values.foreach(r =>
+        assert(r.getStorageLevel == StorageLevel.MEMORY_AND_DISK_SER, r.getStorageLevel))
+      // eager: every partition's block exists although `df` has not been
+      // acted on yet
+      val info = spark.sparkContext.getRDDStorageInfo.filter(i => created.contains(i.id))
+      assert(info.size == created.size &&
+        info.forall(i => i.numCachedPartitions == i.numPartitions),
+        info.map(i => s"${i.id}: ${i.numCachedPartitions}/${i.numPartitions}").mkString(", "))
+      assert(df.count() == 1000)
+    }
+  }
+
+  test("Ckpt.releasing keeps RDDs persisted before it and drops its own, also when it throws") {
+    Ckpt.releasing(spark) {
+      val before = persisted
+      val outer = Ckpt(spark.range(10).toDF())
+      val outerIds = persisted -- before
+      assert(outerIds.nonEmpty)
+      var returned = Set.empty[Int]
+      assert(Ckpt.releasing(spark) {
+        val b = persisted
+        Ckpt(spark.range(20).toDF())
+        returned = persisted -- b
+        7
+      } == 7)
+      var thrown = Set.empty[Int]
+      val e = intercept[IllegalStateException](Ckpt.releasing(spark) {
+        val b = persisted
+        Ckpt(spark.range(30).toDF())
+        thrown = persisted -- b
+        throw new IllegalStateException("body failed")
+      })
+      assert(e.getMessage == "body failed")
+      assert(returned.nonEmpty && (returned & persisted).isEmpty,
+        s"the body's RDDs $returned outlived a returning body")
+      assert(thrown.nonEmpty && (thrown & persisted).isEmpty,
+        s"the body's RDDs $thrown outlived a throwing body")
+      assert(outerIds.subsetOf(persisted), "an RDD persisted before the body was dropped")
+      assert(outer.count() == 10)
+    }
   }
 
   test("staged adjacency scan declares its bucket sort order (legacy-conf contract)") {

@@ -174,6 +174,23 @@ class RegistrySpec extends SparkFixture {
     assert(fixed.isEmpty, s"a literal 1.5 M rows a task in: $fixed")
   }
 
+  test("one checkpoint policy: only Ckpt checkpoints, picks a storage level or releases") {
+    // a site that checkpoints on its own picks its own storage level; a
+    // main that releases on its own picks its own scope and blocking
+    val main = sources("src/main", ".scala")
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft", "etl", "Ckpt.scala")))
+      .map(f => f.getFileName.toString -> code(f).linesIterator.toSeq)
+    val outside = Seq("localCheckpoint", "StorageLevel", "getPersistentRDDs", "unpersist")
+      .map { token =>
+        val perFile = main.map { case (f, lines) => f -> lines.count(_.contains(token)) }
+          .filter(_._2 > 0)
+        token -> perFile
+      }.filter(_._2.nonEmpty)
+    assert(outside.isEmpty, outside.map { case (token, perFile) =>
+      s"$token: ${perFile.map(_._2).sum} code lines (${perFile.mkString(", ")})"
+    }.mkString("; "))
+  }
+
   test("one staging list: every ExtractFixtures staging call once, copurchase first") {
     import graft.etl.ExtractFixtures
     val names = ExtractFixtures.staging.map(_._1)
