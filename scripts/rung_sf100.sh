@@ -8,7 +8,7 @@
 #
 # Steps (run one at a time; each logs free disk):
 #   1. gen      — GenData 100 /tmp/graft_sf100            (~20 GB)
-#   2. srp      — qllm_srp_lsh best-of-3 isolate, NO extract staging,
+#   2. srp      — qllm_srp_lsh best-of-3 isolate (stages no extract),
 #                 zstd shuffle codec (x1.5 smaller transients)
 #   3. stage    — StageExtract (copurchase first, disk emptiest)
 #   4. isolate  — best-of-3 of the 15 other sf60-heaviest keys
@@ -27,10 +27,9 @@ case "$STEP" in
     $JAVA_BASE -Xmx16g graft.tools.GenData 100 $SF_DIR
     ;;
   srp)
-    # cleared-disk isolate of the quadratic-contract key: skip extract
-    # staging (reads only the embeddings fixture), zstd shuffle
-    SPARK_GRAFT_SKIP_STAGING=1 \
-      $JAVA_BASE -Xmx16g -XX:G1HeapRegionSize=32m \
+    # cleared-disk isolate of the quadratic-contract key (--isolate stages
+    # no extract; the key reads only the embeddings fixture), zstd shuffle
+    $JAVA_BASE -Xmx16g -XX:G1HeapRegionSize=32m \
       -Dspark.io.compression.codec=zstd \
       graft.Bench --isolate qllm_srp_lsh
     ;;
@@ -44,8 +43,8 @@ case "$STEP" in
     # spark.memory.fraction instead: 0.75 at 64g let the bucketed-write
     # sorters grow multi-GB pointer arrays and OOM'd where default-fraction
     # 48g survived (round 15, rung_stage3.log).
-    SPARK_GRAFT_STAGE_CONF="spark.io.compression.codec=zstd;spark.sql.parquet.compression.codec=zstd" \
-      $JAVA_BASE -Xmx48g -XX:G1HeapRegionSize=32m \
+    $JAVA_BASE -Xmx48g -XX:G1HeapRegionSize=32m \
+      -Dspark.io.compression.codec=zstd -Dspark.sql.parquet.compression.codec=zstd \
       graft.tools.StageExtract $SF_DIR
     ;;
   isolate)
@@ -56,10 +55,9 @@ case "$STEP" in
     # zstd shuffle: with the staged extract resident, the box leaves only
     # ~20 GB of shuffle headroom and the round-15 lz4 staging attempt died
     # on disk — codec is part of the instrument and the record's PERF.md
-    # row says so. SUITE_ONLY skips the auto-isolate/materializing passes
-    # (they re-run the 12 slowest and then all 221 queries — hours at
-    # sf100); the JSON self-declares "suite_only":true. Pass CODEC=lz4 /
-    # SUITE_ONLY=0 to override.
+    # row says so. SUITE_ONLY skips the materialized pass (it re-runs all
+    # 221 queries — hours at sf100); the JSON self-declares
+    # "suite_only":true. Pass CODEC=lz4 / SUITE_ONLY=0 to override.
     SPARK_GRAFT_SKIP_KEYS=qllm_srp_lsh \
       SPARK_GRAFT_SUITE_ONLY=${SUITE_ONLY:-1} \
       $JAVA_BASE -Xmx16g -XX:G1HeapRegionSize=32m \

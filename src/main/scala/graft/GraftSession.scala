@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one way to build a graft session. Bench, Verify, StageProbe,
-  * Explain, the tools and the test fixture all plan queries under these
+/** The one way to build a graft session. Bench, Verify, Explain, the
+  * tools and the test fixture all plan queries under these
   * confs, so a plan read off one of them is the plan the others run.
   * Extensions need no call here: [[GraftExtensions]] registers itself on
   * every session through Spark's ServiceLoader, and no query build

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Table statistics read from parquet metadata on the driver, never from a
@@ -38,20 +39,33 @@ object TableStats {
   }
 
   /** Rows of hash state one task may hold: the unified memory region
-    * ((max heap − 300 MB reserved) × `spark.memory.fraction`) of this
-    * local-mode JVM, split over its concurrent tasks, at 200 B a row. A
+    * ((max heap − 300 MB reserved) × `spark.memory.fraction`) of the JVM
+    * that runs the tasks, split over its concurrent tasks, at 200 B a row. A
     * (long, long) hash build costs about 100 B a row with page growth: at
     * GenData sf1 in a 1 GB heap with 4 threads (~108 MB a task), 1.2 M
     * rows a task failed and 1 M passed, so this keeps a 2× margin. That is
     * ~1.58 M rows at a 16 GB heap with 32 threads, ~1.37 M at 2 GB with 4
     * and ~570 k at 1 GB with 4 (PERF.md, "The hash build at sf1"). */
   def rowsPerTask(spark: SparkSession): Long =
-    rowsPerTask(Runtime.getRuntime.maxMemory,
-      spark.sparkContext.getConf.getDouble("spark.memory.fraction", 0.6),
+    rowsPerTask(spark.sparkContext.getConf, Runtime.getRuntime.maxMemory,
       spark.sparkContext.defaultParallelism)
 
-  /** `rowsPerTask(spark)` as a pure function of its three inputs; never
-    * below 1. */
+  /** `rowsPerTask(spark)` as a pure function of the session's conf, the
+    * driver's max heap and the session's default parallelism. In local
+    * mode the driver JVM runs every task, `localThreads` at a time. On a
+    * cluster an executor runs them: its heap is `spark.executor.memory`
+    * and its task slots are `spark.executor.cores / spark.task.cpus`, while
+    * the driver's heap and the whole cluster's cores say nothing of it. */
+  def rowsPerTask(conf: SparkConf, driverHeap: Long, localThreads: Int): Long = {
+    val fraction = conf.getDouble("spark.memory.fraction", 0.6)
+    val master = conf.get("spark.master", "local")
+    if (master == "local" || master.startsWith("local[")) rowsPerTask(driverHeap, fraction, localThreads)
+    else rowsPerTask(conf.getSizeAsMb("spark.executor.memory", "1g") << 20, fraction,
+      math.max(1, conf.getInt("spark.executor.cores", 1) / conf.getInt("spark.task.cpus", 1)))
+  }
+
+  /** The budget for one JVM's heap, memory fraction and concurrent tasks;
+    * never below 1. */
   def rowsPerTask(maxHeap: Long, memoryFraction: Double, threads: Int): Long = {
     val region = ((maxHeap - (300L << 20)) * memoryFraction).toLong
     math.max(1L, region / threads / 200)

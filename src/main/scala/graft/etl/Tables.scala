@@ -138,14 +138,6 @@ object Tables {
       (sfDir, name),
       spark.read.schema(schemas(name)).parquet(path(sfDir, name)))
 
-  /** Registers `name` as a temp view (unique per sfDir) and returns the
-    * view name, for queries expressed as SQL text. */
-  def view(s: SparkSession, sfDir: String, name: String): String = {
-    val vname = s"${name}_v${math.abs(sfDir.hashCode)}"
-    table(s, sfDir, name).createOrReplaceTempView(vname)
-    vname
-  }
-
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

@@ -5,6 +5,7 @@ import graft.etl.Dets._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** §2.D aggregations. Determinism per SURVEY §2.1:
@@ -180,23 +181,23 @@ object AggOps {
       "SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey " +
         "HAVING count(*) >= 15 ORDER BY o_custkey"))
 
-  /** Identical SQL text runs on both engines modulo nothing — Spark SQL and
-    * DuckDB share GROUPING SETS + grouping() syntax here. */
-  private def groupingSetsSql(table: String): String =
+  /** Identical SQL text on both engines: Spark SQL and DuckDB share
+    * GROUPING SETS + grouping() syntax here. */
+  private val groupingSetsSql =
     "SELECT o_orderstatus, o_orderpriority, " +
       "CAST(grouping(o_orderstatus) AS INTEGER) AS g_status, " +
       "CAST(grouping(o_orderpriority) AS INTEGER) AS g_prio, " +
       "CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,4))) AS DECIMAL(38,4)) AS STRING) AS revenue, " +
       "count(*) AS n " +
-      s"FROM $table " +
+      "FROM orders " +
       "GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ()) " +
       "ORDER BY g_status, g_prio, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"
 
   private val qaggGroupingsets = QueryDef(
     "qagg_groupingsets",
     build = (spark, sfDir) =>
-      spark.sql(groupingSetsSql(Tables.view(spark, sfDir, "orders"))),
-    oracle = Some(groupingSetsSql("orders")))
+      Bridge.sqlOver(spark, groupingSetsSql, Map("orders" -> Tables.orders(spark, sfDir))),
+    oracle = Some(groupingSetsSql))
 
   private val qaggRollup = QueryDef(
     "qagg_rollup",

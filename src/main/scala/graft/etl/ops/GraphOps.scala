@@ -243,7 +243,7 @@ object GraphOps {
         // the map outgrows its 1/32nd pool share, falls back to
         // sort-based aggregation, and every iteration paid 39 GB of
         // memory-spill + 4.8 GB of disk-spill for a 2.8× row reduction
-        // (StageProbe round 12: 720 s executorRun per iteration in that
+        // (Bench --isolate round 12: 720 s executorRun per iteration in that
         // one stage; A/B-confirmed NOT fixable by bucket count — 96
         // buckets left it unchanged). Raw pairs cost ~2.8× the shuffle
         // bytes (two longs, lz4) and zero spill — the 100 TB trade too,

@@ -4,6 +4,7 @@ import graft.etl.{Ckpt, QueryDef, Tables, TableStats}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** §2.I LLM-training-data pipeline operators: dedup (exact-normalized,
@@ -339,10 +340,10 @@ object LlmOps {
 
   /** Exact decimal median of n_chars per source (same interpolation scheme
     * as qagg_percentile). */
-  private def sourceProfileSql(table: String, idiv: String): String =
+  private def sourceProfileSql(idiv: String): String =
     "WITH s AS (SELECT source, lang, n_chars, " +
       "row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) AS rn, " +
-      s"count(*) OVER (PARTITION BY source) AS n FROM $table) " +
+      "count(*) OVER (PARTITION BY source) AS n FROM documents) " +
       "SELECT source, count(*) AS n_docs, count(DISTINCT lang) AS n_langs, " +
       s"CAST(CAST((max(CASE WHEN rn = (n-1) $idiv 2 + 1 THEN CAST(n_chars AS DECIMAL(12,1)) END) + " +
       s"max(CASE WHEN rn = n $idiv 2 + 1 THEN CAST(n_chars AS DECIMAL(12,1)) END)) " +
@@ -352,8 +353,9 @@ object LlmOps {
   private val qllmSourceProfile = QueryDef(
     "qllm_source_profile",
     build = (spark, sfDir) =>
-      spark.sql(sourceProfileSql(Tables.view(spark, sfDir, "documents"), "div")),
-    oracle = Some(sourceProfileSql("documents", "//")))
+      Bridge.sqlOver(spark, sourceProfileSql("div"),
+        Map("documents" -> Tables.documents(spark, sfDir))),
+    oracle = Some(sourceProfileSql("//")))
 
   private val stopEn = Seq("the", "and", "of", "to")
   private val stopDe = Seq("der", "die", "und", "das")
@@ -1128,7 +1130,7 @@ object LlmOps {
       // (doc_id, term-STRING) and (doc_id, bigram-STRING): near-unique
       // keys, so the partial aggregates' per-task maps held ~their whole
       // input and fell back to sort-based aggregation — 8 + 8.6 GB of
-      // memory-spill at sf30 (StageProbe round 12) to count runs a
+      // memory-spill at sf30 (Bench --isolate round 12) to count runs a
       // row-local sort computes in-place. Plan is now one narrow scan +
       // the output sort; gram-hash equivalence is the repo's standard
       // 64-bit idiom (string-side oracle agrees modulo 2⁻⁶⁴ collisions).
@@ -1559,7 +1561,7 @@ object LlmOps {
       // per-doc aggregate collapses map-side on the scan-contiguous
       // stream. Clean isolate sf30 15.7 → 12.4 s with the arrays_zip
       // and unigram-checkpoint fixes above; the remaining cost is the
-      // honest single token-scale scan+explode+join pass (StageProbe:
+      // honest single token-scale scan+explode+join pass (Bench --isolate:
       // 9.3 s of the 12.4, zero spill, 42 MB worst shuffle).
       bg.join(broadcast(u), col("w1") === col("term"))
         .select(col("doc_id"), col("c1"), col("b"))
@@ -2332,7 +2334,7 @@ object LlmOps {
       // appear in a candidate pair. The round-11 form counted grams for
       // the WHOLE corpus and then left-joined pairs: at sf30 that was
       // two corpus-scale (doc, gram) aggregates over ~near-unique keys —
-      // 20 GB of partial-agg sort-fallback spill (StageProbe round 12)
+      // 20 GB of partial-agg sort-fallback spill (Bench --isolate round 12)
       // — while the GenData fixtures' candidate set is EMPTY (0 pairs at
       // sf10/sf30: random docs don't pass Jaccard ≥ 1/4), so 100 % of
       // that work produced nothing. Gram cost now scales with PAIR

@@ -3,6 +3,7 @@ package graft.etl.ops
 import graft.etl.{ExtractFixtures, QueryDef, Tables}
 import graft.etl.Dets._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** §2.A scans + §2.B projection/filter.
@@ -310,6 +311,17 @@ object ScanOps {
         "FROM orders WHERE date_part('year', o_orderdate) BETWEEN 1995 AND 1996 " +
         "GROUP BY o_year ORDER BY o_year"))
 
+  /** qfilter_subquery's SQL text, identical on both engines. */
+  private val subquerySql =
+    "SELECT c_custkey, c_nationkey, c_acctbal FROM customer c " +
+      "WHERE CAST(c_acctbal AS DECIMAL(12,4)) * (SELECT COUNT(*) FROM customer c2 " +
+      "WHERE c2.c_nationkey = c.c_nationkey) > " +
+      "(SELECT SUM(CAST(c_acctbal AS DECIMAL(12,4))) FROM customer c3 " +
+      "WHERE c3.c_nationkey = c.c_nationkey) " +
+      "AND EXISTS (SELECT 1 FROM customer c4 " +
+      "WHERE c4.c_nationkey = c.c_nationkey AND c4.c_acctbal < 0) " +
+      "ORDER BY c_custkey"
+
   /** Correlated-subquery surface — the SQL-text entry point (SURVEY §3.2)
     * exercising Catalyst's RewriteCorrelatedScalarSubquery + exists→semi
     * decorrelation (§4): customers strictly above their own nation's
@@ -323,27 +335,9 @@ object ScanOps {
     * nested-loop penalty (the full-inventory BNLJ audit covers it). */
   private val qfilterSubquery = QueryDef(
     "qfilter_subquery",
-    build = (spark, sfDir) => {
-      Tables.customer(spark, sfDir).createOrReplaceTempView("graft_sub_customer")
-      spark.sql(
-        "SELECT c_custkey, c_nationkey, c_acctbal FROM graft_sub_customer c " +
-          "WHERE CAST(c_acctbal AS DECIMAL(12,4)) * (SELECT COUNT(*) FROM graft_sub_customer c2 " +
-          "WHERE c2.c_nationkey = c.c_nationkey) > " +
-          "(SELECT SUM(CAST(c_acctbal AS DECIMAL(12,4))) FROM graft_sub_customer c3 " +
-          "WHERE c3.c_nationkey = c.c_nationkey) " +
-          "AND EXISTS (SELECT 1 FROM graft_sub_customer c4 " +
-          "WHERE c4.c_nationkey = c.c_nationkey AND c4.c_acctbal < 0) " +
-          "ORDER BY c_custkey")
-    },
-    oracle = Some(
-      "SELECT c_custkey, c_nationkey, c_acctbal FROM customer c " +
-        "WHERE CAST(c_acctbal AS DECIMAL(12,4)) * (SELECT COUNT(*) FROM customer c2 " +
-        "WHERE c2.c_nationkey = c.c_nationkey) > " +
-        "(SELECT SUM(CAST(c_acctbal AS DECIMAL(12,4))) FROM customer c3 " +
-        "WHERE c3.c_nationkey = c.c_nationkey) " +
-        "AND EXISTS (SELECT 1 FROM customer c4 " +
-        "WHERE c4.c_nationkey = c.c_nationkey AND c4.c_acctbal < 0) " +
-        "ORDER BY c_custkey"))
+    build = (spark, sfDir) => Bridge.sqlOver(spark, subquerySql,
+      Map("customer" -> Tables.customer(spark, sfDir))),
+    oracle = Some(subquerySql))
 
   /** Raw-binary ingest via the `binaryFile` source — the image/audio-dir
     * entry path of a multimodal pipeline (a directory of opaque blobs →

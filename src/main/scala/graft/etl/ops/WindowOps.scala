@@ -49,7 +49,7 @@ object WindowOps {
       // riding the SMJ's sorted runs, and over hash-shuffled input it
       // pays full price; (2) a serialized localCheckpoint before the
       // global sort (to stop the range exchange's boundary-sampling pass
-      // re-running the join + window subtree, which StageProbe shows as
+      // re-running the join + window subtree, which Bench --isolate shows as
       // two byte-identical stages) cost more than the re-execution it
       // saved (probe 16.5 → 24.5 s — 45 M-row serialization isn't free);
       // (3) repartitioning the census aggregate on its key (the pagerank

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * were computed as corpus-scale `groupBy(doc_id, gram)` aggregates —
   * near-unique keys, so the partial aggregate's per-task map held ~its
   * entire input, overflowed its pool share, and fell back to sort-based
-  * aggregation (StageProbe: 8 GB + 8.6 GB memory-spill in the two
+  * aggregation (Bench --isolate: 8 GB + 8.6 GB memory-spill in the two
   * stages at sf30) — all to count multiplicities that never cross
   * document boundaries. Row-local stats make the query ONE narrow scan:
   * no exchange, no aggregation state, linear by construction. The

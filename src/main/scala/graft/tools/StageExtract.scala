@@ -19,10 +19,11 @@ import graft.etl.ExtractFixtures
   * (copurchaseEdges first); naming a subset of its names (customerCsv,
   * bucketedOrdersLineitem, ...) stages just those, in the list's order. An
   * unknown name fails before the session starts.
-  * SPARK_GRAFT_STAGE_CONF adds session confs for the STAGING session only.
-  * `spark.io.compression.codec=zstd` there makes shuffle transients ≈ 1.5×
-  * smaller than the lz4 default and leaves the staged outputs
-  * byte-identical, so timed sessions never see a difference.
+  * Extra session confs come as `-Dspark.*` system properties, which the
+  * session's SparkConf reads: `-Dspark.io.compression.codec=zstd` makes
+  * shuffle transients ≈ 1.5× smaller than the lz4 default, and
+  * `-Dspark.sql.parquet.compression.codec=zstd` writes smaller staged
+  * tables.
   */
 object StageExtract {
   /** Staging shuffles (the orderkey self-join inside copurchase edges and
@@ -65,7 +66,7 @@ object StageExtract {
       s"known: ${ExtractFixtures.staging.map(_._1).mkString(", ")}")
     val cpus = graft.GraftSession.cpus
     val parts = sizedShufflePartitions(sfDir, cpus)
-    val b = graft.GraftSession.builder(cpus)
+    val spark = graft.GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", parts.toLong)
       // 8m, NOT 16m: G1 regions top out at 32 MB, so 16 MB sorter pages
       // are humongous allocations — at sf100 the bucketed-write sorts
@@ -80,18 +81,11 @@ object StageExtract {
       // their step and stack up against the disk budget (see the step-loop
       // note below)
       .config("spark.cleaner.periodicGC.interval", "60s")
-    // extra session confs, "k=v;k=v" — the disk-bound rungs trade the
-    // staging JVM's heap against sort-spill bytes (e.g. a high
-    // spark.memory.fraction keeps the sf100 lineitem bucketed-write sort
-    // in memory where the box's disk cannot hold a second spilled copy)
-    sys.env.get("SPARK_GRAFT_STAGE_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    println(s"[stage] sfDir=$sfDir cpus=$cpus shufflePartitions=$parts")
+    println(s"[stage] sfDir=$sfDir cpus=$cpus shufflePartitions=$parts " +
+      s"shuffleCodec=${spark.conf.get("spark.io.compression.codec", "lz4")} " +
+      s"parquetCodec=${spark.conf.get("spark.sql.parquet.compression.codec")}")
     ExtractFixtures.staging.filter(s => only.isEmpty || only(s._1)).foreach { case (n, f) =>
       oldGen.foreach(_.resetPeakUsage())
       val t0 = System.nanoTime()

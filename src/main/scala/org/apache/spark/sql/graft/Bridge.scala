@@ -18,6 +18,32 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `sqlText` as a DataFrame in which each table name that is a key of
+    * `relations` reads that DataFrame, as a temp view of it would, but
+    * with no catalog entry: a query build leaves the session's catalog as
+    * it found it, and two builds never race on one view name. Names are
+    * bound in the main query, in subqueries and in CTE bodies; repeated
+    * references (self-joins, correlated subqueries over the same table)
+    * get fresh attribute ids from the analyzer's DeduplicateRelations,
+    * exactly as repeated references to one view do. */
+  def sqlOver(spark: SparkSession, sqlText: String, relations: Map[String, DataFrame]): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _) if relations.contains(name) =>
+        SubqueryAlias(name, analyzed(relations(name)))
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, r, x) =>
+          (n, r.copy(child = bind(r.child)), x)
+        })
+    }
+    val parsed = spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(sqlText)
+    ofRows(spark, bind(parsed))
+  }
+
+  /** Blocks until every event posted so far has reached every listener. */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** The analyzed logical plan behind a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed

@@ -20,7 +20,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 class ExtensionsSpec extends SparkFixture {
 
   test("cosine_similarity registered for SQL text matches the Column API") {
-    val v = Tables.view(spark, sfTiny, "embeddings")
+    val v = "ext_embeddings"
+    Tables.embeddings(spark, sfTiny).createOrReplaceTempView(v)
     val sqlTop = spark.sql(
       s"""WITH q AS (SELECT embedding AS q_emb FROM $v WHERE vec_id = 0)
          |SELECT e.vec_id, cosine_similarity(e.embedding, q.q_emb) AS sim
@@ -38,7 +39,8 @@ class ExtensionsSpec extends SparkFixture {
   }
 
   test("ngram_hashes / ngram_hash_chain registered for SQL text match the Column API") {
-    val v = Tables.view(spark, sfTiny, "documents")
+    val v = "ext_documents"
+    Tables.documents(spark, sfTiny).createOrReplaceTempView(v)
     val sql = spark.sql(
       s"""SELECT doc_id, ngram_hashes(split(lower(text), ' '), 3) AS g,
          |ngram_hash_chain(split(lower(text), ' '), 2) AS c

@@ -107,6 +107,30 @@ class FixturesSpec extends SparkFixture {
     assert(TableStats.rowsPerTask(spark) >= 1L)
   }
 
+  test("TableStats.rowsPerTask: the driver's heap and threads in local mode, an executor's on a cluster") {
+    val gb = 1L << 30
+    def conf(kvs: (String, String)*) = new org.apache.spark.SparkConf(false).setAll(kvs)
+    // local mode: the driver JVM runs every task, whatever executor confs say
+    Seq("local", "local[4]", "local[*]").foreach { m =>
+      assert(TableStats.rowsPerTask(conf("spark.master" -> m, "spark.executor.memory" -> "64g"),
+        2 * gb, 4) == TableStats.rowsPerTask(2 * gb, 0.6, 4), m)
+    }
+    assert(TableStats.rowsPerTask(conf("spark.master" -> "local[4]",
+      "spark.memory.fraction" -> "0.3"), gb, 4) == TableStats.rowsPerTask(gb, 0.3, 4))
+    // a cluster: one executor's heap over its task slots, not the driver's
+    // heap over the cluster's cores
+    val yarn = conf("spark.master" -> "yarn", "spark.executor.memory" -> "16g",
+      "spark.executor.cores" -> "8", "spark.task.cpus" -> "2")
+    assert(TableStats.rowsPerTask(yarn, gb, 400) == TableStats.rowsPerTask(16 * gb, 0.6, 4))
+    // a bare executor memory is MiB, as Spark reads it; cores and task cpus
+    // default to 1
+    assert(TableStats.rowsPerTask(conf("spark.master" -> "spark://h:7077",
+      "spark.executor.memory" -> "2048"), gb, 400) == TableStats.rowsPerTask(2 * gb, 0.6, 1))
+    // more cpus a task than cores an executor still leaves one slot
+    assert(TableStats.rowsPerTask(conf("spark.master" -> "k8s://h", "spark.executor.cores" -> "1",
+      "spark.task.cpus" -> "2"), gb, 400) == TableStats.rowsPerTask(gb, 0.6, 1))
+  }
+
   test("TableStats.sizedPartitions: a sized count only when it beats the session default by the margin") {
     val d = spark.sessionState.conf.numShufflePartitions
     val perTask = 1000L

@@ -78,6 +78,23 @@ class RegistrySpec extends SparkFixture {
     }
   }
 
+  test("no query build registers a temp view or sets a conf") {
+    // a build that registers a view clobbers a user's view of that name and
+    // races concurrent builds; a conf it sets changes how later queries
+    // plan. A fresh session shares this one's context but starts with no
+    // temp views, so a view an earlier test's build left behind cannot
+    // hide one registered here.
+    val s = spark.newSession()
+    graft.etl.ExtractFixtures.staging.foreach(_._2(s, sfTiny))
+    def views = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val (views0, confs0) = (views, s.conf.getAll)
+    Registry.all.foreach { q =>
+      q.build(s, sfTiny)
+      assert(views == views0, s"${q.name}'s build registered ${views -- views0}")
+      assert(s.conf.getAll == confs0, s"${q.name}'s build changed the session's confs")
+    }
+  }
+
   test("one session builder: the test session carries GraftSession's confs and extensions") {
     Seq("spark.sql.session.timeZone" -> "UTC",
       "spark.buffer.pageSize" -> "16m",
@@ -227,8 +244,7 @@ class RegistrySpec extends SparkFixture {
     try Seq[(Array[String] => Unit, Array[String])](
       (graft.Verify.main, Array(sfTiny, out, "qnope_typo")),
       (graft.Explain.main, Array(sfTiny, "qnope_typo")),
-      (graft.tools.RowHash.main, Array(sfTiny, "qnope_typo")),
-      (graft.StageProbe.main, Array("qnope_typo"))).foreach { case (main, args) =>
+      (graft.tools.RowHash.main, Array(sfTiny, "qnope_typo"))).foreach { case (main, args) =>
       val e = intercept[RuntimeException](main(args))
       assert(e.getMessage.contains("unknown query 'qnope_typo'"), e.getMessage)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
