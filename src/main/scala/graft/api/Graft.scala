@@ -720,8 +720,8 @@ object Graft {
     * corrupting ranks, so nulls fail fast with `raise_error` instead.
     * `tiebreaks` must make the total order unique for `__rank` to be
     * deterministic (D9). Fixed-width buckets keep the pass count at two;
-    * a skewed `orderCol` wants [[globalRanksSampled]] instead (same plan
-    * shape, one extra sampling aggregate). NaNs are routed EXPLICITLY to
+    * a skewed `orderCol` wants [[globalRanksSampled]] instead (same rank
+    * pass, one extra sampling aggregate). NaNs are routed EXPLICITLY to
     * the last bucket (Spark sorts NaN greatest, so global order is
     * preserved) — an explicit branch because under ANSI mode (the Spark 4
     * default this repo runs) `floor(NaN).cast(LONG)` would throw, and the
@@ -747,59 +747,71 @@ object Graft {
               floor((ordD - col("__lo")) * buckets /
                 (col("__hi") - col("__lo"))).cast(LongType))))
       .drop("__lo", "__hi")
-    rankByBucket(bucketed, orderCol, tiebreaks)
+    rankByBucket(bucketed, Seq("__rank" -> orderCol), tiebreaks)
   }
 
-  /** [[globalRanks]] with SAMPLED-QUANTILE bucket boundaries — the variant
-    * for a skewed `orderCol`, where fixed-width value ranges degrade to one
-    * hot bucket (a pareto-tailed column puts ~every row below the first
-    * width cut). One extra pass computes boundaries from a DETERMINISTIC
-    * hash sample (no RNG — `xxhash64(orderCol, tiebreaks…) % sampleOneIn`,
-    * so re-runs and resizes see the same sample): the sample's exact
-    * per-value cumulative distribution (a window over the ≤sample-size
-    * distinct-value frame — metadata scale, same budget class as the
-    * triangular offsets join) yields the `j/buckets` quantile cut values,
-    * collected into ONE sorted boundary array (≤ buckets-1 elements,
-    * duplicates preserved so a mass point spanning several cuts keeps its
-    * multiplicity) and broadcast; every row's bucket is then
-    * `#boundaries ≤ value` — order-preserving, so the rank machinery is
-    * identical. Boundary quality affects only BALANCE, never correctness:
-    * an empty sample degrades to one bucket, still exact ranks. Same
-    * null/NaN contract as [[globalRanks]]. */
-  def globalRanksSampled(df: DataFrame, orderCol: Column, tiebreaks: Seq[Column],
-      buckets: Int = 64, sampleOneIn: Int = 64): DataFrame =
-    rankByBucket(sampledBuckets(df, orderCol, tiebreaks, buckets, sampleOneIn),
-      orderCol, tiebreaks)
+  /** [[globalRanks]] with SAMPLED-QUANTILE bucket boundaries, over one or
+    * more order columns at once: the variant for a skewed column, where
+    * fixed-width value ranges degrade to one hot bucket (a pareto-tailed
+    * column puts ~every row below the first width cut). Appends, per
+    * `(name, orderCol)` pair, `name` = the exact global 1-based rank over
+    * `(orderCol, tiebreaks…)`, plus `__n` (total row count). All ranks
+    * ride one frame: chained per-bucket windows, no join back on any key.
+    * Boundaries ([[sampledBuckets]]) affect only bucket BALANCE, never a
+    * rank: an empty sample degrades to one bucket, still exact ranks.
+    * Same null/NaN contract as [[globalRanks]]; `tiebreaks` must be
+    * non-empty (the sample hashes them).
+    *
+    * With several order columns the bucketed frame is materialized once:
+    * every column's per-bucket counts and every window of the chain read
+    * it, and each would otherwise replay the caller's subtree and all the
+    * bucket assignments. One column has one count reader and one rank
+    * reader, so it stays lazy and costs no extra eager job; a caller whose
+    * frame is expensive to replay materializes it itself. */
+  def globalRanksSampled(df: DataFrame, orders: Seq[(String, Column)],
+      tiebreaks: Seq[Column], buckets: Int = 64, sampleOneIn: Int = 64): DataFrame = {
+    val bucketed = sampledBuckets(df, orders.map(_._2), tiebreaks, buckets, sampleOneIn)
+    rankByBucket(if (orders.size > 1) Ckpt(bucketed) else bucketed, orders, tiebreaks)
+  }
 
   /** The bucketing pass of [[globalRanksSampled]], exposed for balance
-    * tests: appends `__bucket` (sampled-quantile, order-preserving).
-    * NOTE: `qagg_rfm` (etl/ops/AggOps.scala) re-expresses this marks →
-    * boundaries → bucket math fused across three metrics in one pass —
-    * a fix to the quantile-cut arithmetic or the null/NaN contract here
-    * must be mirrored there (its RfmSpec plan pin and oracle will catch
-    * a silent divergence, but only at test time). */
-  private[graft] def sampledBuckets(df: DataFrame, orderCol: Column,
+    * tests: appends one order-preserving bucket column per order column
+    * (named by [[bucketCols]]). ONE deterministic hash sample (no RNG:
+    * `xxhash64(tiebreaks…) % sampleOneIn`, so re-runs and resizes see the
+    * same rows, and every order column is cut from the same rows) is
+    * unpivoted to (column id, value). An exact cumulative count over each
+    * column's distinct sample values (a window partitioned by the column
+    * id over ≤ sample-size rows, metadata scale, the same budget class as
+    * the triangular offsets join) yields the `j/buckets` quantile cut
+    * values, collected into ONE row of sorted boundary arrays (≤ buckets-1
+    * elements each, duplicates kept so a mass point spanning several cuts
+    * keeps its multiplicity) and broadcast. A row's bucket is the native
+    * `count_leq(boundaries, value)` in double space: the cast is
+    * monotone, so bucket order never contradicts the column's order. */
+  private[graft] def sampledBuckets(df: DataFrame, orderCols: Seq[Column],
       tiebreaks: Seq[Column], buckets: Int, sampleOneIn: Int): DataFrame = {
+    require(orderCols.nonEmpty, "globalRanksSampled needs at least one order column")
+    require(tiebreaks.nonEmpty, "globalRanksSampled hashes its sample on the tiebreaks; pass one")
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(sampleOneIn > 0, s"sampleOneIn must be positive, got $sampleOneIn")
-    val ordD = orderCol.cast(DoubleType)
+    val ordDs = orderCols.map(_.cast(DoubleType))
+    // the column id comes out of the explode, so it is not foldable:
+    // EliminateWindowPartitions would strip a literal partition key and
+    // leave an unpartitioned window, whose warning stays reserved for
+    // real mistakes
     val sample = df
-      .filter(pmod(xxhash64(orderCol +: tiebreaks: _*), lit(sampleOneIn.toLong)) === 0)
-      .filter(orderCol.isNotNull && !isnan(ordD))
-      .select(ordD.as("__v"))
-    // exact cumulative counts over the sample's DISTINCT values: the frame
-    // is ≤ sample-size rows, so the single-partition window is
-    // metadata-scale. The constant-valued partition key (non-foldable —
-    // EliminateWindowPartitions folds a bare literal away) keeps the plan
-    // identical while not tripping WindowExec's unpartitioned-window
-    // warning, which must stay reserved for real mistakes.
-    val valCounts = sample.groupBy(col("__v")).agg(count(lit(1)).as("__c"))
+      .filter(pmod(xxhash64(tiebreaks: _*), lit(sampleOneIn.toLong)) === 0)
+      .select(explode(array(ordDs.zipWithIndex.map { case (d, i) =>
+        struct(lit(i).as("__id"), d.as("__v")) }: _*)).as("__e"))
+      .select(col("__e.__id").as("__id"), col("__e.__v").as("__v"))
+      .filter(col("__v").isNotNull && !isnan(col("__v")))
+    val valCounts = sample.groupBy(col("__id"), col("__v")).agg(count(lit(1)).as("__c"))
     val cum = valCounts
       .withColumn("__cum", sum(col("__c")).over(
-        Window.partitionBy(xxhash64(col("__v")).bitwiseAND(lit(0L)))
-          .orderBy(col("__v"))
+        Window.partitionBy(col("__id")).orderBy(col("__v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .crossJoin(broadcast(valCounts.agg(sum(col("__c")).cast(DoubleType).as("__s"))))
+      .join(broadcast(valCounts.groupBy(col("__id"))
+        .agg(sum(col("__c")).cast(DoubleType).as("__s"))), "__id")
     // value v is the boundary for every quantile cut j/buckets its
     // cumulative count crosses: cuts in (k_prev, k] where k = #cuts ≤ cum
     val marks = cum
@@ -809,41 +821,57 @@ object Graft {
         least(lit(buckets - 1L),
           floor((col("__cum") - col("__c")) * buckets / col("__s")).cast(LongType)))
       .filter(col("__k") > col("__kprev"))
-    // ONE-row boundary frame: checkpointed so the two consumers of the
-    // bucketed output (per-bucket counts and the final rank join) don't
-    // each replay the whole sample→cum→marks subtree in the static plan
-    // (the qagg_mad treatment; this frame is ≤ `buckets` doubles)
-    val boundsArr = Ckpt(marks
-      .select(explode(expr("array_repeat(__v, CAST(__k - __kprev AS INT))")).as("__b"))
-      .agg(sort_array(collect_list(col("__b"))).as("__bounds")))
-    df.crossJoin(broadcast(boundsArr))
-      .withColumn("__bucket",
-        when(orderCol.isNull,
-          raise_error(lit("globalRanksSampled: order column must be non-null")).cast(LongType))
-          .when(isnan(ordD), lit(buckets - 1L))
-          .otherwise(size(filter(col("__bounds"), b => b <= ordD)).cast(LongType)))
-      .drop("__bounds")
+      .select(col("__id"),
+        explode(expr("array_repeat(__v, CAST(__k - __kprev AS INT))")).as("__b"))
+    // ONE row of boundary arrays (≤ buckets doubles per column; an empty
+    // sample leaves an empty array, so every row lands in bucket 0),
+    // materialized so the bucketed frame's readers don't each replay the
+    // sample subtree
+    val bnd = orderCols.indices.map(i => s"__bnd$i")
+    val arrays = bnd.zipWithIndex.map { case (b, i) =>
+      sort_array(collect_list(when(col("__id") === i, col("__b")))).as(b) }
+    val bounds = Ckpt(marks.agg(arrays.head, arrays.tail: _*))
+    orderCols.zip(ordDs).zip(bnd).zip(bucketCols(orderCols.size))
+      .foldLeft(df.crossJoin(broadcast(bounds))) { case (acc, (((o, d), b), bk)) =>
+        acc.withColumn(bk,
+          when(o.isNull,
+            raise_error(lit("globalRanksSampled: order column must be non-null")).cast(LongType))
+            // count_leq would count NaN below every boundary; Spark sorts
+            // NaN greatest, so it goes to the last bucket
+            .when(isnan(d), lit(buckets - 1L))
+            .otherwise(graft.functions.ArraySearch.count_leq(col(b), d)))
+      }.drop(bnd: _*)
   }
 
+  /** Bucket column names for `n` order columns; one column keeps the
+    * `__bucket` name [[globalRanks]] assigns. */
+  private def bucketCols(n: Int): Seq[String] =
+    if (n == 1) Seq("__bucket") else (0 until n).map(i => s"__bk$i")
+
   /** Shared second pass of [[globalRanks]]/[[globalRanksSampled]]: exact
-    * global rank from any ORDER-PRESERVING `__bucket` assignment. */
-  private def rankByBucket(bucketed: DataFrame, orderCol: Column,
+    * global ranks from ORDER-PRESERVING bucket columns (named by
+    * [[bucketCols]]), one per-bucket `row_number` window per order column,
+    * chained on the bucketed frame. */
+  private def rankByBucket(bucketed: DataFrame, orders: Seq[(String, Column)],
       tiebreaks: Seq[Column]): DataFrame = {
-    val counts = bucketed.groupBy(col("__bucket")).agg(count(lit(1)).as("__c"))
-    // cumulative offset per bucket + grand total: a triangular self-join
-    // over ≤`buckets` rows — never a single-partition window over data
-    val offsets = counts.select(col("__bucket"), col("__c"))
-      .join(broadcast(counts.select(col("__bucket").as("__b2"), col("__c").as("__c2"))),
-        col("__b2") <= col("__bucket"))
-      .groupBy(col("__bucket"))
-      .agg((sum(col("__c2")) - first(col("__c"))).as("__off"))
-      .crossJoin(broadcast(
-        counts.agg(sum(col("__c")).cast(LongType).as("__n"))))
-    val w = Window.partitionBy(col("__bucket"))
-      .orderBy(orderCol +: tiebreaks: _*)
-    bucketed.join(broadcast(offsets), "__bucket")
-      .withColumn("__rank", (col("__off") + row_number().over(w)).cast(LongType))
-      .drop("__bucket", "__off")
+    val bks = bucketCols(orders.size)
+    orders.zip(bks).zipWithIndex.foldLeft(bucketed) { case (df, (((name, orderCol), bk), i)) =>
+      val counts = bucketed.groupBy(col(bk)).agg(count(lit(1)).as("__c"))
+      // per bucket, the rows of all lower buckets (its rank offset) and of
+      // all buckets (the grand total, kept from the first column only):
+      // a broadcast self-cross-join over ≤`buckets` rows, never a
+      // single-partition window over data. Both sides read `__c`, so they
+      // share one count exchange.
+      val offsets = counts
+        .crossJoin(broadcast(counts.select(col(bk).as("__b2"), col("__c").as("__c2"))))
+        .groupBy(col(bk))
+        .agg((sum(when(col("__b2") <= col(bk), col("__c2"))) - first(col("__c"))).as("__off"),
+          sum(col("__c2")).as("__n"))
+      val w = Window.partitionBy(col(bk)).orderBy(orderCol +: tiebreaks: _*)
+      df.join(broadcast(if (i > 0) offsets.drop("__n") else offsets), bk)
+        .withColumn(name, (col("__off") + row_number().over(w)).cast(LongType))
+        .drop("__off")
+    }.drop(bks: _*)
   }
 
   /** `ntile(k)` computed from an exact global rank (SQL-standard sizing:

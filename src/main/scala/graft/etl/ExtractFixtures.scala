@@ -113,21 +113,26 @@ object ExtractFixtures {
     * more partitions than the session default at
     * [[TableStats.rowsPerTask]], `lp` is key-repartitioned to that count
     * first. Both join sides reuse that one exchange, so it replaces the
-    * join's own shuffle instead of adding one. */
+    * join's own shuffle instead of adding one. The `src`-keyed shuffle
+    * takes the same count: the pair rows it carries grow with lineitem's
+    * rows (897,843 pairs from 600 k lineitem rows at GenData sf0.1, ≈ 1.5×),
+    * so a partition count sized for lineitem keeps each distinct task
+    * within a small multiple of the budget. Below the trip point both
+    * shuffles keep the session default. */
   def copurchaseEdges(spark: SparkSession, sfDir: String): String = {
     val dir = root(sfDir).resolve("copurchase_edges")
     ensure(dir) {
       val pairs = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val lp = TableStats.sizedPartitions(spark,
-          TableStats.rows(spark, Tables.path(sfDir, "lineitem")),
-          TableStats.rowsPerTask(spark), margin = 1.0)
-        .fold(pairs)(n => pairs.repartition(n, col("ok")))
-      lp.as("a")
+      val parts = TableStats.sizedPartitions(spark,
+        TableStats.rows(spark, Tables.path(sfDir, "lineitem")),
+        TableStats.rowsPerTask(spark), margin = 1.0)
+      val lp = parts.fold(pairs)(n => pairs.repartition(n, col("ok")))
+      val edges = lp.as("a")
         .join(lp.as("b").hint("shuffle_hash"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-        .repartition(col("src"))
+      parts.fold(edges.repartition(col("src")))(n => edges.repartition(n, col("src")))
         .distinct()
         .write.mode("overwrite").parquet(dir.toString)
     }

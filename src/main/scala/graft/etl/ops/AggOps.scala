@@ -1418,30 +1418,14 @@ object AggOps {
     * diffs against the corpus max order date, counts, scale-4 decimal
     * spend); each 1–5 score is `(rank−1)·5 div n + 1` over an EXACT
     * global rank with the customer key as tiebreak (D9-unique, so
-    * rank-based quintiles are deterministic even on tied metrics;
-    * recency ranks on the NEGATED day diff so 5 = most recent, matching
-    * f/m where 5 = highest). Segment = the concatenated digit triple.
+    * rank-based quintiles are deterministic even on tied metrics).
+    * Segment = the concatenated digit triple.
     *
-    * Scale: the round-8 shape ran THREE independent
-    * [[graft.api.Graft.globalRanksSampled]] two-pass ranks and joined
-    * each back on the customer key — 3 sample subtrees + 3 rank joins,
-    * measured 5.5 s isolated at sf0.1, almost all of it fixed stage
-    * overhead on the 15 k-row checkpointed frame (round-8 verdict
-    * item 4). Fused here into the same exact-rank machinery run ONCE
-    * across the three metrics: one deterministic hash sample feeds one
-    * unpivoted cumulative-distribution pass that yields all three
-    * sampled-quantile boundary arrays (boundaries affect only bucket
-    * BALANCE, never rank exactness — the globalRanksSampled contract),
-    * one broadcast assigns all three order-preserving `__bk*` columns,
-    * and the three exact ranks ride three CHAINED per-bucket windows on
-    * the same frame — zero join-backs on the customer key. Boundary
-    * compares happen in double space (monotone cast of the decimal, so
-    * bucket order never contradicts metric order); each window still
-    * ranks on the EXACT metric, so the scores equal the oracle's
-    * row_number() arithmetic bit-for-bit. Still no single-partition
-    * window anywhere: the cum-dist window is over the sample's distinct
-    * values per metric (metadata scale), the rank windows partition by
-    * bucket. */
+    * Scale: the three ranks are one
+    * [[graft.api.Graft.globalRanksSampled]] call over the three metrics:
+    * one hash sample, one boundary row, three chained per-bucket windows
+    * on the customer frame, no join back on the customer key and no
+    * single-partition window over data. */
   private val qaggRfm = QueryDef(
     "qagg_rfm",
     build = (spark, sfDir) => {
@@ -1455,104 +1439,20 @@ object AggOps {
         .select(col("o_custkey"),
           datediff(col("maxd"), col("last_order")).cast(LongType).as("recency_days"),
           col("frequency"), col("monetary")))
-      val nb = 64 // buckets per metric (the globalRanksSampled default)
-      // the three ranked metrics, as (name, exact order column, double
-      // boundary-space image). Recency ranks on the NEGATED day diff so
-      // 5 = most recent, matching f/m where 5 = highest.
-      val metrics = Seq(
-        ("r_score", col("recency_days") * -1),
-        ("f_score", col("frequency")),
-        ("m_score", col("monetary")))
-      // ONE hash sample of customers drives all three boundary arrays
-      // (deterministic — no RNG, stable across re-runs and cluster sizes)
-      val sv = cust
-        .filter(pmod(xxhash64(col("o_custkey")), lit(64L)) === 0)
-        .select(explode(array(metrics.zipWithIndex.map { case ((_, m), i) =>
-          struct(lit(i).as("mid"), m.cast(DoubleType).as("v")) }: _*)).as("e"))
-        .select(col("e.mid").as("mid"), col("e.v").as("__v"))
-      // exact cumulative counts over each metric's distinct sample values
-      // (≤ sample-size rows per metric — metadata scale), quantile cut
-      // marks, and the three sorted boundary arrays in one subtree
-      val valCounts = sv.groupBy(col("mid"), col("__v")).agg(count(lit(1)).as("__c"))
-      val cum = valCounts
-        .withColumn("__cum", sum(col("__c")).over(
-          Window.partitionBy(col("mid")).orderBy(col("__v"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .join(broadcast(valCounts.groupBy(col("mid"))
-          .agg(sum(col("__c")).cast(DoubleType).as("__s"))), "mid")
-      val marks = cum
-        .withColumn("__k",
-          least(lit(nb - 1L), floor(col("__cum") * nb / col("__s")).cast(LongType)))
-        .withColumn("__kprev",
-          least(lit(nb - 1L),
-            floor((col("__cum") - col("__c")) * nb / col("__s")).cast(LongType)))
-        .filter(col("__k") > col("__kprev"))
-        .select(col("mid"),
-          explode(expr("array_repeat(__v, CAST(__k - __kprev AS INT))")).as("__b"))
-      // ONE-row frame carrying all three arrays; checkpointed so the
-      // three per-bucket count aggregates below don't each replay the
-      // sample subtree (the sampledBuckets treatment — ≤ 3·64 doubles)
-      val bndAggs = metrics.indices.map(i =>
-        max(when(col("mid") === i, col("__bs"))).as(s"__bnd$i"))
-      val bounds = Ckpt(marks.groupBy(col("mid"))
-        .agg(sort_array(collect_list(col("__b"))).as("__bs"))
-        .agg(bndAggs.head, bndAggs.tail: _*))
-      // all three order-preserving bucket assignments off one broadcast;
-      // an empty sample leaves a null array → bucket 0 for every row
-      // (one bucket, still exact ranks — the degraded-balance contract)
-      val emptyD = expr("CAST(array() AS ARRAY<DOUBLE>)")
-      // same null/NaN contract as Graft.sampledBuckets (which this fused
-      // pass re-expresses — keep the marks/bucket math in sync with it):
-      // a null metric fails FAST instead of silently landing in bucket 0
-      // where the rank window would sort it first, and NaN routes to the
-      // last bucket to match Spark's NaN-greatest sort order. Both
-      // branches are unreachable for today's non-null long/decimal
-      // aggregates; they guard the contract against a future nullable
-      // metric (e.g. a left join upstream).
-      // The bucket assignment is materialized ONCE: the three per-bucket
-      // count aggregates below and the rank chain each re-read this
-      // frame, and without the checkpoint every reader replays the full
-      // orders aggregate + three bucket assignments.
-      val bucketed = Ckpt(metrics.zipWithIndex.foldLeft(cust.crossJoin(broadcast(bounds))) {
-        case (df, ((_, m), i)) =>
-          val md = m.cast(DoubleType)
-          df.withColumn(s"__bk$i",
-            when(m.isNull,
-              raise_error(lit("qagg_rfm: rank metric must be non-null")).cast(LongType))
-              .when(isnan(md), lit(nb - 1L))
-              // native codegen'd boundary count (round-9 sf30 finding):
-              // the interpreted filter-lambda it replaces cost ~6
-              // 64-element closure passes per customer across this chain.
-              // NaN never reaches count_leq — the isnan guard above
-              // routes it to the last bucket first.
-              .otherwise(graft.functions.ArraySearch.count_leq(
-                coalesce(col(s"__bnd$i"), emptyD), md)))
-      }.drop(metrics.indices.map(i => s"__bnd$i"): _*))
-      val nRow = cust.agg(count(lit(1)).cast(LongType).as("__n"))
-      // three chained exact ranks: per metric, a broadcast triangular
-      // offsets join (≤ nb rows) + a row_number window PARTITIONED BY its
-      // bucket — the rankByBucket second pass, minus any customer-key join
-      val scored = metrics.zipWithIndex.foldLeft(
-          bucketed.crossJoin(broadcast(nRow))) { case (df, ((out, m), i)) =>
-        val bc = s"__bk$i"
-        val counts = bucketed.groupBy(col(bc)).agg(count(lit(1)).as("__c"))
-        val offsets = counts
-          .join(broadcast(counts.select(col(bc).as("__b2"), col("__c").as("__c2"))),
-            col("__b2") <= col(bc))
-          .groupBy(col(bc))
-          .agg((sum(col("__c2")) - first(col("__c"))).as("__off"))
-        val w = Window.partitionBy(col(bc)).orderBy(m, col("o_custkey"))
-        df.join(broadcast(offsets), bc)
-          .withColumn("__rank", (col("__off") + row_number().over(w)).cast(LongType))
-          .withColumn(out, (expr("(__rank - 1) * 5 div __n") + 1L))
-          .drop("__off", "__rank")
-      }
-      scored
-        .select(col("o_custkey"), col("recency_days"), col("frequency"),
-          decStr(col("monetary")).as("monetary"),
-          col("r_score"), col("f_score"), col("m_score"),
-          concat(col("r_score").cast(StringType), col("f_score").cast(StringType),
-            col("m_score").cast(StringType)).as("segment"))
+      // recency ranks on the NEGATED day diff so 5 = most recent,
+      // matching f/m where 5 = highest
+      val scores = Seq(
+        "r_score" -> col("recency_days") * -1,
+        "f_score" -> col("frequency"),
+        "m_score" -> col("monetary"))
+      val ranked = graft.api.Graft.globalRanksSampled(cust, scores, Seq(col("o_custkey")))
+      scores.foldLeft(ranked) { case (df, (s, _)) =>
+        df.withColumn(s, expr(s"($s - 1) * 5 div __n") + 1L)
+      }.select(col("o_custkey"), col("recency_days"), col("frequency"),
+        decStr(col("monetary")).as("monetary"),
+        col("r_score"), col("f_score"), col("m_score"),
+        concat(col("r_score").cast(StringType), col("f_score").cast(StringType),
+          col("m_score").cast(StringType)).as("segment"))
         .orderBy(col("o_custkey"))
     },
     oracle = Some(

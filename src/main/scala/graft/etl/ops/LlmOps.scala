@@ -893,7 +893,7 @@ object LlmOps {
 
   /** Vocabulary construction (unigrams + bigrams): frequency-ranked term →
     * id assignment, the first step of tokenizer training. Term ids are a
-    * GLOBAL rank by (count desc, term asc) — computed via
+    * GLOBAL rank by (count desc, term asc) — one order column through
     * [[graft.api.Graft.globalRanksSampled]], NOT an unpartitioned
     * `row_number` window: term frequencies are zipf-skewed, which is
     * exactly the distribution where fixed-width value buckets collapse to
@@ -920,12 +920,12 @@ object LlmOps {
       // only runtime ReusedExchange collapses. The materialized frame is
       // (term, cnt) — VOCAB-scale, bounded by the distinct-term count,
       // never the corpus — so this is the qagg_mad treatment at the safe
-      // altitude (checkpointing inside rankByBucket would pin arbitrary
-      // caller frames, including corpus-scale ones).
+      // altitude (a one-column globalRanksSampled materializes nothing of
+      // its caller's frame).
       val counts = Ckpt(uni.unionByName(bi).groupBy(col("term")).agg(count(lit(1)).as("cnt")))
-      graft.api.Graft.globalRanksSampled(
-          counts, -col("cnt"), Seq(col("term")), buckets = 32, sampleOneIn = 8)
-        .select(col("__rank").as("vocab_id"), col("term"), col("cnt"))
+      graft.api.Graft.globalRanksSampled(counts, Seq("vocab_id" -> -col("cnt")),
+          Seq(col("term")), buckets = 32, sampleOneIn = 8)
+        .select(col("vocab_id"), col("term"), col("cnt"))
         .orderBy(col("vocab_id"))
     },
     oracle = Some(
@@ -1985,8 +1985,8 @@ object LlmOps {
     * frequency against rank, the corpus-health diagnostic (natural text
     * slopes ≈ −1; template/boilerplate corpora flatten or step). Term
     * frequencies are EXACT (keyed count), and the frequency rank is the
-    * EXACT global rank by (freq desc, term asc) via
-    * [[graft.api.Graft.globalRanksSampled]] — the same scale-safe rank
+    * EXACT global rank by (freq desc, term asc), one order column
+    * through [[graft.api.Graft.globalRanksSampled]] — the same rank
     * `qllm_vocab` runs on the same frame — NOT an unpartitioned
     * `row_number` window: a Heaps-law vocabulary at corpus scale (10⁸⁺
     * terms, hapax-heavy) would funnel through ONE partition's sort, and
@@ -2011,10 +2011,8 @@ object LlmOps {
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      val ranked = graft.api.Graft
-        .globalRanksSampled(freq, -col("freq"), Seq(col("w")),
-          buckets = 32, sampleOneIn = 8)
-        .withColumn("rank", col("__rank"))
+      val ranked = graft.api.Graft.globalRanksSampled(freq, Seq("rank" -> -col("freq")),
+        Seq(col("w")), buckets = 32, sampleOneIn = 8)
       val lx = round(log(col("rank").cast(DoubleType)), 6).cast(DecimalType(18, 6))
       val ly = round(log(col("freq").cast(DoubleType)), 6).cast(DecimalType(18, 6))
       val t = ranked.select(

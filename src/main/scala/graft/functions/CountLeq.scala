@@ -9,26 +9,21 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression counting the elements of a double array
-  * that are <= a probe value — the boundary-array bucket assignment of
-  * the sampled-rank family (`size(filter(bnd, b -> b <= v))`), compiled.
+  * that are <= a probe value: the boundary-array bucket assignment of
+  * [[graft.api.Graft.globalRanksSampled]] (`size(filter(bnd, b -> b <= v))`),
+  * compiled. The higher-order `filter` lambda evaluates INTERPRETED, one
+  * closure dispatch per array element per row (PERF.md, "qagg_rfm's
+  * bucket assignment was interpreted").
   *
-  * The higher-order `filter` lambda it replaces evaluates INTERPRETED
-  * (one closure dispatch per array element per row — the NgramHashes
-  * lesson a third time): with a 64-boundary array and three metrics the
-  * old shape burned ~6 interpreted 64-element passes per customer row
-  * across qagg_rfm's rank chain, which the sf30 probe surfaced as the
-  * suite's one superlinear-looking curve (48.9 s isolated — constant
-  * factor, not complexity, but a 100 TB-relevant constant).
-  *
-  * Value contract (bit-exact vs the lambda for every input qagg_rfm can
-  * produce): null elements are skipped (the SQL filter drops a null
-  * predicate result); an empty array counts 0; a null array or probe is
-  * null (BinaryExpression null-intolerance, same as `size(filter())`
-  * over a null). One DELIBERATE divergence: a NaN probe counts Java-
-  * style (b <= NaN is false → 0) where the SQL lambda would use
-  * NaN-greatest ordering — callers route NaN BEFORE the boundary count
-  * (qagg_rfm pins NaN to the last bucket upstream), and this expression
-  * documents rather than replicates the SQL footgun.
+  * Value contract (bit-exact vs the lambda for every non-NaN probe):
+  * null elements are skipped (the SQL filter drops a null predicate
+  * result); an empty array counts 0; a null array or probe is null
+  * (BinaryExpression null-intolerance, same as `size(filter())` over a
+  * null). One DELIBERATE divergence: a NaN probe counts Java-style
+  * (b <= NaN is false → 0) where the SQL lambda would use NaN-greatest
+  * ordering — callers route NaN BEFORE the boundary count (the sampled
+  * rank pins NaN to the last bucket), and this expression documents
+  * rather than replicates the SQL footgun.
   */
 case class CountLeq(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -23,29 +23,12 @@ import graft.etl.ExtractFixtures
   * session's SparkConf reads: `-Dspark.io.compression.codec=zstd` makes
   * shuffle transients ≈ 1.5× smaller than the lz4 default, and
   * `-Dspark.sql.parquet.compression.codec=zstd` writes smaller staged
-  * tables.
+  * tables. Shuffle partitions are the session's: a staging shuffle whose
+  * rows grow with the data sizes itself from footer row counts
+  * ([[graft.etl.TableStats.sizedPartitions]]), so this main, `graft.Bench`
+  * and the benchmark harness stage the same layout at every scale.
   */
 object StageExtract {
-  /** Staging shuffles (the orderkey self-join inside copurchase edges and
-    * the src-keyed distinct after it) carry data that grows with the
-    * rung, so a partition count pinned to the thread count is the exact
-    * fixed-partition defect the sf60 probe convicted twice — and it
-    * reproduced here: the first sf100 staging attempt died in the
-    * adjacency shuffle with UNABLE_TO_ACQUIRE_MEMORY at 32 partitions.
-    * Size reduce partitions from the fixture's on-disk bytes instead
-    * (~64 MB of source parquet per reduce task, the same
-    * bytes-per-task discipline maxPartitionBytes applies to scans),
-    * never below the thread count, capped at 1024. At the proven ≤ sf30
-    * rungs the clamp floors at the thread count, so re-staging those is
-    * byte-identical to the old `partitions = cpus` behavior. */
-  def sizedShufflePartitions(sfDir: String, cpus: Int): Int = {
-    def bytes(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(bytes).sum).getOrElse(0L)
-      else f.length()
-    val fixtureBytes = bytes(new java.io.File(sfDir))
-    math.max(cpus, math.min(1024, (fixtureBytes / (64L << 20)).toInt)).toInt
-  }
-
   /** The heap's old-generation pools (G1 Old Gen, PS Old Gen, Tenured Gen).
     * Each step resets their peak before it starts and reads it before the
     * post-step GC, so the log names the step that sets the heap a rung
@@ -65,9 +48,7 @@ object StageExtract {
     require(unknown.isEmpty, s"unknown staging steps: ${unknown.mkString(", ")}; " +
       s"known: ${ExtractFixtures.staging.map(_._1).mkString(", ")}")
     val cpus = graft.GraftSession.cpus
-    val parts = sizedShufflePartitions(sfDir, cpus)
     val spark = graft.GraftSession.builder(cpus)
-      .config("spark.sql.shuffle.partitions", parts.toLong)
       // 8m, NOT 16m: G1 regions top out at 32 MB, so 16 MB sorter pages
       // are humongous allocations — at sf100 the bucketed-write sorts
       // allocate thousands of them while zstd/lz4 JNI streams hold the
@@ -83,7 +64,7 @@ object StageExtract {
       .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    println(s"[stage] sfDir=$sfDir cpus=$cpus shufflePartitions=$parts " +
+    println(s"[stage] sfDir=$sfDir cpus=$cpus " +
       s"shuffleCodec=${spark.conf.get("spark.io.compression.codec", "lz4")} " +
       s"parquetCodec=${spark.conf.get("spark.sql.parquet.compression.codec")}")
     ExtractFixtures.staging.filter(s => only.isEmpty || only(s._1)).foreach { case (n, f) =>

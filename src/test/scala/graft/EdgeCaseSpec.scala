@@ -94,11 +94,16 @@ class EdgeCaseSpec extends SparkFixture {
 
   test("globalRanks fails fast on a null order value instead of mis-ranking it") {
     val withNull = df(Seq(Row(1, 5), Row(2, 9), Row(3, null)), kv)
-    val ex = intercept[Exception] {
-      Graft.globalRanks(withNull, col("v"), Seq(col("k")), buckets = 4).collect()
+    def refused(rank: => Unit): Unit = {
+      val ex = intercept[Exception](rank)
+      assert(ex.getMessage.contains("non-null") ||
+        Option(ex.getCause).exists(_.getMessage.contains("non-null")), ex.getMessage)
     }
-    assert(ex.getMessage.contains("non-null") ||
-      Option(ex.getCause).exists(_.getMessage.contains("non-null")), ex.getMessage)
+    refused(Graft.globalRanks(withNull, col("v"), Seq(col("k")), buckets = 4).collect())
+    // the sampled rank over several metrics: the null one fails, not just
+    // the first; the sample (one in one) sees every row
+    refused(Graft.globalRanksSampled(withNull, Seq("rk" -> col("k"), "rv" -> col("v")),
+      Seq(col("k")), buckets = 4, sampleOneIn = 1).collect())
   }
 
   test("cosine of a zero vector is NaN (documented, not a crash); empty arrays too") {

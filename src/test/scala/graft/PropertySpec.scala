@@ -217,18 +217,29 @@ class PropertySpec extends SparkFixture {
 
   test("globalRanks equals the single-partition global window on random data") {
     // duplicate order values + negative doubles + tiny/large bucket counts:
-    // the two-pass rank must reproduce Window.orderBy's row_number exactly
+    // the two-pass rank must reproduce Window.orderBy's row_number exactly;
+    // the sampled rank does so for two order columns in one call
     val rowsGen = Gen.listOfN(60, Gen.chooseNum(-100, 100))
     samples(Gen.zip(rowsGen, Gen.chooseNum(1, 16)), 6).foreach { case (xs, buckets) =>
       val sp = spark
       import sp.implicits._
-      val df = xs.zipWithIndex.map { case (v, i) => (v.toDouble, i.toLong) }.toDF("v", "id")
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("id"))
-      val reference = df.withColumn("r", row_number().over(w))
-        .collect().map(r => (r.getLong(1), r.getInt(2).toLong)).toMap
+      // u: distinct, negative and positive, in an order unrelated to v's
+      val df = xs.zipWithIndex.map { case (v, i) =>
+        (v.toDouble, ((i * 37) % 60 - 30).toLong, i.toLong) }.toDF("v", "u", "id")
+      def reference(c: String): Map[Long, Long] = {
+        val w = org.apache.spark.sql.expressions.Window.orderBy(col(c), col("id"))
+        df.withColumn("r", row_number().over(w))
+          .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("r").toLong)).toMap
+      }
+      def ranks(ranked: org.apache.spark.sql.DataFrame, c: String): Map[Long, Long] =
+        ranked.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long](c))).toMap
       val twoPass = Graft.globalRanks(df, col("v"), Seq(col("id")), buckets)
-        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("__rank"))).toMap
-      assert(twoPass == reference, s"buckets=$buckets xs=$xs")
+      assert(ranks(twoPass, "__rank") == reference("v"), s"buckets=$buckets xs=$xs")
+      val sampled = Graft.globalRanksSampled(df, Seq("rv" -> col("v"), "ru" -> col("u")),
+        Seq(col("id")), buckets, sampleOneIn = 2)
+      assert(ranks(sampled, "rv") == reference("v"), s"sampled v: buckets=$buckets xs=$xs")
+      assert(ranks(sampled, "ru") == reference("u"), s"sampled u: buckets=$buckets xs=$xs")
+      assert(sampled.select("__n").distinct().collect().map(_.getLong(0)).toSeq == Seq(60L))
     }
   }
 
@@ -249,15 +260,15 @@ class PropertySpec extends SparkFixture {
     // correctness: sampled boundaries must not change a single rank
     val fixed = Graft.globalRanks(df, col("v"), Seq(col("id")), buckets)
       .select(col("id"), col("__rank"))
-    val sampled = Graft.globalRanksSampled(df, col("v"), Seq(col("id")), buckets,
-      sampleOneIn = 4)
-      .select(col("id"), col("__rank").as("__rank_s"))
+    val sampled = Graft.globalRanksSampled(df, Seq("__rank_s" -> col("v")), Seq(col("id")),
+      buckets, sampleOneIn = 4)
+      .select(col("id"), col("__rank_s"))
     assert(fixed.join(sampled, "id")
       .filter(col("__rank") =!= col("__rank_s")).count() == 0,
       "sampled-boundary ranks diverge from fixed-width ranks")
 
     // balance: no sampled bucket exceeds 2× the mean occupancy...
-    val occ = Graft.sampledBuckets(df, col("v"), Seq(col("id")), buckets, 4)
+    val occ = Graft.sampledBuckets(df, Seq(col("v")), Seq(col("id")), buckets, 4)
       .groupBy(col("__bucket")).count().collect().map(_.getLong(1))
     val mean = n.toDouble / buckets
     assert(occ.max <= 2 * mean,

@@ -178,17 +178,33 @@ class RegistrySpec extends SparkFixture {
       unset.toSeq.sorted.mkString(", "))
   }
 
+  /** Per `src/main` file name, how often `literal` occurs in its code
+    * (comments stripped); files without it are left out. */
+  private def mainHits(literal: String): Seq[(String, Int)] =
+    sources("src/main", ".scala").map { f =>
+      f.getFileName.toString -> java.util.regex.Pattern.quote(literal).r.findAllIn(code(f)).size
+    }.filter(_._2 > 0).sortBy(_._1)
+
   test("one partition-sizing rule: only TableStats reads the session's shuffle partitions") {
     // a site that reads numShufflePartitions decides its own trip point;
     // a literal per-task row count is right for one heap and thread count
-    val main = sources("src/main", ".scala").map(f => f -> code(f))
-    def hits(literal: String) = main.map { case (f, c) =>
-      f.getFileName.toString -> java.util.regex.Pattern.quote(literal).r.findAllIn(c).size
-    }.filter(_._2 > 0)
-    val reads = hits("numShufflePartitions")
+    val reads = mainHits("numShufflePartitions")
     assert(reads == Seq("TableStats.scala" -> 1), s"numShufflePartitions read in: $reads")
-    val fixed = hits("1500000L")
+    val fixed = mainHits("1500000L")
     assert(fixed.isEmpty, s"a literal 1.5 M rows a task in: $fixed")
+    // a session that sets its own shuffle partitions is a second sizing
+    // rule; GenData's own session defines the generated data
+    val set = mainHits("spark.sql.shuffle.partitions").map(_._1)
+    assert(set == Seq("GenData.scala", "GraftSession.scala"),
+      s"spark.sql.shuffle.partitions named in: $set")
+  }
+
+  test("one sampled rank: the quantile-cut arithmetic lives only in api/Graft.scala") {
+    // a second copy of the marks → boundaries math drifts from the first
+    for (token <- Seq("__kprev", "array_repeat(__v")) {
+      val at = mainHits(token).map(_._1)
+      assert(at == Seq("Graft.scala"), s"$token in: $at")
+    }
   }
 
   test("one checkpoint policy: only Ckpt checkpoints, picks a storage level or releases") {
