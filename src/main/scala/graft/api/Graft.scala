@@ -703,64 +703,28 @@ object Graft {
   // Distributed ranking
   // ------------------------------------------------------------------
 
-  /** Exact global 1-based rank over `(orderCol, tiebreaks…)` WITHOUT a
-    * single-partition window — the two-pass shape that survives a fact
-    * table: (1) one aggregate computes `[min, max]` of `orderCol`,
-    * broadcast back to bucket every row into one of `buckets` fixed-width
-    * value ranges (order-preserving, so global order ≡ (bucket, local
-    * order)); (2) per-bucket counts (a `buckets`-row aggregate) turn into
-    * cumulative offsets via a broadcast triangular self-join, and the
-    * rank is `offset + row_number` under a window PARTITIONED by bucket.
-    * No operator ever sees more than one bucket's rows in one partition.
+  /** Exact global 1-based ranks WITHOUT a single-partition window, over
+    * one or more order columns at once. Appends, per `(name, orderCol)`
+    * pair, `name` = the exact global 1-based rank over `(orderCol,
+    * tiebreaks…)`, plus `__n` (total row count). [[sampledBuckets]] puts
+    * every row in one of `buckets` ORDER-PRESERVING buckets cut at
+    * sampled quantiles, so global order ≡ (bucket, local order);
+    * [[rankByBucket]] turns per-bucket counts into cumulative offsets and
+    * the rank is `offset + row_number` under a window PARTITIONED by
+    * bucket. No operator sees more than one bucket's rows in one
+    * partition, and the quantile cuts keep a skewed column's buckets
+    * balanced (fixed-width value ranges put ~every row of a
+    * pareto-tailed column below the first width cut). All ranks ride one
+    * frame: chained per-bucket windows, no join back on any key.
+    * Boundaries affect only bucket BALANCE, never a rank: an empty sample
+    * degrades to one bucket, still exact ranks.
     *
-    * Appends `__rank` (global 1-based) and `__n` (total row count).
-    * `orderCol` must be numeric and NON-NULL — a null would land in the
-    * last value bucket (bucket math yields null, `least` ignores it)
-    * while NULLS FIRST ordering expects it globally first, silently
-    * corrupting ranks, so nulls fail fast with `raise_error` instead.
-    * `tiebreaks` must make the total order unique for `__rank` to be
-    * deterministic (D9). Fixed-width buckets keep the pass count at two;
-    * a skewed `orderCol` wants [[globalRanksSampled]] instead (same rank
-    * pass, one extra sampling aggregate). NaNs are routed EXPLICITLY to
-    * the last bucket (Spark sorts NaN greatest, so global order is
-    * preserved) — an explicit branch because under ANSI mode (the Spark 4
-    * default this repo runs) `floor(NaN).cast(LONG)` would throw, and the
-    * min/max bounds exclude NaN so one NaN row cannot poison every other
-    * row's bucket arithmetic with NaN bounds.
-    */
-  def globalRanks(df: DataFrame, orderCol: Column,
-      tiebreaks: Seq[Column], buckets: Int = 64): DataFrame = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    val ordD = orderCol.cast(DoubleType)
-    val finite = when(isnan(ordD), lit(null)).otherwise(ordD)
-    val bounds = df.agg(min(finite).as("__lo"), max(finite).as("__hi"))
-    val bucketed = df.crossJoin(broadcast(bounds))
-      .withColumn("__bucket",
-        when(orderCol.isNull,
-          raise_error(lit("globalRanks: order column must be non-null")).cast(LongType))
-          .when(isnan(ordD), lit(buckets - 1L))
-          // __hi null = every non-null value was NaN (all rows took the
-          // branch above); kept as a guard so the arithmetic never sees null
-          .when(col("__hi").isNull || col("__hi") === col("__lo"), lit(0L))
-          .otherwise(
-            least(lit(buckets - 1L),
-              floor((ordD - col("__lo")) * buckets /
-                (col("__hi") - col("__lo"))).cast(LongType))))
-      .drop("__lo", "__hi")
-    rankByBucket(bucketed, Seq("__rank" -> orderCol), tiebreaks)
-  }
-
-  /** [[globalRanks]] with SAMPLED-QUANTILE bucket boundaries, over one or
-    * more order columns at once: the variant for a skewed column, where
-    * fixed-width value ranges degrade to one hot bucket (a pareto-tailed
-    * column puts ~every row below the first width cut). Appends, per
-    * `(name, orderCol)` pair, `name` = the exact global 1-based rank over
-    * `(orderCol, tiebreaks…)`, plus `__n` (total row count). All ranks
-    * ride one frame: chained per-bucket windows, no join back on any key.
-    * Boundaries ([[sampledBuckets]]) affect only bucket BALANCE, never a
-    * rank: an empty sample degrades to one bucket, still exact ranks.
-    * Same null/NaN contract as [[globalRanks]]; `tiebreaks` must be
-    * non-empty (the sample hashes them).
+    * Order columns must be numeric and NON-NULL: a null would sort
+    * globally first under NULLS FIRST but has no bucket, so it fails
+    * fast with `raise_error` instead of corrupting ranks. NaN ranks last
+    * (Spark sorts it greatest). `tiebreaks` must be non-empty (the sample
+    * hashes them) and make the total order unique for the ranks to be
+    * deterministic (D9).
     *
     * With several order columns the bucketed frame is materialized once:
     * every column's per-bucket counts and every window of the chain read
@@ -768,15 +732,15 @@ object Graft {
     * bucket assignments. One column has one count reader and one rank
     * reader, so it stays lazy and costs no extra eager job; a caller whose
     * frame is expensive to replay materializes it itself. */
-  def globalRanksSampled(df: DataFrame, orders: Seq[(String, Column)],
+  def globalRanks(df: DataFrame, orders: Seq[(String, Column)],
       tiebreaks: Seq[Column], buckets: Int = 64, sampleOneIn: Int = 64): DataFrame = {
     val bucketed = sampledBuckets(df, orders.map(_._2), tiebreaks, buckets, sampleOneIn)
     rankByBucket(if (orders.size > 1) Ckpt(bucketed) else bucketed, orders, tiebreaks)
   }
 
-  /** The bucketing pass of [[globalRanksSampled]], exposed for balance
-    * tests: appends one order-preserving bucket column per order column
-    * (named by [[bucketCols]]). ONE deterministic hash sample (no RNG:
+  /** The bucketing pass of [[globalRanks]], exposed for balance tests:
+    * appends one order-preserving bucket column per order column (named
+    * by [[bucketCols]]). ONE deterministic hash sample (no RNG:
     * `xxhash64(tiebreaks…) % sampleOneIn`, so re-runs and resizes see the
     * same rows, and every order column is cut from the same rows) is
     * unpivoted to (column id, value). An exact cumulative count over each
@@ -790,8 +754,8 @@ object Graft {
     * monotone, so bucket order never contradicts the column's order. */
   private[graft] def sampledBuckets(df: DataFrame, orderCols: Seq[Column],
       tiebreaks: Seq[Column], buckets: Int, sampleOneIn: Int): DataFrame = {
-    require(orderCols.nonEmpty, "globalRanksSampled needs at least one order column")
-    require(tiebreaks.nonEmpty, "globalRanksSampled hashes its sample on the tiebreaks; pass one")
+    require(orderCols.nonEmpty, "globalRanks needs at least one order column")
+    require(tiebreaks.nonEmpty, "globalRanks hashes its sample on the tiebreaks; pass one")
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(sampleOneIn > 0, s"sampleOneIn must be positive, got $sampleOneIn")
     val ordDs = orderCols.map(_.cast(DoubleType))
@@ -835,7 +799,7 @@ object Graft {
       .foldLeft(df.crossJoin(broadcast(bounds))) { case (acc, (((o, d), b), bk)) =>
         acc.withColumn(bk,
           when(o.isNull,
-            raise_error(lit("globalRanksSampled: order column must be non-null")).cast(LongType))
+            raise_error(lit("globalRanks: order column must be non-null")).cast(LongType))
             // count_leq would count NaN below every boundary; Spark sorts
             // NaN greatest, so it goes to the last bucket
             .when(isnan(d), lit(buckets - 1L))
@@ -843,15 +807,13 @@ object Graft {
       }.drop(bnd: _*)
   }
 
-  /** Bucket column names for `n` order columns; one column keeps the
-    * `__bucket` name [[globalRanks]] assigns. */
-  private def bucketCols(n: Int): Seq[String] =
-    if (n == 1) Seq("__bucket") else (0 until n).map(i => s"__bk$i")
+  /** Bucket column names for `n` order columns: `__bk0` … `__bk<n-1>`. */
+  private def bucketCols(n: Int): Seq[String] = (0 until n).map(i => s"__bk$i")
 
-  /** Shared second pass of [[globalRanks]]/[[globalRanksSampled]]: exact
-    * global ranks from ORDER-PRESERVING bucket columns (named by
-    * [[bucketCols]]), one per-bucket `row_number` window per order column,
-    * chained on the bucketed frame. */
+  /** The rank pass of [[globalRanks]]: exact global ranks from the
+    * ORDER-PRESERVING bucket columns [[sampledBuckets]] appends, one
+    * per-bucket `row_number` window per order column, chained on the
+    * bucketed frame. */
   private def rankByBucket(bucketed: DataFrame, orders: Seq[(String, Column)],
       tiebreaks: Seq[Column]): DataFrame = {
     val bks = bucketCols(orders.size)

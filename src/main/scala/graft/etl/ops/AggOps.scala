@@ -427,8 +427,7 @@ object AggOps {
         "ORDER BY l_orderkey, l_linenumber, measure"))
 
   /** Equal-width histogram with DATA-DRIVEN bounds: pass 1 computes global
-    * [min, max] (one tiny aggregate, broadcast back — the same two-pass
-    * shape as [[graft.api.Graft.globalRanks]]); pass 2 buckets every row
+    * [min, max] (one tiny aggregate, broadcast back); pass 2 buckets every row
     * with INTEGER-ONLY math in exact cents (the fixture money doubles carry
     * ≤2 decimals, so `DECIMAL(12,2)*100 → BIGINT` is exact), because both
     * engines' integer division truncates identically while their
@@ -1422,7 +1421,7 @@ object AggOps {
     * Segment = the concatenated digit triple.
     *
     * Scale: the three ranks are one
-    * [[graft.api.Graft.globalRanksSampled]] call over the three metrics:
+    * [[graft.api.Graft.globalRanks]] call over the three metrics:
     * one hash sample, one boundary row, three chained per-bucket windows
     * on the customer frame, no join back on the customer key and no
     * single-partition window over data. */
@@ -1445,7 +1444,7 @@ object AggOps {
         "r_score" -> col("recency_days") * -1,
         "f_score" -> col("frequency"),
         "m_score" -> col("monetary"))
-      val ranked = graft.api.Graft.globalRanksSampled(cust, scores, Seq(col("o_custkey")))
+      val ranked = graft.api.Graft.globalRanks(cust, scores, Seq(col("o_custkey")))
       scores.foldLeft(ranked) { case (df, (s, _)) =>
         df.withColumn(s, expr(s"($s - 1) * 5 div __n") + 1L)
       }.select(col("o_custkey"), col("recency_days"), col("frequency"),

@@ -894,7 +894,7 @@ object LlmOps {
   /** Vocabulary construction (unigrams + bigrams): frequency-ranked term →
     * id assignment, the first step of tokenizer training. Term ids are a
     * GLOBAL rank by (count desc, term asc) — one order column through
-    * [[graft.api.Graft.globalRanksSampled]], NOT an unpartitioned
+    * [[graft.api.Graft.globalRanks]], NOT an unpartitioned
     * `row_number` window: term frequencies are zipf-skewed, which is
     * exactly the distribution where fixed-width value buckets collapse to
     * one hot bucket, so the rank uses sampled-quantile boundaries (the
@@ -920,10 +920,10 @@ object LlmOps {
       // only runtime ReusedExchange collapses. The materialized frame is
       // (term, cnt) — VOCAB-scale, bounded by the distinct-term count,
       // never the corpus — so this is the qagg_mad treatment at the safe
-      // altitude (a one-column globalRanksSampled materializes nothing of
+      // altitude (a one-column globalRanks materializes nothing of
       // its caller's frame).
       val counts = Ckpt(uni.unionByName(bi).groupBy(col("term")).agg(count(lit(1)).as("cnt")))
-      graft.api.Graft.globalRanksSampled(counts, Seq("vocab_id" -> -col("cnt")),
+      graft.api.Graft.globalRanks(counts, Seq("vocab_id" -> -col("cnt")),
           Seq(col("term")), buckets = 32, sampleOneIn = 8)
         .select(col("vocab_id"), col("term"), col("cnt"))
         .orderBy(col("vocab_id"))
@@ -1986,7 +1986,7 @@ object LlmOps {
     * slopes ≈ −1; template/boilerplate corpora flatten or step). Term
     * frequencies are EXACT (keyed count), and the frequency rank is the
     * EXACT global rank by (freq desc, term asc), one order column
-    * through [[graft.api.Graft.globalRanksSampled]] — the same rank
+    * through [[graft.api.Graft.globalRanks]] — the same rank
     * `qllm_vocab` runs on the same frame — NOT an unpartitioned
     * `row_number` window: a Heaps-law vocabulary at corpus scale (10⁸⁺
     * terms, hapax-heavy) would funnel through ONE partition's sort, and
@@ -2011,7 +2011,7 @@ object LlmOps {
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      val ranked = graft.api.Graft.globalRanksSampled(freq, Seq("rank" -> -col("freq")),
+      val ranked = graft.api.Graft.globalRanks(freq, Seq("rank" -> -col("freq")),
         Seq(col("w")), buckets = 32, sampleOneIn = 8)
       val lx = round(log(col("rank").cast(DoubleType)), 6).cast(DecimalType(18, 6))
       val ly = round(log(col("freq").cast(DoubleType)), 6).cast(DecimalType(18, 6))

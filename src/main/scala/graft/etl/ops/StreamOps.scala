@@ -315,8 +315,9 @@ object StreamOps {
     * IEEE-division rate.
     *
     * Scale: the naive form is a running max over the GLOBAL arrival order
-    * — a single-partition window sort, the round-2 scale-killer. Here the
-    * prefix-max is two-pass (the globalRanks shape): arrival time buckets
+    * — a single-partition window sort, one task for the whole stream. Here
+    * the prefix-max is two-pass (per-bucket offsets, as in
+    * [[graft.api.Graft.globalRanks]]): arrival time buckets
     * to 6 h ranges (order-preserving by construction), per-bucket event-
     * time maxima form a metadata-scale frame whose EXCLUSIVE prefix max
     * comes from a triangular self-join; within-bucket exclusive running

@@ -42,7 +42,7 @@ object WindowOps {
           (col("cum") - col("cnt") + 1).cast(IntegerType).as("rnk"), col("drnk"))
       val tw = Window.partitionBy(col("o_orderpriority"), col("o_totalprice"))
         .orderBy(asc("o_orderkey"))
-      // Three measured rejections at sf30 (round 12), do not retry:
+      // Three shapes measured slower at sf30, do not retry:
       // (1) SHUFFLE_HASH on the census side removed the SMJ's fact-side
       // sort and its 3.4 GB spill but cost MORE CPU overall (262 → 350 s
       // in the doubled stage) — the tie window's own sort had been
@@ -108,7 +108,7 @@ object WindowOps {
   private val qwinRunning = QueryDef(
     "qwin_running",
     build = (spark, sfDir) => {
-      // The qwin_gapfill prefix shape (round 12): ONE exchange total.
+      // The qwin_gapfill prefix shape: ONE exchange total.
       // RangePartitioning(o_custkey) clusters the window (so its
       // (custkey, date, orderkey) sort is local) and is an ordering
       // PREFIX of the closing (custkey, orderkey) sort, which therefore
@@ -147,16 +147,15 @@ object WindowOps {
   /** Deliberately NOT the raw-row window the oracle runs: Spark's sliding
     * frame cannot retract, so every lower-bound advance rebuilds the
     * aggregate from the whole frame — O(rows × frame) per partition, and
-    * with ~5 event types the partitions are 1/5 of ALL events. The sf30
-    * materializing bench caught one such task at 55+ CPU-minutes
-    * (6 M rows × ~1 M-row avg frame; invisible under `.count()`, which
-    * prunes the window — PERF.md round 10). `n_in_range` is a pure
-    * function of (type, VALUE), so it comes from
+    * with ~5 event types the partitions are 1/5 of ALL events: at sf30
+    * one such task runs 55+ CPU-minutes (6 M rows × ~1 M-row avg frame;
+    * invisible under `.count()`, which prunes the window). `n_in_range`
+    * is a pure function of (type, VALUE), so it comes from
     * [[graft.api.Graft.rangeCountPreceding]]'s census algebra —
-    * F(v) − F(<v−100) off ONE retraction-free running sum (round 11: the
-    * round-10 census rewrite still ran Spark's sliding RANGE frame over
-    * the census, an O(census × frame) CONSTANT ~65 s once the 0.01 value
-    * grid saturates at sf ≥ 1; the running-sum form is census-linear).
+    * F(v) − F(<v−100) off ONE retraction-free running sum, linear in the
+    * census (a sliding RANGE frame over the census would still be
+    * O(census × frame), a constant ~65 s once the 0.01 value grid
+    * saturates at sf ≥ 1).
     * Boundary arithmetic and ordering are the identical IEEE doubles the
     * raw-row window compares, so results stay bit-identical to the
     * oracle (EdgeCaseSpec pins equality, null peers included). */
@@ -185,9 +184,9 @@ object WindowOps {
     * across engines given the same unique ordering; no rounding needed.
     *
     * Deliberately NOT `Window.orderBy` with no partition (that funnels
-    * every row through one partition's sort — the round-2 scale-killer):
-    * [[graft.api.Graft.globalRanks]] computes the exact global rank in
-    * two passes (value-range bucketing + broadcast cumulative offsets),
+    * every row through one partition's sort, one task for the whole
+    * table): [[graft.api.Graft.globalRanks]] computes the exact global
+    * rank from sampled-quantile buckets + broadcast cumulative offsets,
     * and ntile/percent_rank/cume_dist over a UNIQUE ordering are pure
     * functions of (rank, n): ntile via integer sizing, pr = (r-1)/(n-1),
     * cd = r/n — single integer-ratio double divisions, so the values are
@@ -198,7 +197,7 @@ object WindowOps {
     build = (spark, sfDir) => {
       val ranked = graft.api.Graft.globalRanks(
         Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_acctbal")),
-        col("c_acctbal"), Seq(col("c_custkey")), buckets = 64)
+        Seq("__rank" -> col("c_acctbal")), Seq(col("c_custkey")))
       ranked.select(
         col("c_custkey"), col("c_acctbal"),
         graft.api.Graft.ntileFromRank(col("__rank"), col("__n"), 4).as("quartile"),
@@ -279,7 +278,7 @@ object WindowOps {
       // its own gap segment [h, next_h) via lead + sequence-explode, so
       // the dense grid never exists as a join input and the forward fill
       // is the segment's own value — no grid⋈hourly join and no
-      // last-ignoreNulls window over the filled rows (PERF.md round 12).
+      // last-ignoreNulls window over the filled rows.
       // The one exchange is repartitionByRange(user): RangePartitioning
       // (user) clusters both the hourly aggregate and the lead window
       // (ordering ⊆ clustering), and is a PREFIX of the final (user, hs)
@@ -294,7 +293,7 @@ object WindowOps {
       // span in hours vs their event count), and the closing local sort
       // holds a whole task's grid in memory. So the budget here is a
       // spillable sort's, not a hash state's: ~250 k events ≈ 2.5 M grid
-      // rows a task keeps the sort in memory (PERF.md round 12).
+      // rows a task keeps the sort in memory.
       val nparts = TableStats.sizedPartitions(spark,
         TableStats.rows(spark, Tables.path(sfDir, "events")),
         rowsPerTask = 250000L, margin = 1.25)
@@ -708,26 +707,26 @@ object WindowOps {
 
   /** Pareto / revenue-concentration curve ("do 20% of customers carry
     * 80% of revenue?"): customers ranked by revenue desc via the
-    * BUCKETED two-pass global rank ([[graft.api.Graft.globalRanks]] —
-    * never a single-partition window over all customers), cut into
+    * sampled-quantile BUCKETED global rank ([[graft.api.Graft.globalRanks]]
+    * — never a single-partition window over all customers), cut into
     * rank-deciles, each decile reporting its customer count, exact
     * decimal revenue, and share of total. The share is ONE IEEE division
     * of exactly-representable decimal totals (scale-4 integers < 2⁵³).
     * The concentration diagnostic behind every mix/budget decision —
-    * same two-pass shape at 100 TB, ~|customers|/bucket per partition. */
+    * same shape at 100 TB, ~|customers|/bucket per partition. */
   private val qwinPareto = QueryDef(
     "qwin_pareto",
     build = (spark, sfDir) => {
       // the per-customer frame is consumed FOUR times (globalRanks'
-      // bounds pass + its rank pass + the grand total + the decile join
-      // input), and each consumption would re-run the fact aggregate
+      // sample + boundary pass, its per-bucket count pass and its rank
+      // pass, and the grand total), and each would re-run the fact aggregate
       // (three final-aggregate stages off one shuffle); the frame is 10×
       // smaller than its input, so materializing it is the cheap side
       val rev = Ckpt(Tables.orders(spark, sfDir)
         .groupBy(col("o_custkey"))
         .agg(sum(d124(col("o_totalprice"))).cast(DecimalType(38, 4)).as("rev")))
       val ranked = graft.api.Graft.globalRanks(
-        rev, col("rev") * lit(-1), Seq(col("o_custkey")))
+        rev, Seq("__rank" -> col("rev") * lit(-1)), Seq(col("o_custkey")))
       val tot = rev.agg(sum(col("rev")).cast(DecimalType(38, 4)).as("tot"))
       ranked
         .withColumn("decile", expr("(__rank - 1) * 10 div __n"))
@@ -807,14 +806,15 @@ object WindowOps {
     * DECIMAL(38,4)/int128 on both engines — cast once to double
     * (VARCHAR-routed in DuckDB) into one fixed-shape expression.
     *
-    * Scale: [[graft.api.Graft.globalRanks]]' two-pass bucketed rank (no
-    * single-partition sort) + one global partial+final aggregate. */
+    * Scale: [[graft.api.Graft.globalRanks]]' sampled-quantile bucketed
+    * rank (no single-partition sort) + one global partial+final aggregate. */
   private val qwinGini = QueryDef(
     "qwin_gini",
     build = (spark, sfDir) => {
       val p = Tables.part(spark, sfDir)
         .select(col("p_partkey"), d124(col("p_retailprice")).as("price"))
-      val ranked = graft.api.Graft.globalRanks(p, col("price"), Seq(col("p_partkey")))
+      val ranked = graft.api.Graft.globalRanks(p, Seq("__rank" -> col("price")),
+        Seq(col("p_partkey")))
       val s = ranked.agg(
         count(lit(1)).as("n_parts"),
         sum(col("price")).cast(DecimalType(38, 4)).as("__sx"),
@@ -1172,7 +1172,7 @@ object WindowOps {
     * differing current value would put ±Infinity in the z column, whose
     * formatting/serialization is the one piece of this tree that is NOT
     * cross-engine pinned — and a z-score against zero variance is
-    * meaningless anyway; round-8 advice item).
+    * meaningless anyway).
     *
     * Scale: one keyed sorted window over the high-cardinality user
     * key; output is outliers only — sparse however big the stream. */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /** Native Catalyst expression counting the elements of a double array
   * that are <= a probe value: the boundary-array bucket assignment of
-  * [[graft.api.Graft.globalRanksSampled]] (`size(filter(bnd, b -> b <= v))`),
+  * [[graft.api.Graft.globalRanks]] (`size(filter(bnd, b -> b <= v))`),
   * compiled. The higher-order `filter` lambda evaluates INTERPRETED, one
   * closure dispatch per array element per row (PERF.md, "qagg_rfm's
   * bucket assignment was interpreted").

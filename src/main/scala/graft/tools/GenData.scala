@@ -48,7 +48,7 @@ object GenData {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val out = args.lift(1).getOrElse(s"/tmp/graft_sf$sf")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
+      .master(s"local[${graft.GraftSession.cpus}]")
       .appName("graft-gendata")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.session.timeZone", "UTC")

@@ -198,7 +198,8 @@ class ApiSpec extends SparkFixture {
     import sp.implicits._
     // duplicate order values force the tiebreak; 103 % 4 != 0 exercises sizing
     val df = (0 until 103).map(i => ((i * 37 % 50).toDouble, i.toLong)).toDF("v", "id")
-    val ranked = Graft.globalRanks(df, col("v"), Seq(col("id")), buckets = 7)
+    val ranked = Graft.globalRanks(df, Seq("__rank" -> col("v")), Seq(col("id")),
+        buckets = 7, sampleOneIn = 4)
       .withColumn("q", Graft.ntileFromRank(col("__rank"), col("__n"), 4))
       .collect().map(r => (r.getAs[Double]("v"), r.getAs[Long]("id"),
         r.getAs[Long]("__rank"), r.getAs[Long]("__n"), r.getAs[Int]("q")))
@@ -248,10 +249,15 @@ class ApiSpec extends SparkFixture {
     import sp.implicits._
     val df = Seq((1.0, 1L), (Double.NaN, 2L), (5.0, 3L), (Double.NaN, 4L), (2.0, 5L))
       .toDF("v", "id")
-    val ranks = Graft.globalRanks(df, col("v"), Seq(col("id")), 4)
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("__rank")).toMap
+    def ranks(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      Graft.globalRanks(d, Seq("__rank" -> col("v")), Seq(col("id")), 4, sampleOneIn = 1)
+        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("__rank")).toMap
     // sort order: 1.0, 2.0, 5.0, NaN(id 2), NaN(id 4) — NaN greatest, ties by id
-    assert(ranks == Map(1L -> 1L, 5L -> 2L, 3L -> 3L, 2L -> 4L, 4L -> 5L))
+    assert(ranks(df) == Map(1L -> 1L, 5L -> 2L, 3L -> 3L, 2L -> 4L, 4L -> 5L))
+    // all NaN: the sample keeps no value, so no boundary; every row takes
+    // the NaN bucket and the tiebreak alone orders them
+    val allNaN = (1L to 4L).map(i => (Double.NaN, i)).toDF("v", "id")
+    assert(ranks(allNaN) == (1L to 4L).map(i => i -> i).toMap)
   }
 
   test("dedupClusters fails loudly when maxIter exhausts before the fixed point") {

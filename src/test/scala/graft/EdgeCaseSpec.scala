@@ -99,10 +99,11 @@ class EdgeCaseSpec extends SparkFixture {
       assert(ex.getMessage.contains("non-null") ||
         Option(ex.getCause).exists(_.getMessage.contains("non-null")), ex.getMessage)
     }
-    refused(Graft.globalRanks(withNull, col("v"), Seq(col("k")), buckets = 4).collect())
-    // the sampled rank over several metrics: the null one fails, not just
-    // the first; the sample (one in one) sees every row
-    refused(Graft.globalRanksSampled(withNull, Seq("rk" -> col("k"), "rv" -> col("v")),
+    refused(Graft.globalRanks(withNull, Seq("rv" -> col("v")), Seq(col("k")),
+      buckets = 4, sampleOneIn = 1).collect())
+    // several metrics: the null one fails, not just the first; the sample
+    // (one in one) sees every row
+    refused(Graft.globalRanks(withNull, Seq("rk" -> col("k"), "rv" -> col("v")),
       Seq(col("k")), buckets = 4, sampleOneIn = 1).collect())
   }
 

@@ -399,11 +399,11 @@ class PlanSpec extends SparkFixture {
       "qllm_pmi", "qllm_semdedup",
       // funnel: three 1-row step-count frames into the summary row
       "qagg_funnel",
-      // pareto: globalRanks' 1-row bounds frame + the 1-row revenue total
+      // pareto: the sampled boundary row + the 1-row revenue total
       "qwin_pareto",
       // round 8: 1-row scalar frames again — distinct-user total (assoc),
       // order total (benford), max order date + sampled rank boundaries
-      // (rfm), globalRanks' 1-row bounds frame (gini)
+      // (rfm), the sampled boundary row (gini)
       "qagg_assoc", "qagg_benford", "qagg_rfm", "qwin_gini",
       // round 8b: 1-row scalar frames — (N, n_types, n_dows) contingency
       // totals (cramersv); the max-week scalar (churn)
@@ -411,7 +411,7 @@ class PlanSpec extends SparkFixture {
       // round 9: srp_topk carries the same ≤planes-row broadcast
       // hyperplane frame as srp_lsh/hardneg
       "qllm_srp_topk",
-      // round 11: zipf ranks via globalRanksSampled — its ≤buckets-row
+      // round 11: zipf ranks via globalRanks — its ≤buckets-row
       // broadcast boundary array is the same 1-row-class frame as vocab's;
       // dqaudit cross-joins its two 1-row distinct-count frames back into
       // the 1-row conditional-count frame (the Expand-×3 fix)
@@ -537,7 +537,7 @@ class PlanSpec extends SparkFixture {
   }
 
   test("qagg_rfm: fused ranks — three bucket-partitioned windows, no customer-key join") {
-    // round 9 fused the three globalRanksSampled passes (3 sample
+    // round 9 fused the three sampled rank passes (3 sample
     // subtrees + 3 join-backs on o_custkey) into one boundary pass and
     // three CHAINED per-bucket windows; this pins the fusion so a future
     // edit can't quietly reintroduce the 3-join shape (5.5 s of fixed
@@ -854,7 +854,7 @@ class PlanSpec extends SparkFixture {
   }
 
   test("qllm_vocab: zero unpartitioned windows; the sample scan is constant-bucketed") {
-    // globalRanksSampled runs ONE deliberately single-partition cumulative
+    // globalRanks runs ONE deliberately single-partition cumulative
     // window — over the hash-sample's DISTINCT values (≤ |sample|, the
     // same budget class as the triangular offsets join), never over the
     // vocabulary itself. The per-bucket rank window must stay partitioned.
@@ -868,14 +868,14 @@ class PlanSpec extends SparkFixture {
       }
       // the sample-cum window is single-partition BY DESIGN (its input is
       // the hash-sample's distinct values, metadata-scale) but declares a
-      // constant-valued partition key (xxhash64 & 0 — non-foldable, so
+      // partition key (the column id out of the explode — non-foldable, so
       // EliminateWindowPartitions can't strip it), so zero windows are
       // UNpartitioned — the WindowExec warning stays reserved for real
       // mistakes
       val global = windows.filter(_.partitionSpec.isEmpty)
       assert(global.isEmpty, s"unpartitioned window leaked:\n${global.mkString("\n")}")
       assert(windows.exists(
-        _.partitionSpec.flatMap(_.references).exists(_.name == "__bucket")),
+        _.partitionSpec.flatMap(_.references).exists(_.name == "__bk0")),
         "per-bucket rank window missing")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }

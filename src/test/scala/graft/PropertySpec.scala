@@ -217,8 +217,9 @@ class PropertySpec extends SparkFixture {
 
   test("globalRanks equals the single-partition global window on random data") {
     // duplicate order values + negative doubles + tiny/large bucket counts:
-    // the two-pass rank must reproduce Window.orderBy's row_number exactly;
-    // the sampled rank does so for two order columns in one call
+    // the rank must reproduce Window.orderBy's row_number exactly, for one
+    // order column (the lazy bucketed frame) and for two in one call (the
+    // materialized one)
     val rowsGen = Gen.listOfN(60, Gen.chooseNum(-100, 100))
     samples(Gen.zip(rowsGen, Gen.chooseNum(1, 16)), 6).foreach { case (xs, buckets) =>
       val sp = spark
@@ -233,17 +234,18 @@ class PropertySpec extends SparkFixture {
       }
       def ranks(ranked: org.apache.spark.sql.DataFrame, c: String): Map[Long, Long] =
         ranked.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long](c))).toMap
-      val twoPass = Graft.globalRanks(df, col("v"), Seq(col("id")), buckets)
-      assert(ranks(twoPass, "__rank") == reference("v"), s"buckets=$buckets xs=$xs")
-      val sampled = Graft.globalRanksSampled(df, Seq("rv" -> col("v"), "ru" -> col("u")),
+      val one = Graft.globalRanks(df, Seq("__rank" -> col("v")), Seq(col("id")),
+        buckets, sampleOneIn = 2)
+      assert(ranks(one, "__rank") == reference("v"), s"buckets=$buckets xs=$xs")
+      val two = Graft.globalRanks(df, Seq("rv" -> col("v"), "ru" -> col("u")),
         Seq(col("id")), buckets, sampleOneIn = 2)
-      assert(ranks(sampled, "rv") == reference("v"), s"sampled v: buckets=$buckets xs=$xs")
-      assert(ranks(sampled, "ru") == reference("u"), s"sampled u: buckets=$buckets xs=$xs")
-      assert(sampled.select("__n").distinct().collect().map(_.getLong(0)).toSeq == Seq(60L))
+      assert(ranks(two, "rv") == reference("v"), s"two-column v: buckets=$buckets xs=$xs")
+      assert(ranks(two, "ru") == reference("u"), s"two-column u: buckets=$buckets xs=$xs")
+      assert(two.select("__n").distinct().collect().map(_.getLong(0)).toSeq == Seq(60L))
     }
   }
 
-  test("globalRanksSampled: exact ranks AND balanced buckets on a pareto-skewed column") {
+  test("globalRanks: exact ranks AND balanced buckets on a pareto-skewed column") {
     val sp = spark
     import sp.implicits._
     // deterministic pareto-tailed values: u ~ LCG uniform in (0,1),
@@ -258,18 +260,19 @@ class PropertySpec extends SparkFixture {
     val buckets = 32
 
     // correctness: sampled boundaries must not change a single rank
-    val fixed = Graft.globalRanks(df, col("v"), Seq(col("id")), buckets)
+    val reference = df.withColumn("__rank",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("id"))))
       .select(col("id"), col("__rank"))
-    val sampled = Graft.globalRanksSampled(df, Seq("__rank_s" -> col("v")), Seq(col("id")),
+    val sampled = Graft.globalRanks(df, Seq("__rank_s" -> col("v")), Seq(col("id")),
       buckets, sampleOneIn = 4)
       .select(col("id"), col("__rank_s"))
-    assert(fixed.join(sampled, "id")
+    assert(reference.join(sampled, "id")
       .filter(col("__rank") =!= col("__rank_s")).count() == 0,
-      "sampled-boundary ranks diverge from fixed-width ranks")
+      "sampled-boundary ranks diverge from the single-partition row_number")
 
     // balance: no sampled bucket exceeds 2× the mean occupancy...
     val occ = Graft.sampledBuckets(df, Seq(col("v")), Seq(col("id")), buckets, 4)
-      .groupBy(col("__bucket")).count().collect().map(_.getLong(1))
+      .groupBy(col("__bk0")).count().collect().map(_.getLong(1))
     val mean = n.toDouble / buckets
     assert(occ.max <= 2 * mean,
       s"sampled buckets unbalanced: max=${occ.max}, mean=$mean, occ=${occ.toSeq.sorted}")
